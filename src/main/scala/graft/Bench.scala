@@ -438,12 +438,23 @@ object Bench {
   private[graft] def jsonNum(v: Double): String =
     if (java.lang.Double.isFinite(v)) v.toString else "-1.0"
 
+  /** JSON string literal: `"`, `\` and control characters escaped,
+    * so a query name or path carrying one cannot break the line.
+    */
+  private[graft] def jsonStr(s: String): String =
+    s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    }.mkString("\"", "", "\"")
+
   private[graft] def jsonMap(m: Seq[(String, Double)]): String =
-    m.map { case (k, v) => "\"" + k + "\":" + jsonNum(v) }
+    m.map { case (k, v) => jsonStr(k) + ":" + jsonNum(v) }
       .mkString("{", ",", "}")
 
   private[graft] def jsonArr(xs: Seq[String]): String =
-    xs.map("\"" + _ + "\"").mkString("[", ",", "]")
+    xs.map(jsonStr).mkString("[", ",", "]")
 
   /** The ONE-LINE artifact, assembled purely so BenchGateSpec can
     * round-trip a full-sized (181-query) line through a strict JSON
@@ -463,7 +474,7 @@ object Bench {
       coldCpu: Seq[(String, Double)], contended: Boolean): String =
     s"""{"metric":"total","value":${jsonNum(total)},"unit":"sec",""" +
       s""""queries":${jsonMap(queries)},"failed":${jsonArr(failed)},""" +
-      s""""sf":"$sfDir","runs_per_query":$runs,""" +
+      s""""sf":${jsonStr(sfDir)},"runs_per_query":$runs,""" +
       s""""loadavg_start":${jsonNum(loadStart)},"loadavg_end":${jsonNum(loadEnd)},""" +
       s""""steal_pct":${jsonNum(math.rint(stealPct * 100) / 100)},""" +
       s""""ledger_queries":$ledgerQueries,""" +
@@ -472,7 +483,7 @@ object Bench {
       s""""cpu_median_ledger_ratio":${jsonNum(math.rint(cpuMedianRatio * 1000) / 1000)},""" +
       s""""retried":${jsonArr(retried)},"suspect":${jsonArr(suspect)},""" +
       s""""watch":${jsonArr(watch)},"family_watch":${jsonArr(familyWatch)},""" +
-      s""""epoch_verdict":"$epochVerdict","bracket":$bracketJson,""" +
+      s""""epoch_verdict":${jsonStr(epochVerdict)},"bracket":$bracketJson,""" +
       s""""cold":${jsonMap(cold)},"cold_watch":${jsonArr(coldWatch)},""" +
       s""""cpu":${jsonMap(cpu)},"cold_cpu":${jsonMap(coldCpu)},""" +
       s""""contended":$contended}"""

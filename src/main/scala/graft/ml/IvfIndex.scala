@@ -216,6 +216,10 @@ object IvfIndex {
     */
   def search(index: Index, queries: DataFrame, nProbe: Int = 4,
       topK: Int = 3, topAvgK: Int = 0, withVec: Boolean = false): DataFrame = {
+    // the fused topavg window reads the uncut ranking; it equals the
+    // average over the emitted top-topK rows (the exact truth leg's
+    // basis) only while topAvgK <= topK
+    require(topAvgK <= topK, s"topAvgK ($topAvgK) must not exceed topK ($topK)")
     val probeW = Window.partitionBy("query_id")
       .orderBy(col("cdist").asc, col("list_id"))
     val probed = queries.crossJoin(broadcast(index.centroids))

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Snapshot-versioned parquet store — reproducible dataset versions for
@@ -39,36 +39,33 @@ object VersionedStore {
 
   private def fsOf(p: Path): FileSystem = p.getFileSystem(hadoopConf)
 
-  /** Highest published version, or None for an empty store.
-    *
-    * Bounded retry on read errors: on checksummed local filesystems
-    * the marker rename is TWO renames (data file, then its .crc
-    * sidecar — ChecksumFileSystem semantics), so a reader can open a
-    * freshly-renamed marker against the old sidecar and fail the
-    * checksum. That tear is transient by construction — a rival's
-    * rename completes in microseconds — so a few spaced retries
-    * separate it from genuine corruption, which keeps throwing.
+  /** The filesystem the marker is written and read through: the RAW
+    * filesystem under a checksummed one (Hadoop's local `file:`).
+    * There a rename is TWO renames — the data file, then its `.crc`
+    * sidecar — so two racing publishers could interleave them and
+    * leave one writer's marker paired with the other's sidecar: a
+    * `ChecksumException` on every read until the next publish
+    * rewrote the marker, which no read retry can heal. A marker
+    * without a sidecar is replaced by one atomic rename.
     */
+  private def markerFs(root: String): FileSystem = fsOf(marker(root)) match {
+    case c: ChecksumFileSystem => c.getRawFileSystem
+    case fs => fs
+  }
+
+  /** Highest published version, or None for an empty store. */
   def latestVersion(root: String): Option[Long] = {
     val m = marker(root)
-    val fs = fsOf(m)
-    var attempt = 0
-    while (true) {
+    val fs = markerFs(root)
+    if (!fs.exists(m)) None
+    else {
+      val in = fs.open(m)
       try {
-        if (!fs.exists(m)) return None
-        val in = fs.open(m)
-        try {
-          val out = new java.io.ByteArrayOutputStream()
-          org.apache.hadoop.io.IOUtils.copyBytes(in, out, 4096, false)
-          return Some(new String(out.toByteArray, "UTF-8").trim.toLong)
-        } finally in.close()
-      } catch {
-        case _: java.io.IOException if attempt < 5 =>
-          attempt += 1
-          Thread.sleep(20L * attempt)
-      }
+        val out = new java.io.ByteArrayOutputStream()
+        org.apache.hadoop.io.IOUtils.copyBytes(in, out, 4096, false)
+        Some(new String(out.toByteArray, "UTF-8").trim.toLong)
+      } finally in.close()
     }
-    None // unreachable
   }
 
   /** ONE shared parse for both version namespaces (round-15 review:
@@ -183,9 +180,9 @@ object VersionedStore {
     * `v=N` directories and claims (orphan recovery — see object doc)
     * and CLAIMED atomically before any data is written (see
     * [[claimVersion]]). The marker is written to a temp file then
-    * renamed with `FileContext.rename(OVERWRITE)`, which is atomic on
-    * HDFS and POSIX-local filesystems: a concurrent reader sees either
-    * the old or the new version, never a torn marker.
+    * renamed over the old one in one atomic step on HDFS and local
+    * filesystems (see publishMarker): a concurrent reader sees either
+    * the old or the new version, never a torn or missing marker.
     */
   def publish(df: DataFrame, root: String): Long = {
     val next = nextVersion(root)
@@ -313,14 +310,21 @@ object VersionedStore {
     // offers CAS (see setConditionalCreate — same contract note).
     if (latestVersion(root).exists(_ > next)) return
     val m = marker(root)
-    val fs = fsOf(m)
-    val fc = FileContext.getFileContext(fs.getUri, hadoopConf)
+    val fs = markerFs(root)
     def rename(): Unit = {
       val tmp = new Path(root, s"_latest.tmp.$next")
       val out = fs.create(tmp, true)
       try out.write(next.toString.getBytes("UTF-8")) finally out.close()
-      fc.rename(fs.makeQualified(tmp), fs.makeQualified(m),
-        Options.Rename.OVERWRITE)
+      val (src, dst) = (fs.makeQualified(tmp), fs.makeQualified(m))
+      // local files: one rename(2), atomic replace. FileContext's
+      // OVERWRITE on the local scheme is delete-then-rename (a window
+      // where the marker is missing); on HDFS it is one atomic op.
+      if (dst.toUri.getScheme == "file")
+        java.nio.file.Files.move(java.nio.file.Paths.get(src.toUri),
+          java.nio.file.Paths.get(dst.toUri),
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      else FileContext.getFileContext(fs.getUri, hadoopConf)
+        .rename(src, dst, Options.Rename.OVERWRITE)
     }
     rename()
     var heals = 0

@@ -243,7 +243,10 @@ object DedupStream {
           .withColumn("text", col("clean_text"))
           .select("doc_id", "text", "lang")
       }
-    val batchDocs = gated.persist()
+    // lineage-cut rule: every batch frame that more than one query
+    // reads is [[pin]]ned and released in the finally that closes
+    // its scope — never persisted (see pin for why)
+    val batchDocs = pin(gated)
     try {
       val batchIds = batchDocs.select("doc_id")
       // replay safety: a re-run batch subtracts itself from history
@@ -267,9 +270,8 @@ object DedupStream {
       val histDf = readOrEmpty(spark, s"$storeRoot/df", dfSchema)
         .filter(col("batch") =!= batchId)
         .groupBy("h").agg(sum(col("cnt")).as("df"))
-      val sh = ExtensionQueries.docShingles(batchDocs, persistShared = false)
-        .persist()
-      val batchBands = ExtensionQueries.bandsOf(sh).persist()
+      val sh = pin(ExtensionQueries.docShingles(batchDocs, persistShared = false))
+      val batchBands = pin(ExtensionQueries.bandsOf(sh))
       try {
         val (drops, dupTagged, cand) = dropsOf(sh, batchBands, histBands,
           histDocs, histShpost, histDocn, histDf)
@@ -308,20 +310,22 @@ object DedupStream {
           // Contaminated docs leave NO trace in the artifacts, like
           // dup losers: the published corpus is what later batches
           // dedup against, and a contaminated doc must not become
-          // anyone's canonical. Gate-branch persists: the dedup
+          // anyone's canonical. The gate branch follows the batch's
+          // lineage-cut rule (see [[pin]]): a batch frame that more
+          // than one query reads is pinned, never persisted. The dedup
           // anti-join feeds both the 8-gram projection and the final
           // anti-join's left side, and contaminationWithBloom scans
-          // sh8 twice (totals + bloom hits) — unpersisted, the
-          // expensive shingle projection and the drops join would
-          // re-plan per consumer in the hot ingest loop.
-          var gateCaches: Seq[DataFrame] = Nil
+          // sh8 twice (totals + bloom hits) — unpinned, the expensive
+          // shingle projection and the drops join would re-run per
+          // consumer in the hot ingest loop.
+          var gatePins: Seq[DataFrame] = Nil
           val contamSurvivors = gate match {
             case None => dedupSurvivors
             case Some(g) =>
-              val ds = dedupSurvivors.persist()
-              val sh8 = ExtensionQueries.docShingles(
-                ds, 8, persistShared = false).persist()
-              gateCaches = Seq(ds, sh8)
+              val ds = pin(dedupSurvivors)
+              val sh8 = pin(ExtensionQueries.docShingles(
+                ds, 8, persistShared = false))
+              gatePins = Seq(ds, sh8)
               val flagged = ExtensionQueries
                 .contaminationWithBloom(sh8, g.ev, g.bloom, g.threshold)
                 .filter(col("flagged"))
@@ -333,16 +337,16 @@ object DedupStream {
           // feature pass, the model is PINNED (no per-batch retrain —
           // QualityGate doc), and verdicts are doc-intrinsic against
           // the pinned LM so arrival slicing can't change them.
-          val survivors = (quality match {
+          val survivors = pin(quality match {
             case None => contamSurvivors
             case Some(qg) =>
-              val cs = contamSurvivors.persist()
-              gateCaches = cs +: gateCaches
+              val cs = pin(contamSurvivors)
+              gatePins = cs +: gatePins
               val bad = graft.ml.QualityModel
                 .scoreWithLm(qg.model, qg.lm, cs)
                 .filter(!col("keep")).select("doc_id")
               cs.join(bad, Seq("doc_id"), "left_anti")
-          }).persist()
+          })
           try {
             batchBands
               .join(survivors.select("doc_id"), Seq("doc_id"), "left_semi")
@@ -367,15 +371,14 @@ object DedupStream {
             }
             // the containment channel's three survivor-only slices:
             // hashed shingle posting, stable per-doc shingle counts,
-            // and this batch's df contribution. Persisted once, three
+            // and this batch's df contribution. Pinned once, three
             // projections (per-doc shingles are already distinct, so
             // the df count IS docs-containing). Idempotent like the
             // band slice: a replay overwrites batch=N with identical
             // content.
-            val survHash = sh
+            val survHash = pin(sh
               .join(survivors.select("doc_id"), Seq("doc_id"), "left_semi")
-              .select(col("doc_id"), xxhash64(col("shingle")).as("h"))
-              .persist()
+              .select(col("doc_id"), xxhash64(col("shingle")).as("h")))
             try {
               survHash.select("h", "doc_id").write.mode(SaveMode.Overwrite)
                 .parquet(s"$storeRoot/shpost/batch=$batchId")
@@ -385,7 +388,7 @@ object DedupStream {
               survHash.groupBy("h").agg(count(lit(1)).as("cnt"))
                 .write.mode(SaveMode.Overwrite)
                 .parquet(s"$storeRoot/df/batch=$batchId")
-            } finally survHash.unpersist()
+            } finally unpin(survHash)
             // LEXICAL channel — streaming maintenance of the
             // ml/Bm25Index artifact (the x52 incremental-idf
             // precedent applied to retrieval): each batch publishes
@@ -399,9 +402,8 @@ object DedupStream {
             // Replay-safe like every slice: recomputed content is
             // identical and overwrites batch=N verbatim.
             if (lexIndex) {
-              val lexTf = ReferenceQueries.docTokens(survivors, persist = false)
-                .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-                .persist()
+              val lexTf = pin(ReferenceQueries.docTokens(survivors, persist = false)
+                .groupBy("doc_id", "token").agg(count(lit(1)).as("tf")))
               try {
                 val lexDl = lexTf.groupBy("doc_id")
                   .agg(sum(col("tf")).as("dl"))
@@ -417,7 +419,7 @@ object DedupStream {
                     sum(col("dl")).as("sum_dl")))
                   .write.mode(SaveMode.Overwrite)
                   .parquet(s"$storeRoot/lexconsts/batch=$batchId")
-              } finally lexTf.unpersist()
+              } finally unpin(lexTf)
             }
             survivors.write.mode(SaveMode.Overwrite)
               .parquet(s"$storeRoot/docs/batch=$batchId")
@@ -450,8 +452,8 @@ object DedupStream {
             val histOwn = readOrEmpty(spark, s"$storeRoot/segown", segownSchema)
               .join(broadcast(batchIds.withColumnRenamed("doc_id", "owner")),
                 Seq("owner"), "left_anti")
-            val seg = ExtensionQueries.segmentsOf(survivors)
-              .withColumn("h", xxhash64(col("seg"))).persist()
+            val seg = pin(ExtensionQueries.segmentsOf(survivors)
+              .withColumn("h", xxhash64(col("seg"))))
             try {
               val batchOwn = seg.groupBy("h").agg(min(col("doc_id")).as("owner"))
               batchOwn.join(histOwn.select("h"), Seq("h"), "left_anti")
@@ -466,18 +468,43 @@ object DedupStream {
               ExtensionQueries.reassembleKept(tagged)
                 .write.mode(SaveMode.Overwrite)
                 .parquet(s"$storeRoot/cleandocs/batch=$batchId")
-            } finally seg.unpersist()
+            } finally unpin(seg)
             val vecs = ReferenceQueries
               .docVectorsByLang(survivors, wordvecsLang, dim)
               .select("doc_id", "lang", "known_ratio", "vec")
             VectorizeStream.upsertStore(spark, vecs, s"$storeRoot/vectors")
           } finally {
-            survivors.unpersist()
-            gateCaches.foreach(_.unpersist(false))
+            unpin(survivors)
+            gatePins.foreach(unpin)
           }
-        } finally cand.unpersist()
-      } finally { batchBands.unpersist(); sh.unpersist() }
-    } finally batchDocs.unpersist()
+        } finally unpin(cand)
+      } finally { unpin(batchBands); unpin(sh) }
+    } finally unpin(batchDocs)
+  }
+
+  /** Lineage cut for a frame that lives only inside one micro-batch:
+    * an eager `localCheckpoint`, so every downstream query plans
+    * against a `LogicalRDD` leaf. `persist()` would keep the full
+    * plan under an `InMemoryRelation`, and a cached plan prints its
+    * cached plans (AQE's final and initial plan each) — with the
+    * batch's frames built on one another, every query description
+    * repeated all the earlier ones, and Spark rebuilt that string at
+    * each execution start and AQE re-plan. Executor-local storage is
+    * enough here: a lost block fails the batch loudly, the stream
+    * replays it from its checkpointed offsets, and every slice write
+    * is an idempotent `batch=N` overwrite — the exactly-once argument
+    * of the object doc, so `Caches.iterCheckpoint`'s reliable mode is
+    * not needed.
+    * Release with [[unpin]] (`unpersist` is a silent no-op on a
+    * checkpoint); a pin that fails mid-batch leaves the earlier pins
+    * to the ContextCleaner, since the batch fails and replays anyway.
+    */
+  private def pin(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
+
+  /** Release a [[pin]]ned frame's blocks; the frame is unusable after. */
+  private[graft] def unpin(df: DataFrame): Unit = {
+    org.apache.spark.sql.graftshim.CheckpointShim.releaseCheckpoint(df)
+    ()
   }
 
   /** The per-batch dedup core — split out so the spec can pin both
@@ -528,8 +555,9 @@ object DedupStream {
     * hard mode materializes the drops, soft mode the pairs. The
     * tagged candidate frame is scanned three times (historical-id
     * semi-join, pair verification, drop/pair attribution), so it is
-    * persisted here and MUST be unpersisted by the caller — same
-    * contract as [[graft.Pipeline.dupEdgesOf]].
+    * [[pin]]ned here behind a lineage cut and MUST be released by the
+    * caller through [[unpin]] once the drops and pairs are consumed —
+    * `cand.unpersist()` is a silent no-op on a checkpoint.
     */
   private[graft] def dropsOf(batchSh: DataFrame, batchBands: DataFrame,
       histBands: DataFrame, histDocs: DataFrame, histShpost: DataFrame,
@@ -578,10 +606,9 @@ object DedupStream {
       .select(least(col("b"), col("hd")).as("d1"),
         greatest(col("b"), col("hd")).as("d2"),
         col("b").as("drop_id"), col("hd").as("hist_id"))
-    val tagged = bandTagged.unionByName(withinTagged)
+    val tagged = pin(bandTagged.unionByName(withinTagged)
       .unionByName(vsHistTagged)
-      .distinct()
-      .persist()
+      .distinct())
     // exact verify needs shingles for both sides: the batch's are
     // already in hand; history's are re-shingled for ONLY the
     // candidate docs — a left-semi join against the candidate hist-id

@@ -435,4 +435,24 @@ class BenchGateSpec extends AnyFunSuite {
     assert(root.get("bracket").get("watch").get("x003_q").asDouble() === 2.3)
     assert(!root.get("contended").asBoolean())
   }
+
+  test("keys and strings carrying quotes, backslashes or newlines round-trip") {
+    val key = "x\"q\\uote\nd"
+    val line = Bench.artifactLine(
+      total = 1.0, queries = Seq(key -> 0.5, "plain" -> 0.25),
+      failed = Seq(key), sfDir = "C:\\data\\\"sf\"", runs = 1,
+      loadStart = 0.0, loadEnd = 0.0, stealPct = 0.0, ledgerQueries = 0,
+      medianRatio = 1.0, p90Ratio = 1.0, cpuMedianRatio = 1.0,
+      retried = Nil, suspect = Nil, watch = Nil, familyWatch = Nil,
+      epochVerdict = "none", bracketJson = "{}", cold = Nil,
+      coldWatch = Nil, cpu = Seq(key -> 1.5), coldCpu = Nil,
+      contended = false)
+    assert(line.linesIterator.size == 1, "artifact must be ONE line")
+    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(root.get("queries").get(key).asDouble() === 0.5)
+    assert(root.get("queries").get("plain").asDouble() === 0.25)
+    assert(root.get("failed").get(0).asText() === key)
+    assert(root.get("cpu").get(key).asDouble() === 1.5)
+    assert(root.get("sf").asText() === "C:\\data\\\"sf\"")
+  }
 }

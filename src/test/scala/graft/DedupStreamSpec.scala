@@ -518,7 +518,10 @@ class DedupStreamSpec extends AnyFunSuite with SparkSpec {
       assert(collide === 0L,
         "fixture broken: the excerpt band-collides, so it no longer " +
           "exercises the containment channel")
-    } finally { cand.unpersist(); bands.unpersist(); sh.unpersist() }
+    } finally {
+      // cand is a checkpoint: unpersist() would be a silent no-op
+      DedupStream.unpin(cand); bands.unpersist(); sh.unpersist()
+    }
   }
 
   test("live card answers from artifacts and reconciles with a direct recount") {

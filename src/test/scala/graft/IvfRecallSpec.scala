@@ -40,6 +40,17 @@ class IvfRecallSpec extends AnyFunSuite with SparkSpec {
     assert(recall >= 0.8, f"recall@3 too low: $recall%.2f")
   }
 
+  test("search rejects a topAvgK above topK") {
+    // the fused top-topAvgK average matches the exact truth leg's
+    // average over the emitted rows only while topAvgK <= topK
+    val none = spark.emptyDataFrame
+    val e = intercept[IllegalArgumentException] {
+      graft.ml.IvfIndex.search(graft.ml.IvfIndex.Index(none, none), none,
+        topK = 3, topAvgK = 4)
+    }
+    assert(e.getMessage.contains("topAvgK (4) must not exceed topK (3)"))
+  }
+
   test("saved artifact round-trip: the loaded index answers identically to the built one") {
     import org.apache.spark.sql.functions.col
     val root = java.nio.file.Files.createTempDirectory("graft_ivf").toString + "/ix"

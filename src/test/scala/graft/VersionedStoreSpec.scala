@@ -164,6 +164,38 @@ class VersionedStoreSpec extends AnyFunSuite with SparkSpec {
     } finally VersionedStore.setConditionalCreate(None)
   }
 
+  test("the marker has no checksum sidecar, so racing publishes never tear it") {
+    // ChecksumFileSystem renames a file and its .crc as two renames;
+    // two racing publishers could pair one's marker with the other's
+    // sidecar and every later read threw ChecksumException. The marker
+    // now lives on the raw filesystem: racing writers and a reader
+    // polling throughout must never see an error.
+    val root = java.nio.file.Files.createTempDirectory("graft_vstore_marker")
+      .toString
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val reader = Future {
+      var reads = 0
+      while (!stop.get()) { VersionedStore.latestVersion(root); reads += 1 }
+      reads
+    }
+    // a writer that loses a claim race retries above the rival's claim
+    def publish(i: Int, tag: String): Long =
+      try VersionedStore.publish(Seq((i.toLong, tag)).toDF("id", "v"), root)
+      catch { case _: java.nio.file.FileAlreadyExistsException => publish(i, tag) }
+    val writers = Seq("a", "b").map(tag => Future((1 to 4).map(publish(_, tag))))
+    val published = try writers.flatMap(w => Await.result(w, 120.seconds))
+      finally stop.set(true)
+    assert(Await.result(reader, 60.seconds) > 0)
+    assert(published.distinct.size === 8, s"versions reused: $published")
+    assert(VersionedStore.latestVersion(root).exists(published.contains))
+    val names = new java.io.File(root).list().toSeq
+    assert(!names.exists(n => n.startsWith("._latest") || n.startsWith("_latest.tmp")),
+      s"marker left a sidecar or temp file: $names")
+  }
+
   test("fileFingerprint: nested-subdirectory changes alter the identity") {
     val dir = java.nio.file.Files.createTempDirectory("graft_fp").toString
     // a partitioned table shape: files inside nested subdirectories
