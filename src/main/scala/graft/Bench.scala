@@ -315,7 +315,7 @@ object Bench {
       // docTokens posting it warms; x02 builds the MinHash band frame
       // (sharedBands) on top of x04's shingle posting; x29 runs the
       // dup-closure loop to convergence and memoizes the labels
-      // (closureMemo); x82 fits+caches the quality-model feature frame
+      // (the "closure" memo); x82 fits+caches the quality-model feature frame
       // on the already-warm docTokens; x144 builds the session-shared
       // all-pairs bitext margin truth frame (independent of x145's ANN
       // artifact — the exact leg shares nothing with the index).
@@ -541,9 +541,9 @@ object Bench {
     // regression; (b) a throwing probe publishes NEGATIVE seconds
     // (the warm pass's failed convention), never a plausible-looking
     // time for a query that didn't run.
-    graft.ml.Bm25Index.artifactKinds.foreach { kind =>
+    graft.sources.VersionedStore.artifactKinds.foreach { kind =>
       val p = new org.apache.hadoop.fs.Path(
-        graft.ml.Bm25Index.artifactRoot(kind, sfDir))
+        graft.sources.VersionedStore.artifactRoot(kind, sfDir))
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
       ()
     }

@@ -459,7 +459,7 @@ object Pipeline {
           contamSurv = contamBase.persist()
           val contamCount = contamSurv.count()
           // blocking key = the memoized IVF coarse quantizer (built
-          // once per session and dataset; cachedCount pins it), pairs
+          // once per session and dataset; Caches.memoized pins it), pairs
           // restricted to docs still in the corpus so a twin whose
           // other half was already gated out never drops the survivor
           val idx = graft.ml.IvfIndex.build(spark, sfDir, semanticK)

@@ -191,9 +191,9 @@ object ScaleBlowup {
     */
   private[graft] def measure(spark: SparkSession,
       dir: String): (Seq[(String, Double)], Seq[(String, Double)]) = {
-    graft.ml.Bm25Index.artifactKinds.foreach { kind =>
+    graft.sources.VersionedStore.artifactKinds.foreach { kind =>
       val p = new org.apache.hadoop.fs.Path(
-        graft.ml.Bm25Index.artifactRoot(kind, dir))
+        graft.sources.VersionedStore.artifactRoot(kind, dir))
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
       ()
     }

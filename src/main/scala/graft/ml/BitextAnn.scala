@@ -1,7 +1,5 @@
 package graft.ml
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -58,8 +56,6 @@ object BitextAnn {
   final case class Sides(en: IvfIndex.Index, x: IvfIndex.Index,
       xLang: DataFrame)
 
-  private val published = new ConcurrentHashMap[(Int, String), Sides]()
-
   /** Side-sized list count: k ≈ √N (the IvfIndex 100 TB contract),
     * floored so tiny fixtures still quantize, capped so the bounded
     * k·256 training sample and the driver-side Lloyd's stay O(MB).
@@ -78,59 +74,47 @@ object BitextAnn {
     * language split), so regenerating either republishes the pair.
     */
   def loadOrPublish(spark: SparkSession, sfDir: String): Sides =
-    published.computeIfAbsent((System.identityHashCode(spark), sfDir), _ => {
-      import spark.implicits._
-      val root = Bm25Index.artifactRoot("bitext", sfDir)
-      val want = graft.Tables.fileFingerprint(spark, sfDir, "embeddings") +
-        ":" + graft.Tables.fileFingerprint(spark, sfDir, "documents")
-      val fresh =
-        try graft.sources.VersionedStore.latestVersion(root).exists(
-          graft.sources.VersionedStore.metaMatches(spark, root, _, want))
-        catch { case _: Exception => false }
-      if (!fresh) {
-        graft.sources.VersionedStore.publishOrAdopt(root,
-          graft.sources.VersionedStore.metaMatches(spark, root, _, want)) {
-          val docs = graft.Tables.documents(spark, sfDir)
-            .select(col("doc_id").as("vec_id"), col("lang"))
-          val e = graft.Tables.embeddings(spark, sfDir)
-            .join(docs, Seq("vec_id"))
-            .select(col("vec_id"), col("lang"),
-              graft.functions.VecMath.asDouble(col("embedding")).as("v"))
-          val pe = e.filter(col("lang") === "en").select("vec_id", "v")
-          val px = e.filter(col("lang") =!= "en")
-          val nE = pe.count()
-          val nX = px.count()
-          require(nE > 0 && nX > 0,
-            s"bitext mining needs both pools non-empty: en=$nE other=$nX")
-          // unpersist in finally (the WhitenedIvf lost-race rule): on
-          // an adopted publish — or a buildFrom that throws after the
-          // FIRST index persisted its assigned frame — nothing built
-          // here may stay cached for the session lifetime, so the try
-          // wraps BOTH builds, not just publishAll
-          var ixE: IvfIndex.Index = null
-          var ixX: IvfIndex.Index = null
-          try {
-            ixE = IvfIndex.buildFrom(spark, pe, listsFor(nE))
-            ixX = IvfIndex.buildFrom(spark, px.select("vec_id", "v"),
-              listsFor(nX))
-            graft.sources.VersionedStore.publishAll(
-              Map(
-                "en_assigned" -> ixE.assigned,
-                "en_centroids" -> ixE.centroids,
-                "x_assigned" -> ixX.assigned,
-                "x_centroids" -> ixX.centroids,
-                "x_lang" -> px.select("vec_id", "lang"),
-                "meta" -> Seq(want).toDF("fingerprint")),
-              root)
-          } finally {
-            if (ixE != null) ixE.assigned.unpersist(true)
-            if (ixX != null) ixX.assigned.unpersist(true)
-          }
+    graft.sources.VersionedStore.loadOrPublish(spark, "bitext", sfDir,
+      graft.Tables.fileFingerprint(spark, sfDir, "embeddings") + ":" +
+        graft.Tables.fileFingerprint(spark, sfDir, "documents")) {
+      (root, meta) =>
+        val docs = graft.Tables.documents(spark, sfDir)
+          .select(col("doc_id").as("vec_id"), col("lang"))
+        val e = graft.Tables.embeddings(spark, sfDir)
+          .join(docs, Seq("vec_id"))
+          .select(col("vec_id"), col("lang"),
+            graft.functions.VecMath.asDouble(col("embedding")).as("v"))
+        val pe = e.filter(col("lang") === "en").select("vec_id", "v")
+        val px = e.filter(col("lang") =!= "en")
+        val nE = pe.count()
+        val nX = px.count()
+        require(nE > 0 && nX > 0,
+          s"bitext mining needs both pools non-empty: en=$nE other=$nX")
+        // unpersist in finally (the WhitenedIvf lost-race rule): on
+        // an adopted publish — or a buildFrom that throws after the
+        // FIRST index persisted its assigned frame — nothing built
+        // here may stay cached for the session lifetime, so the try
+        // wraps BOTH builds, not just publishAll
+        var ixE: IvfIndex.Index = null
+        var ixX: IvfIndex.Index = null
+        try {
+          ixE = IvfIndex.buildFrom(spark, pe, listsFor(nE))
+          ixX = IvfIndex.buildFrom(spark, px.select("vec_id", "v"),
+            listsFor(nX))
+          graft.sources.VersionedStore.publishAll(
+            Map(
+              "en_assigned" -> ixE.assigned,
+              "en_centroids" -> ixE.centroids,
+              "x_assigned" -> ixX.assigned,
+              "x_centroids" -> ixX.centroids,
+              "x_lang" -> px.select("vec_id", "lang"),
+              "meta" -> meta),
+            root)
+        } finally {
+          if (ixE != null) ixE.assigned.unpersist(true)
+          if (ixX != null) ixX.assigned.unpersist(true)
         }
-        ()
-      }
-      load(spark, root)
-    })
+    }(load(spark, _))
 
   /** Load a published pair (latest snapshot): no k-means, no corpus
     * scan — a fresh session mines immediately. Assigned frames persist
@@ -148,13 +132,5 @@ object BitextAnn {
       IvfIndex.Index(graft.Caches.persist(t("x_assigned")),
         t("x_centroids")),
       t("x_lang"))
-  }
-
-  /** Drop the per-dataset memo (Caches.clear wiring). */
-  def clear(sfDir: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (sfDir == null) published.clear()
-    else published.keySet().asScala.filter(_._2 == sfDir).toList
-      .foreach(published.remove)
   }
 }

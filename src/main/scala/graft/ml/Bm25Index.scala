@@ -1,8 +1,6 @@
 package graft.ml
 
-import java.util.concurrent.ConcurrentHashMap
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The persisted lexical-retrieval artifact — the inverted index that
@@ -70,13 +68,18 @@ object Bm25Index {
     def byDoc: DataFrame = forward.getOrElse(posting)
   }
 
-  private val cache = new ConcurrentHashMap[(Int, String), Index]()
-  private val published = new ConcurrentHashMap[(Int, String), Index]()
-  private val publishedOf = new ConcurrentHashMap[(Int, String, String), Index]()
-
   /** Cross-engine deterministic rounding (ReferenceQueries.round). */
-  private def round6(c: org.apache.spark.sql.Column) =
+  private def round6(c: Column) =
     floor(c * 1e6 + lit(0.5)) / 1e6
+
+  /** One posting row's BM25 contribution, over a row carrying the
+    * posting's (tf, dl), the term's df and the corpus consts (n, avgdl).
+    */
+  private val termScore: Column =
+    log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1.0) *
+      (col("tf") * lit(K1 + 1)) /
+      (col("tf") + lit(K1) *
+        (lit(1 - B) + lit(B) * col("dl") / col("avgdl")))
 
   /** Build the index frames from a (doc_id, text) corpus. The ONE
     * corpus-linear tokenize+agg pass a deployment pays at build time;
@@ -109,7 +112,7 @@ object Bm25Index {
     * repeated searches (and both bench passes) pay the tokenize once.
     */
   def build(spark: SparkSession, sfDir: String): Index =
-    cache.computeIfAbsent((System.identityHashCode(spark), sfDir), _ => {
+    graft.Caches.memo(spark, "bm25", sfDir) {
       // persistShared: the corpus (doc_id, token) projection is THE
       // session-shared working set (SCALE.md §caches) — the build
       // rides the same materialization x91/x09/x52 read
@@ -117,44 +120,28 @@ object Bm25Index {
         persistShared = true)
       Index(graft.Caches.persist(ix.posting), graft.Caches.persist(ix.df),
         ix.consts)
-    })
+    }(_ => ())
 
-  /** Publish the triple as one atomic versioned snapshot. The posting
-    * goes out clustered by token (see object doc) so a loaded scan
-    * prunes to the query's terms via row-group stats; the SAME rows go
-    * out a second time clustered by doc_id as the `forward` projection
-    * (see [[Index.forward]]) so a by-doc fetch — PRF's feedback-term
-    * read — prunes to its doc ids instead of scanning the posting
-    * linearly. Second sort order, same bytes; the Lucene
-    * stored-fields/postings split.
+  /** Publish the triple as one atomic versioned snapshot, plus any
+    * `extras` tables (the published-artifact path adds its `meta`
+    * fingerprint). The posting goes out clustered by token (see object
+    * doc) so a loaded scan prunes to the query's terms via row-group
+    * stats; the SAME rows go out a second time clustered by doc_id as
+    * the `forward` projection (see [[Index.forward]]) so a by-doc fetch
+    * — PRF's feedback-term read — prunes to its doc ids instead of
+    * scanning the posting linearly. Second sort order, same bytes; the
+    * Lucene stored-fields/postings split.
     */
-  def saveIndex(spark: SparkSession, ix: Index, root: String): Long =
+  def saveIndex(spark: SparkSession, ix: Index, root: String,
+      extras: Map[String, DataFrame] = Map.empty): Long =
     graft.sources.VersionedStore.publishAll(
       Map(
         "posting" -> ix.posting.repartition(col("token"))
           .sortWithinPartitions("token"),
         "forward" -> forwardOf(ix.posting),
         "df" -> ix.df,
-        "consts" -> ix.consts),
+        "consts" -> ix.consts) ++ extras,
       root)
-
-  /** [[saveIndex]] plus a `meta` table carrying the source table's
-    * filesystem fingerprint — what [[loadOrPublish]] validates.
-    */
-  def save(spark: SparkSession, sfDir: String, root: String): Long = {
-    import spark.implicits._
-    val ix = build(spark, sfDir)
-    graft.sources.VersionedStore.publishAll(
-      Map(
-        "posting" -> ix.posting.repartition(col("token"))
-          .sortWithinPartitions("token"),
-        "forward" -> forwardOf(ix.posting),
-        "df" -> ix.df,
-        "consts" -> ix.consts,
-        "meta" -> Seq(graft.Tables.fileFingerprint(spark, sfDir, "documents"))
-          .toDF("fingerprint")),
-      root)
-  }
 
   /** Load a published index (latest snapshot, or a pinned `version`).
     * No tokenize, no corpus scan — a fresh session searches
@@ -175,32 +162,15 @@ object Bm25Index {
         .readTable(spark, root, v, "forward")).toOption)
   }
 
-  /** The session's published-artifact path for a dataset: publish once
-    * per (session, dataset) under the JVM temp root, then serve the
-    * LOADED index — the deployment shape (x96/x97 ride this). A
-    * pre-existing snapshot is reused only when its `meta` fingerprint
-    * still matches the source table's filesystem identity (size +
-    * mtime, metadata-only) — a stale artifact over regenerated data
-    * republishes instead of silently answering from the old corpus
-    * (round-11 review). Any load/validate failure also republishes.
+  /** The session's published-artifact path for a dataset: publish the
+    * session build ([[build]]) once under the JVM temp root, then serve
+    * the LOADED index — the deployment shape (x96/x97 ride this).
+    * Freshness is [[graft.sources.VersionedStore.loadOrPublish]]'s:
+    * the artifact is reused only while its `meta` fingerprint matches
+    * the documents table's filesystem identity.
     */
   def loadOrPublish(spark: SparkSession, sfDir: String): Index =
-    published.computeIfAbsent((System.identityHashCode(spark), sfDir), _ => {
-      val root = artifactRoot("bm25", sfDir)
-      val want = graft.Tables.fileFingerprint(spark, sfDir, "documents")
-      val fresh =
-        try graft.sources.VersionedStore.latestVersion(root).exists(
-          graft.sources.VersionedStore.metaMatches(spark, root, _, want))
-        catch { case _: Exception => false }
-      if (!fresh)
-        // adoption re-verifies the rival snapshot against OUR source
-        // fingerprint — a rival built from different source state is
-        // never silently served (round-12 advice)
-        graft.sources.VersionedStore.publishOrAdopt(root,
-          graft.sources.VersionedStore.metaMatches(spark, root, _, want))(
-          save(spark, sfDir, root))
-      load(spark, root)
-    })
+    served(spark, sfDir, "bm25")(build(spark, sfDir))
 
   /** [[loadOrPublish]] for a DERIVED corpus — e.g. x123's passages as
     * pseudo-docs — under its own artifact `kind`: the caller supplies
@@ -214,55 +184,22 @@ object Bm25Index {
     */
   def loadOrPublishOf(spark: SparkSession, sfDir: String, kind: String,
       docs: => DataFrame): Index =
-    publishedOf.computeIfAbsent(
-      (System.identityHashCode(spark), sfDir, kind), _ => {
-        import spark.implicits._
-        val root = artifactRoot(kind, sfDir)
-        val want = graft.Tables.fileFingerprint(spark, sfDir, "documents")
-        val fresh =
-          try graft.sources.VersionedStore.latestVersion(root).exists(
-            graft.sources.VersionedStore.metaMatches(spark, root, _, want))
-          catch { case _: Exception => false }
-        if (!fresh) {
-          graft.sources.VersionedStore.publishOrAdopt(root,
-            graft.sources.VersionedStore.metaMatches(spark, root, _, want)) {
-            val ix = buildOf(docs)
-            graft.sources.VersionedStore.publishAll(
-              Map(
-                "posting" -> ix.posting.repartition(col("token"))
-                  .sortWithinPartitions("token"),
-                "forward" -> forwardOf(ix.posting),
-                "df" -> ix.df,
-                "consts" -> ix.consts,
-                "meta" -> Seq(want).toDF("fingerprint")),
-              root)
-          }
-          ()
-        }
-        load(spark, root)
-      })
+    served(spark, sfDir, kind)(buildOf(docs))
 
-  /** Every per-dataset artifact kind the harnesses must delete for a
-    * deterministic cold probe (Bench and ScaleBlowup share this ONE
-    * list — a kind added to only one harness would measure a warm
-    * artifact as cold in the other).
-    */
-  private[graft] val artifactKinds: Seq[String] =
-    Seq("bm25", "ivfpq", "bm25p", "whiten", "whivf", "bitext")
+  private def served(spark: SparkSession, sfDir: String, kind: String)(
+      ix: => Index): Index =
+    graft.sources.VersionedStore.loadOrPublish(spark, kind, sfDir,
+      graft.Tables.fileFingerprint(spark, sfDir, "documents"))(
+      (root, meta) => saveIndex(spark, ix, root, Map("meta" -> meta)))(
+      load(spark, _))
 
   /** The doc_id-clustered forward projection of a posting frame — ONE
-    * definition for every publisher (saveIndex / save /
-    * loadOrPublishOf / the Pipeline snapshot), so the forward layout
-    * can never drift between artifacts by publisher.
+    * definition for every publisher ([[saveIndex]] and the Pipeline
+    * snapshot), so the forward layout can never drift between
+    * artifacts by publisher.
     */
   private[graft] def forwardOf(posting: DataFrame): DataFrame =
     posting.repartition(col("doc_id")).sortWithinPartitions("doc_id")
-
-  /** Canonical per-dataset artifact root under the JVM temp dir. */
-  private[graft] def artifactRoot(kind: String, sfDir: String): String = {
-    val key = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"${sys.props("java.io.tmpdir")}/graft-artifacts/$kind/$key"
-  }
 
   /** Search an index: the posting fetch is the term filter (pushed to
     * the scan on a loaded artifact), df rides as a term-count-sized
@@ -308,11 +245,7 @@ object Bm25Index {
       consts: DataFrame, topK: Int): DataFrame =
     qpost.join(broadcast(qdf), Seq("token"))
       .crossJoin(broadcast(consts))
-      .withColumn("term_score",
-        log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1.0) *
-          (col("tf") * lit(K1 + 1)) /
-          (col("tf") + lit(K1) *
-            (lit(1 - B) + lit(B) * col("dl") / col("avgdl"))))
+      .withColumn("term_score", termScore)
       .groupBy("doc_id").agg(round6(sum(col("term_score"))).as("score"),
         count(lit(1)).as("n_terms"))
       .orderBy(col("score").desc, col("doc_id"))
@@ -340,11 +273,7 @@ object Bm25Index {
       .partitionBy("query_id").orderBy(col("score").desc, col("doc_id"))
     qpost.join(broadcast(qdf), Seq("token"))
       .crossJoin(broadcast(ix.consts))
-      .withColumn("term_score",
-        log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1.0) *
-          (col("tf") * lit(K1 + 1)) /
-          (col("tf") + lit(K1) *
-            (lit(1 - B) + lit(B) * col("dl") / col("avgdl"))))
+      .withColumn("term_score", termScore)
       .groupBy("query_id", "doc_id")
       .agg(round6(sum(col("term_score"))).as("score"),
         count(lit(1)).as("n_terms"))
@@ -391,26 +320,9 @@ object Bm25Index {
     Index(posting, df, consts)
   }
 
-  /** Drop memoized indexes (frames persist through Caches, which owns
-    * their release).
+  /** Drop the memoized builds and published-artifact handles (frames
+    * persist through Caches, which owns their release).
     */
-  def clear(): Unit = {
-    cache.clear(); published.clear(); publishedOf.clear()
-  }
-
-  /** Drop only the indexes memoized for one dataset — wired into
-    * [[graft.Caches.clear]] so a cache eviction can't leave a memo
-    * serving unpersisted frames (which would silently revert every
-    * BM25 query to a per-query corpus tokenize for the session —
-    * round-11 review finding).
-    */
-  def clear(sfDir: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    cache.keySet().asScala.filter(_._2 == sfDir).toList
-      .foreach(cache.remove)
-    published.keySet().asScala.filter(_._2 == sfDir).toList
-      .foreach(published.remove)
-    publishedOf.keySet().asScala.filter(_._2 == sfDir).toList
-      .foreach(publishedOf.remove)
-  }
+  def clear(): Unit =
+    graft.Caches.clearKinds("bm25", "bm25-artifact", "bm25p-artifact")
 }

@@ -1,7 +1,5 @@
 package graft.ml
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -20,7 +18,8 @@ import graft.functions.VecMath
   * probe many" — and the built index is memoized per (session, sfDir,
   * k), so repeated searches (and both bench iterations) pay the build
   * exactly once. One index per dataset lives for the session, like the
-  * shared posting table (SCALE.md §caches); `clear()` drops them.
+  * shared posting table (SCALE.md §caches); `Caches.clear(sfDir)`
+  * drops it and unpersists its assignments.
   *
   * The quantizer is trained with local Lloyd's iterations on a BOUNDED
   * deterministic sample (k·256 vectors, FAISS-style: at 10^9 corpus
@@ -44,12 +43,10 @@ object IvfIndex {
     */
   final case class Index(assigned: DataFrame, centroids: DataFrame)
 
-  private val cache = new ConcurrentHashMap[(Int, String, Int), Index]()
-
-  def build(spark: SparkSession, sfDir: String, k: Int = 16): Index = {
-    val key = (System.identityHashCode(spark), sfDir, k)
-    cache.computeIfAbsent(key, _ => buildIndex(spark, embFrame(spark, sfDir), k))
-  }
+  def build(spark: SparkSession, sfDir: String, k: Int = 16): Index =
+    graft.Caches.memo(spark, "ivf", sfDir, k)(
+      buildIndex(spark, embFrame(spark, sfDir), k))(
+      _.assigned.unpersist(blocking = true))
 
   /** Build over an EXPLICIT (vec_id, v) frame — the space-agnostic
     * entry the stream-maintained index rides (a DedupStream store's
@@ -107,8 +104,8 @@ object IvfIndex {
     * `version`). The assignments are persisted through
     * [[graft.Caches]] — keyed by the artifact root, so
     * `Caches.clear(root)` releases a loaded index the same way
-    * `clear(sfDir)` drops a built one. No k-means, no corpus scan: a
-    * fresh session probes immediately.
+    * `Caches.clear(sfDir)` drops a built one. No k-means, no corpus
+    * scan: a fresh session probes immediately.
     */
   def load(spark: SparkSession, root: String, version: Option[Long] = None): Index = {
     val v = version.orElse(graft.sources.VersionedStore.latestVersion(root))
@@ -119,31 +116,7 @@ object IvfIndex {
   }
 
   /** Drop all built indexes (frees the persisted assignment frames). */
-  def clear(): Unit = {
-    cache.values().forEach(ix => { ix.assigned.unpersist(); () })
-    cache.clear()
-  }
-
-  /** How many distinct indexes are memoized for a dataset — the
-    * build-once pin for consumers that must not rebuild the quantizer
-    * per run (PipelineSpec's semantic-dedup case asserts 1 after two
-    * runs).
-    */
-  private[graft] def cachedCount(sfDir: String): Int = {
-    import scala.jdk.CollectionConverters._
-    cache.keySet().asScala.count(_._2 == sfDir)
-  }
-
-  /** Drop only the indexes built over one dataset — the per-dataset
-    * eviction twin of [[graft.Caches.clear]].
-    */
-  def clear(sfDir: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    cache.keySet().asScala.filter(_._2 == sfDir).toList.foreach { k =>
-      val ix = cache.remove(k)
-      if (ix != null) ix.assigned.unpersist()
-    }
-  }
+  def clear(): Unit = graft.Caches.clearKinds("ivf")
 
   private def embFrame(spark: SparkSession, sfDir: String): DataFrame =
     graft.Tables.embeddings(spark, sfDir)

@@ -1,7 +1,5 @@
 package graft.ml
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -47,8 +45,6 @@ object IvfPq {
   final case class Index(coded: DataFrame, centroids: DataFrame,
       codebooks: Array[Array[Array[Double]]], m: Int, dsub: Int)
 
-  private val cache = new ConcurrentHashMap[(Int, String, Int, Int), Index]()
-
   private def embOf(spark: SparkSession, sfDir: String): DataFrame =
     graft.Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), VecMath.asDouble(col("embedding")).as("v"))
@@ -60,11 +56,10 @@ object IvfPq {
     * bench passes and repeated searches hit one materialization).
     */
   def build(spark: SparkSession, sfDir: String,
-      m: Int = 16, ksub: Int = 16): Index = {
-    val key = (System.identityHashCode(spark), sfDir, m, ksub)
-    cache.computeIfAbsent(key, _ =>
-      encodeWith(IvfIndex.build(spark, sfDir), embOf(spark, sfDir), m, ksub))
-  }
+      m: Int = 16, ksub: Int = 16): Index =
+    graft.Caches.memo(spark, "ivfpq", sfDir, m, ksub)(
+      encodeWith(IvfIndex.build(spark, sfDir), embOf(spark, sfDir), m, ksub))(
+      _ => ())
 
   /** Build over an EXPLICIT (vec_id, v) frame with its own coarse
     * quantizer — the space-agnostic entry the stream-maintained index
@@ -183,28 +178,17 @@ object IvfPq {
         "codebooks" -> PqIndex.codebooksTable(spark, ix.codebooks)) ++ extras,
       root)
 
-  private val published = new ConcurrentHashMap[(Int, String), Index]()
-
   /** The session's published-artifact index for a dataset (the
     * Bm25Index.loadOrPublish twin, same stale-fingerprint republish
     * rule): publish once per (session, dataset) under the JVM temp
     * root, then serve the LOADED index — x97's dense leg rides this.
     */
   def loadOrPublish(spark: SparkSession, sfDir: String): Index =
-    published.computeIfAbsent((System.identityHashCode(spark), sfDir), _ => {
-      val root = Bm25Index.artifactRoot("ivfpq", sfDir)
-      val want = graft.Tables.fileFingerprint(spark, sfDir, "embeddings")
-      val fresh =
-        try graft.sources.VersionedStore.latestVersion(root).exists(
-          graft.sources.VersionedStore.metaMatches(spark, root, _, want))
-        catch { case _: Exception => false }
-      if (!fresh)
-        // adoption re-verifies the rival's meta fingerprint (r12 advice)
-        graft.sources.VersionedStore.publishOrAdopt(root,
-          graft.sources.VersionedStore.metaMatches(spark, root, _, want))(
-          save(spark, sfDir, root))
-      load(spark, root)
-    })
+    graft.sources.VersionedStore.loadOrPublish(spark, "ivfpq", sfDir,
+      graft.Tables.fileFingerprint(spark, sfDir, "embeddings"))(
+      (root, meta) => saveIndexWith(spark, build(spark, sfDir),
+        Map("meta" -> meta), root))(
+      load(spark, _))
 
   /** Load a published index (latest snapshot, or a pinned `version`):
     * no k-means, no corpus scan — a fresh session probes immediately.
@@ -282,17 +266,5 @@ object IvfPq {
   }
 
   /** Drop memoized indexes (Caches holds the coded frames). */
-  def clear(): Unit = { cache.clear(); published.clear() }
-
-  /** Drop only one dataset's memoized/published-index entries — the
-    * [[graft.Caches.clear]] hook (same rationale as Bm25Index.clear:
-    * after an eviction the memo must not serve unpersisted frames).
-    */
-  def clear(sfDir: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    cache.keySet().asScala.filter(_._2 == sfDir).toList
-      .foreach(cache.remove)
-    published.keySet().asScala.filter(_._2 == sfDir).toList
-      .foreach(published.remove)
-  }
+  def clear(): Unit = graft.Caches.clearKinds("ivfpq", "ivfpq-artifact")
 }

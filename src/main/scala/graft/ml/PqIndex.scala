@@ -1,7 +1,5 @@
 package graft.ml
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -61,11 +59,8 @@ object PqIndex {
   final case class Index(codes: DataFrame, codebooks: Array[Array[Array[Double]]],
       m: Int, dsub: Int)
 
-  private val cache = new ConcurrentHashMap[(Int, String, Int, Int), Index]()
-
-  def build(spark: SparkSession, sfDir: String, m: Int = 16, ksub: Int = 16): Index = {
-    val key = (System.identityHashCode(spark), sfDir, m, ksub)
-    cache.computeIfAbsent(key, _ => {
+  def build(spark: SparkSession, sfDir: String, m: Int = 16, ksub: Int = 16): Index =
+    graft.Caches.memo(spark, "pq", sfDir, m, ksub) {
       val emb = graft.Tables.embeddings(spark, sfDir)
         .select(col("vec_id"), VecMath.asDouble(col("embedding")).as("v"))
       val codebooks = trainCodebooks(emb, "v", m, ksub)
@@ -74,8 +69,7 @@ object PqIndex {
           VecMath.l2norm(col("v")).as("vnorm"))
         .persist(StorageLevel.MEMORY_AND_DISK)
       Index(codes, codebooks, m, codebooks.head.head.length)
-    })
-  }
+    }(_.codes.unpersist(blocking = true))
 
   /** Train M per-subspace codebooks from ONE bounded deterministic
     * sample (xxhash64 order) of `vcol` — shared by the flat-PQ build
@@ -232,8 +226,5 @@ object PqIndex {
   }
 
   /** Drop all built indexes (frees the persisted code frames). */
-  def clear(): Unit = {
-    cache.values().forEach(ix => { ix.codes.unpersist(); () })
-    cache.clear()
-  }
+  def clear(): Unit = graft.Caches.clearKinds("pq")
 }

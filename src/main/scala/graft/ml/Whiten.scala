@@ -57,10 +57,6 @@ object Whiten {
       ExpressionEncoder[Seq[Double]]()
   }
 
-  private val published =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String),
-      (Array[Double], Array[Array[Double]])]()
-
   /** Fit-or-load the (μ, W) transform as a VERSIONED on-disk artifact
     * — the IvfIndex/Bm25Index contract applied to the whitening
     * matrix: a deployment must apply the SAME transform to queries at
@@ -73,35 +69,23 @@ object Whiten {
     */
   def loadOrPublish(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): (Array[Double], Array[Array[Double]]) =
-    published.computeIfAbsent(
-      (System.identityHashCode(spark), sfDir), _ => {
+    graft.sources.VersionedStore.loadOrPublish(spark, "whiten", sfDir,
+      graft.Tables.fileFingerprint(spark, sfDir, "embeddings")) {
+      (root, meta) =>
         import spark.implicits._
-        val root = Bm25Index.artifactRoot("whiten", sfDir)
-        val want = graft.Tables.fileFingerprint(spark, sfDir, "embeddings")
-        val fresh =
-          try graft.sources.VersionedStore.latestVersion(root).exists(
-            graft.sources.VersionedStore.metaMatches(spark, root, _, want))
-          catch { case _: Exception => false }
-        if (!fresh) {
-          graft.sources.VersionedStore.publishOrAdopt(root,
-            graft.sources.VersionedStore.metaMatches(spark, root, _, want)) {
-            val emb = graft.Tables.embeddings(spark, sfDir)
-            val dim = emb.select(org.apache.spark.sql.functions
-              .size(col("embedding"))).head.getInt(0)
-            val (mu, w) = fit(emb, dim)
-            graft.sources.VersionedStore.publishAll(
-              Map(
-                "mu" -> Seq((0L, mu.toSeq)).toDF("idx", "vec"),
-                "w" -> w.zipWithIndex
-                  .map { case (r, i) => (i.toLong, r.toSeq) }.toSeq
-                  .toDF("idx", "vec"),
-                "meta" -> Seq(want).toDF("fingerprint")),
-              root)
-          }
-          ()
-        }
-        load(spark, root)
-      })
+        val emb = graft.Tables.embeddings(spark, sfDir)
+        val dim = emb.select(org.apache.spark.sql.functions
+          .size(col("embedding"))).head.getInt(0)
+        val (mu, w) = fit(emb, dim)
+        graft.sources.VersionedStore.publishAll(
+          Map(
+            "mu" -> Seq((0L, mu.toSeq)).toDF("idx", "vec"),
+            "w" -> w.zipWithIndex
+              .map { case (r, i) => (i.toLong, r.toSeq) }.toSeq
+              .toDF("idx", "vec"),
+            "meta" -> meta),
+          root)
+    }(load(spark, _))
 
   /** The whitened embedding frame — (vec_id, v: array<double>), each
     * coordinate rounded to 6 dp, computed with the PUBLISHED (μ, W)
@@ -139,16 +123,6 @@ object Whiten {
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1).map(_._2)
     (mu, w)
-  }
-
-  /** Drop the per-dataset memo (Caches.clear wiring — a dataset
-    * eviction must not leave a transform memo alive).
-    */
-  def clear(sfDir: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (sfDir == null) published.clear()
-    else published.keySet().asScala.filter(_._2 == sfDir).toList
-      .foreach(published.remove)
   }
 
   /** Fit (μ, W) over `embeddings.embedding`. Eigenvalues are floored

@@ -1,7 +1,5 @@
 package graft.ml
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.SparkSession
 
 /** The composed whitened-ANN serving artifact (round-11 verdict ask
@@ -29,48 +27,22 @@ import org.apache.spark.sql.SparkSession
   */
 object WhitenedIvf {
 
-  private val published = new ConcurrentHashMap[(Int, String), IvfPq.Index]()
-
   /** Publish-or-load the whitened IVF-PQ index for a dataset — the
     * IvfPq.loadOrPublish twin, but built over [[Whiten.whitenedFrame]]
     * (which itself publishes/loads the (μ, W) artifact first, pinning
     * the composed pair to one source fingerprint).
     */
   def loadOrPublish(spark: SparkSession, sfDir: String): IvfPq.Index =
-    published.computeIfAbsent((System.identityHashCode(spark), sfDir), _ => {
-      import spark.implicits._
-      val root = Bm25Index.artifactRoot("whivf", sfDir)
-      val want = graft.Tables.fileFingerprint(spark, sfDir, "embeddings")
-      val fresh =
-        try graft.sources.VersionedStore.latestVersion(root).exists(
-          graft.sources.VersionedStore.metaMatches(spark, root, _, want))
-        catch { case _: Exception => false }
-      if (!fresh) {
-        graft.sources.VersionedStore.publishOrAdopt(root,
-          graft.sources.VersionedStore.metaMatches(spark, root, _, want)) {
-          val ix = IvfPq.buildFrom(spark,
-            Whiten.whitenedFrame(spark, sfDir), nLists = 16)
-          // unpersist in finally (round-12 advice): on a LOST publish
-          // race publishAll throws and the adopted version is served —
-          // exactly the path that would otherwise leak the built coded
-          // frame in the cache for the rest of the session
-          try graft.sources.VersionedStore.publishAll(
-            Map("coded" -> ix.coded, "centroids" -> ix.centroids,
-              "codebooks" -> PqIndex.codebooksTable(spark, ix.codebooks),
-              "meta" -> Seq(want).toDF("fingerprint")),
-            root)
-          finally ix.coded.unpersist(true)
-        }
-        ()
-      }
-      IvfPq.load(spark, root)
-    })
-
-  /** Drop the per-dataset memo (Caches.clear wiring). */
-  def clear(sfDir: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (sfDir == null) published.clear()
-    else published.keySet().asScala.filter(_._2 == sfDir).toList
-      .foreach(published.remove)
-  }
+    graft.sources.VersionedStore.loadOrPublish(spark, "whivf", sfDir,
+      graft.Tables.fileFingerprint(spark, sfDir, "embeddings")) {
+      (root, meta) =>
+        val ix = IvfPq.buildFrom(spark,
+          Whiten.whitenedFrame(spark, sfDir), nLists = 16)
+        // unpersist in finally (round-12 advice): on a LOST publish
+        // race publishAll throws and the adopted version is served —
+        // exactly the path that would otherwise leak the built coded
+        // frame in the cache for the rest of the session
+        try IvfPq.saveIndexWith(spark, ix, Map("meta" -> meta), root)
+        finally ix.coded.unpersist(true)
+    }(IvfPq.load(spark, _))
 }

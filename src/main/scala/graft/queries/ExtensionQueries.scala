@@ -877,44 +877,22 @@ object ExtensionQueries {
     * twice per session would be pure duplicated work (the IvfIndex
     * memo precedent; the encoded state is localCheckpointed, hence
     * session-lifetime like every other shared cache). Released by
-    * [[graft.Caches.clear]]/clearAll via [[clearBpe]] — the
-    * checkpointed frame has no file lineage for the path-based release
-    * to find, so the memo key IS the dataset path.
+    * [[graft.Caches.clear]]/clearAll, which runs the memo's release:
+    * `Dataset.unpersist` would be a silent NO-OP on the encoded frame
+    * — the CacheManager has no entry for a checkpoint's LogicalRDD
+    * (round-11 review) — so the release goes through CheckpointShim,
+    * which unpersists the underlying RDD; the checkpointed frame has
+    * no file lineage for the path-based release to find, so the memo
+    * key carries the dataset path.
     */
-  private val bpeMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[graft.operators.Bpe.Merge], DataFrame)]()
-
   private def corpusBpe(spark: SparkSession, sfDir: String)
       : (Seq[graft.operators.Bpe.Merge], DataFrame) =
-    bpeMemo.computeIfAbsent(sfDir, _ => {
+    graft.Caches.memo(spark, "bpe", sfDir) {
       val words = docTok(Tables.documents(spark, sfDir))
         .groupBy("token").agg(count(lit(1)).as("freq"))
       graft.operators.Bpe.train(spark, words, 20)
-    })
-
-  /** Drop the memoized corpus BPE state for `sfDir` (null = all) AND
-    * release the encoded frame's checkpoint storage explicitly —
-    * the repo's release convention (Caches.clear / IvfIndex.clear
-    * both unpersist blocking); relying on GC + ContextCleaner would
-    * leave the localCheckpoint blocks pinned indefinitely (round-10
-    * ADVICE). `Dataset.unpersist` would be a silent NO-OP here — the
-    * CacheManager has no entry for a checkpoint's LogicalRDD
-    * (round-11 review) — so the release goes through CheckpointShim,
-    * which unpersists the underlying RDD; the memo entry is removed
-    * first, so nothing can re-read the now-dead frame.
-    */
-  private[graft] def clearBpe(sfDir: String): Unit =
-    if (sfDir == null) {
-      import scala.jdk.CollectionConverters._
-      bpeMemo.keySet().asScala.toList.foreach(clearBpe)
-    } else Option(bpeMemo.remove(sfDir)).foreach { e =>
-      org.apache.spark.sql.graftshim.CheckpointShim.releaseCheckpoint(e._2)
-      ()
-    }
-
-  /** Spec hook: whether a corpus BPE memo exists for `sfDir`. */
-  private[graft] def bpeMemoized(sfDir: String): Boolean =
-    bpeMemo.containsKey(sfDir)
+    }(e => org.apache.spark.sql.graftshim.CheckpointShim
+      .releaseCheckpoint(e._2))
 
   def x79_bpe_train(spark: SparkSession, sfDir: String): DataFrame = {
     val (merges, _) = corpusBpe(spark, sfDir)
@@ -1292,42 +1270,11 @@ object ExtensionQueries {
     * consumer re-ran the whole loop per call (five queries × ~10
     * driver-blocking actions each — the guide §2.4 "remove the
     * shuffle outright" case, one level up). The memoized value is the
-    * final checkpointed label frame; the BPE-memo release convention
-    * applies ([[clearClosure]] from Caches.clear/clearAll — a
-    * checkpoint has no file lineage for the path-based release to
-    * find, so the memo key IS the dataset path). Pipeline/stream
-    * closures over run-scoped survivor frames pass no memoKey and
-    * stay exactly as before.
+    * final checkpointed label frame, memoized per (session, dataset,
+    * edge rule) through [[graft.Caches.memo]] with the BPE memo's
+    * checkpoint release. Pipeline/stream closures over run-scoped
+    * survivor frames pass no memoKey and stay exactly as before.
     */
-  // Keyed by (session identity, NORMALIZED dataset path, edge rule):
-  // the memoized frame is bound to the SparkSession that checkpointed
-  // it (a later session in the same JVM must rebuild, not read a
-  // dead-session frame), and the path is normalized the way
-  // Caches.clear matches (round-17 ADVICE: a trailing-slash or
-  // relative sfDir variant used to leak the checkpoint past release).
-  private val closureMemo = new java.util.concurrent.ConcurrentHashMap[
-    (Int, String, String), DataFrame]()
-
-  private[graft] def clearClosure(sfDir: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    val norm = if (sfDir == null) null else graft.Caches.normalizePath(sfDir)
-    val hit = closureMemo.keySet().asScala.toList
-      .filter(k => norm == null || k._2 == norm)
-    hit.foreach { k =>
-      Option(closureMemo.remove(k)).foreach { df =>
-        org.apache.spark.sql.graftshim.CheckpointShim.releaseCheckpoint(df)
-        ()
-      }
-    }
-  }
-
-  /** Spec hook: whether a closure memo exists for `sfDir`. */
-  private[graft] def closureMemoized(sfDir: String): Boolean = {
-    import scala.jdk.CollectionConverters._
-    val norm = graft.Caches.normalizePath(sfDir)
-    closureMemo.keySet().asScala.exists(_._2 == norm)
-  }
-
   // x72: dup clusters over BOTH edge types — x04's Jaccard pairs AND
   // x70's containment pairs in one component graph. A production drop
   // policy needs this union: doc B near-dups doc A (Jaccard) while
@@ -1356,10 +1303,9 @@ object ExtensionQueries {
         // plan IS the LogicalRDD (CheckpointShim releases exactly that
         // shape; the fast path's value is a Project over its last
         // round's checkpoint, the star fallback's a join of two)
-        closureMemo.computeIfAbsent(
-          (System.identityHashCode(pairs.sparkSession),
-            graft.Caches.normalizePath(dir), tag),
-          _ => propagateLabels(pairs, what).localCheckpoint())
+        graft.Caches.memo(pairs.sparkSession, "closure", dir, tag)(
+          propagateLabels(pairs, what).localCheckpoint())(
+          org.apache.spark.sql.graftshim.CheckpointShim.releaseCheckpoint)
       case None => propagateLabels(pairs, what)
     }
     labels
@@ -4254,17 +4200,10 @@ object ExtensionQueries {
       .withColumn("margin",
         when(col("ax") + col("ay") > 0,
           col("cos") / ((col("ax") + col("ay")) / 2)).otherwise(lit(0.0)))
-    val small = marginPersistGate.computeIfAbsent(
-      (System.identityHashCode(spark), sfDir),
-      _ => pe.count() * px.count() <= (64L << 20))
+    val small = graft.Caches.memo(spark, "bitext-margin-gate", sfDir)(
+      pe.count() * px.count() <= (64L << 20))(_ => ())
     if (small) graft.Caches.persist(frame) else frame
   }
-
-  /** Once-per-(session, dataset) decision for [[bitextMarginFrame]]'s
-    * persist gate (two bounded count jobs, never re-paid warm).
-    */
-  private val marginPersistGate =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), java.lang.Boolean]()
 
   def x144_bitext_mining(spark: SparkSession, sfDir: String): DataFrame =
     // per-query argmax as ONE hash agg (max_by on the lexicographic

@@ -33,3 +33,12 @@ object CheckpointShim {
       case _ => false
     }
 }
+
+/** The session's `private[sql]` UUID — unique per `SparkSession`
+  * (`newSession()` included) and never reused, unlike an identity
+  * hash, so session-scoped memo keys cannot alias a dead session.
+  */
+object SessionShim {
+  def uuid(spark: org.apache.spark.sql.SparkSession): String =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionUUID
+}

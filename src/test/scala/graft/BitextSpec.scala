@@ -269,14 +269,14 @@ class BitextSpec extends AnyFunSuite with SparkSpec {
     // artifact freshness (the WhitenedIvf contract): a regenerated
     // embeddings table must republish the pair, never serve the stale
     // quantizers — memo cleared to simulate a fresh session
-    val root = graft.ml.Bm25Index.artifactRoot("bitext", dir)
+    val root = graft.sources.VersionedStore.artifactRoot("bitext", dir)
     val v1 = graft.sources.VersionedStore.latestVersion(root).get
-    graft.ml.BitextAnn.clear(dir)
+    graft.Caches.clear(dir)
     val same = graft.ml.BitextAnn.loadOrPublish(spark, dir)
     assert(graft.sources.VersionedStore.latestVersion(root).get === v1,
       "unchanged source must serve the published version, not rebuild")
     assert(same.x.centroids.count() === 7L)
-    graft.ml.BitextAnn.clear(dir)
+    graft.Caches.clear(dir)
     plantedVecs.map { case (id, v, _) => (id, v.map(_ * 2.0f), 0) }
       .toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")

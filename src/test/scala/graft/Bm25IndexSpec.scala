@@ -56,7 +56,7 @@ class Bm25IndexSpec extends AnyFunSuite with SparkSpec {
 
   test("passage artifact publishes the full versioned triple and serves without tokenizing") {
     ExtensionQueries.x124_passage_indexed(spark, sf).collect()
-    val root = Bm25Index.artifactRoot("bm25p", sf)
+    val root = graft.sources.VersionedStore.artifactRoot("bm25p", sf)
     val v = graft.sources.VersionedStore.latestVersion(root)
     assert(v.nonEmpty, s"no published passage index under $root")
     for (t <- Seq("posting", "df", "consts", "meta"))
@@ -113,7 +113,7 @@ class Bm25IndexSpec extends AnyFunSuite with SparkSpec {
     val r1 = rows(Bm25Index.searchWith(ix1, Seq("spark", "join"), 10))
     assert(r1.nonEmpty)
     val v1 = graft.sources.VersionedStore
-      .latestVersion(Bm25Index.artifactRoot("bm25", dir)).get
+      .latestVersion(graft.sources.VersionedStore.artifactRoot("bm25", dir)).get
 
     // regenerate the corpus at the SAME path with different content
     val half = Tables.documents(spark, sf).filter(col("doc_id") < 250)
@@ -126,11 +126,10 @@ class Bm25IndexSpec extends AnyFunSuite with SparkSpec {
     fs.rename(new org.apache.hadoop.fs.Path(tmp2),
       new org.apache.hadoop.fs.Path(s"$dir/documents.parquet"))
     // drop the session memo (a fresh session's state) and re-resolve
-    Bm25Index.clear(dir)
     graft.Caches.clear(dir)
     val ix2 = Bm25Index.loadOrPublish(spark, dir)
     val v2 = graft.sources.VersionedStore
-      .latestVersion(Bm25Index.artifactRoot("bm25", dir)).get
+      .latestVersion(graft.sources.VersionedStore.artifactRoot("bm25", dir)).get
     assert(v2 > v1, "changed source must republish the artifact")
     val r2 = rows(Bm25Index.searchWith(ix2, Seq("spark", "join"), 10))
     assert(r2 !== r1, "republished index must answer from the NEW corpus")
@@ -140,10 +139,10 @@ class Bm25IndexSpec extends AnyFunSuite with SparkSpec {
     assert(r2 === expect)
 
     // unchanged source: resolving again re-uses the artifact (no bump)
-    Bm25Index.clear(dir)
+    graft.Caches.clear(dir)
     Bm25Index.loadOrPublish(spark, dir)
     assert(graft.sources.VersionedStore
-      .latestVersion(Bm25Index.artifactRoot("bm25", dir)).get === v2,
+      .latestVersion(graft.sources.VersionedStore.artifactRoot("bm25", dir)).get === v2,
       "unchanged source must not republish")
   }
 

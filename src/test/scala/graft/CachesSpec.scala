@@ -70,23 +70,23 @@ class CachesSpec extends AnyFunSuite with SparkSpec {
     import graft.queries.ExtensionQueries
     val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
     ExtensionQueries.x79_bpe_train(spark, sf).collect()
-    assert(ExtensionQueries.bpeMemoized(sf), "x79 should populate the memo")
+    assert(Caches.memoized("bpe", sf) > 0, "x79 should populate the memo")
     // the memo's encoded frame is a localCheckpoint — its blocks show
     // up as persistent RDDs the CacheManager does NOT track
     val rddsWithMemo = spark.sparkContext.getPersistentRDDs.keySet
     assert((rddsWithMemo -- rddsBefore).nonEmpty,
       "the BPE memo should hold checkpoint storage")
     Caches.clear(sf)
-    assert(!ExtensionQueries.bpeMemoized(sf), "clear must drop the BPE memo")
+    assert(Caches.memoized("bpe", sf) === 0, "clear must drop the BPE memo")
     // release is REAL, not GC-deferred: the checkpoint RDDs introduced
     // by the memo are gone from persistent storage (Dataset.unpersist
     // would be a silent no-op here — the CheckpointShim pin)
     val rddsAfter = spark.sparkContext.getPersistentRDDs.keySet
     assert((rddsWithMemo -- rddsBefore -- rddsAfter).nonEmpty,
-      "clearBpe must unpersist the checkpointed frame's storage")
+      "the BPE memo's release must unpersist the checkpointed frame's storage")
     // transparent rebuild, identical answer (training is deterministic)
     val again = ExtensionQueries.x79_bpe_train(spark, sf).collect()
-    assert(ExtensionQueries.bpeMemoized(sf))
+    assert(Caches.memoized("bpe", sf) > 0)
     assert(again.nonEmpty)
   }
 
@@ -104,13 +104,48 @@ class CachesSpec extends AnyFunSuite with SparkSpec {
     Caches.clearAll()
   }
 
-  test("IvfIndex.clear(sfDir) drops only that dataset's memoized index") {
+  test("Caches.clear(sfDir) drops the dataset's memoized IVF index") {
     val ixA = graft.ml.IvfIndex.build(spark, sf)
-    graft.ml.IvfIndex.clear(sf)
+    Caches.clear(sf)
     assert(ixA.assigned.storageLevel == StorageLevel.NONE)
     // a rebuild after clear is a fresh index, not the dropped memo
     val ixB = graft.ml.IvfIndex.build(spark, sf)
     assert(ixB ne ixA)
-    graft.ml.IvfIndex.clear(sf)
+    Caches.clear(sf)
+  }
+
+  test("Caches.clear(sfDir) releases the PQ index's persisted codes") {
+    val ix = graft.ml.PqIndex.build(spark, sf)
+    assert(ix.codes.storageLevel != StorageLevel.NONE)
+    Caches.clear(sf)
+    assert(ix.codes.storageLevel == StorageLevel.NONE,
+      "the PQ code frame stays cached after its dataset was cleared")
+  }
+
+  test("Caches.clear matches a trailing-slash spelling of the dataset path") {
+    ExtensionQueries.x91_bm25(spark, sf).collect()
+    Caches.clear(sf + "/")
+    // the memo dropped under the other spelling must not serve the
+    // frames that clear just unpersisted: the rebuild re-registers
+    ExtensionQueries.x91_bm25(spark, sf).collect()
+    assert(Caches.registered(sf).nonEmpty,
+      "a stale BM25 memo survived clear(sfDir + \"/\")")
+    Caches.clearAll()
+  }
+
+  test("a new session trains its own corpus BPE, never reusing another session's memo") {
+    val first = ExtensionQueries.x79_bpe_train(spark, sf).collect()
+    val other = spark.newSession()
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val again = ExtensionQueries.x79_bpe_train(other, sf).collect()
+    // training checkpoints the encoded word dimension: new checkpoint
+    // storage means the second session built its own memo
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore).nonEmpty,
+      "the new session was served the first session's BPE memo")
+    assert(Caches.memoized("bpe", sf) === 2)
+    assert(again.toSeq === first.toSeq, "training is deterministic")
+    Caches.clear(sf)
+    assert(Caches.memoized("bpe", sf) === 0,
+      "clear(sfDir) releases every session's memo for the dataset")
   }
 }

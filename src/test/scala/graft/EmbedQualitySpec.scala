@@ -93,12 +93,12 @@ class EmbedQualitySpec extends AnyFunSuite with SparkSpec {
     // drop the session memo; the on-disk artifact must carry the
     // transform alone (the deployment contract: queries are whitened
     // with the index-time μ/W in a fresh session)
-    graft.ml.Whiten.clear(sf)
+    graft.Caches.clear(sf)
     val second = ExtensionQueries.whitenedOf(spark, sf).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
     assert(first == second,
       "artifact-served whitening diverges from the fitting session's")
-    val root = graft.ml.Bm25Index.artifactRoot("whiten", sf)
+    val root = graft.sources.VersionedStore.artifactRoot("whiten", sf)
     val v = graft.sources.VersionedStore.latestVersion(root)
     assert(v.nonEmpty, s"no published whitening under $root")
     for (t <- Seq("mu", "w", "meta"))

@@ -60,7 +60,7 @@ class IvfRecallSpec extends AnyFunSuite with SparkSpec {
     assert(v === 0L)
 
     // drop the in-process memo entirely: the load path must stand alone
-    graft.ml.IvfIndex.clear(sf)
+    Caches.clear(sf)
     val loaded = graft.ml.IvfIndex.load(spark, root)
     val queries = loaded.assigned.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
@@ -84,7 +84,7 @@ class IvfRecallSpec extends AnyFunSuite with SparkSpec {
     assert(v2 === 1L)
     assert(graft.ml.IvfIndex.load(spark, root, Some(0L))
       .centroids.count() === loaded.centroids.count())
-    graft.ml.IvfIndex.clear(sf)
+    Caches.clear(sf)
     Caches.clear(root)
   }
 }

@@ -657,9 +657,9 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
       val r2 = Pipeline.run(spark, dir, s"$dir/store_on2",
         semanticDedup = true, semanticCos = 0.98, semanticK = 4)
       assert(r2.prunedSemantic === 1L)
-      assert(graft.ml.IvfIndex.cachedCount(dir) === 1,
+      assert(graft.Caches.memoized("ivf", dir) === 1,
         "quantizer rebuilt instead of reusing the memoized index")
-    } finally graft.ml.IvfIndex.clear(dir)
+    } finally graft.Caches.clear(dir)
   }
 
   test("quality gate: model drops heuristic-passing gibberish the verdict keeps") {

@@ -47,7 +47,7 @@ class SemDedupSpec extends AnyFunSuite with SparkSpec {
       info(f"twin recall = $recall%.3f ($recovered/${base.length})")
       assert(recall >= 0.95,
         f"near-duplicate twins escaped cluster blocking: $recall%.3f")
-    } finally graft.ml.IvfIndex.clear(work.toString)
+    } finally graft.Caches.clear(work.toString)
   }
 
   test("recovered pairs score the same cosine as x14's exact arithmetic") {

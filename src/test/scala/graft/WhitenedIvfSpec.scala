@@ -68,8 +68,7 @@ class WhitenedIvfSpec extends AnyFunSuite with SparkSpec {
     // artifacts alone must serve the same answer (the deployment
     // contract: a fresh session whitens queries with the index-time
     // μ/W and probes the published index — no refit, no re-encode)
-    graft.ml.Whiten.clear(sf)
-    graft.ml.WhitenedIvf.clear(sf)
+    graft.Caches.clear(sf)
     val second = ExtensionQueries.x140_whiten_ivf(spark, sf).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
     assert(first === second,
@@ -79,7 +78,7 @@ class WhitenedIvfSpec extends AnyFunSuite with SparkSpec {
   test("the composed pair pins ONE source fingerprint across both artifacts") {
     ExtensionQueries.x140_whiten_ivf(spark, sf).collect() // ensure published
     def meta(kind: String): String = {
-      val root = graft.ml.Bm25Index.artifactRoot(kind, sf)
+      val root = graft.sources.VersionedStore.artifactRoot(kind, sf)
       val v = graft.sources.VersionedStore.latestVersion(root)
         .getOrElse(fail(s"no published $kind artifact"))
       graft.sources.VersionedStore.readTable(spark, root, v, "meta")
