@@ -4,8 +4,10 @@ import org.apache.spark.sql.{Column, Encoder}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
 
-/** Weighted-vector-sum input row: one (weight, vector) pair per token. */
-case class WeightedVec(w: Double, vec: Seq[Double])
+/** Weighted-vector-sum input row: one (weight, vector) pair per token.
+  * The vector is a primitive array on purpose (see [[WeightedVecSum]]).
+  */
+case class WeightedVec(w: Double, vec: Array[Double])
 
 /** Per-group axpy aggregation: `doc_vector = Σ w_i · vec_i` (SURVEY.md A3).
   *
@@ -21,9 +23,18 @@ case class WeightedVec(w: Double, vec: Seq[Double])
   * Weights are applied in `reduce` (axpy), so the caller passes the raw
   * vector and a combined weight (e.g. tf·idf) — no intermediate scaled
   * array is allocated per row.
+  *
+  * The input vector is an `Array[Double]`, not a `Seq[Double]`: Spark's
+  * encoder deserializes a `Seq` field into a linked `List` of boxed
+  * doubles, on which `v(i)` walks `i` cells (~45k steps for one
+  * dim-300 row). An `Array[Double]` field is one bulk `toDoubleArray`
+  * copy of the `array<double>` column (an `array<float>` column is
+  * upcast element-wise on the way), O(dim) per row with no boxing.
+  * The output is an `Array[Double]` too, still an `array<double>`
+  * column.
   */
 class WeightedVecSum(dim: Int)
-    extends Aggregator[WeightedVec, Array[Double], Seq[Double]] {
+    extends Aggregator[WeightedVec, Array[Double], Array[Double]] {
   override def zero: Array[Double] = new Array[Double](dim)
   override def reduce(buf: Array[Double], in: WeightedVec): Array[Double] = {
     val v = in.vec
@@ -37,12 +48,9 @@ class WeightedVecSum(dim: Int)
     while (i < dim) { a(i) += b(i); i += 1 }
     a
   }
-  override def finish(buf: Array[Double]): Seq[Double] =
-    buf.toIndexedSeq
-  override def bufferEncoder: Encoder[Array[Double]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Double]]()
-  override def outputEncoder: Encoder[Seq[Double]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Double]]()
+  override def finish(buf: Array[Double]): Array[Double] = buf
+  override def bufferEncoder: Encoder[Array[Double]] = VecAgg.arrayEncoder
+  override def outputEncoder: Encoder[Array[Double]] = VecAgg.arrayEncoder
 }
 
 /** Dimension-adaptive form for the SQL registration (a SQL caller has
@@ -52,7 +60,7 @@ class WeightedVecSum(dim: Int)
   * has length d.
   */
 class WeightedVecSumAny
-    extends Aggregator[WeightedVec, Array[Double], Seq[Double]] {
+    extends Aggregator[WeightedVec, Array[Double], Array[Double]] {
   private def grown(buf: Array[Double], n: Int): Array[Double] =
     if (buf.length >= n) buf else java.util.Arrays.copyOf(buf, n)
   override def zero: Array[Double] = Array.emptyDoubleArray
@@ -69,14 +77,15 @@ class WeightedVecSumAny
     while (i < small.length) { big(i) += small(i); i += 1 }
     big
   }
-  override def finish(buf: Array[Double]): Seq[Double] = buf.toIndexedSeq
-  override def bufferEncoder: Encoder[Array[Double]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Double]]()
-  override def outputEncoder: Encoder[Seq[Double]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Double]]()
+  override def finish(buf: Array[Double]): Array[Double] = buf
+  override def bufferEncoder: Encoder[Array[Double]] = VecAgg.arrayEncoder
+  override def outputEncoder: Encoder[Array[Double]] = VecAgg.arrayEncoder
 }
 
 object VecAgg {
+  private[agg] def arrayEncoder: Encoder[Array[Double]] =
+    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Double]]()
+
   /** Untyped-DataFrame entry: `.agg(VecAgg.weightedSum(dim)($"w", $"vec"))`. */
   def weightedSum(dim: Int): (Column, Column) => Column = {
     val fn = udaf(new WeightedVecSum(dim))

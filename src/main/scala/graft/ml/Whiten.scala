@@ -27,13 +27,14 @@ object Whiten {
     * Σxxᵀ (d² entries, row-major)]. Covariance follows as
     * Σxxᵀ/n − μμᵀ; one pass instead of a mean pass + a centered pass
     * (fine at embedding magnitudes ~O(1); a pathological offset would
-    * call for the two-pass form).
+    * call for the two-pass form). Input and output are primitive
+    * arrays, not `Seq[Double]`, for the reason given on
+    * [[graft.agg.WeightedVecSum]]: a `Seq` input arrives as a `List`.
     */
   class MomentAgg(d: Int)
-      extends Aggregator[Seq[Double], Array[Double], Seq[Double]] {
+      extends Aggregator[Array[Double], Array[Double], Array[Double]] {
     override def zero: Array[Double] = new Array[Double](1 + d + d * d)
-    override def reduce(b: Array[Double], v: Seq[Double]): Array[Double] = {
-      val x = v.toArray
+    override def reduce(b: Array[Double], x: Array[Double]): Array[Double] = {
       b(0) += 1
       var i = 0
       while (i < d) {
@@ -50,11 +51,11 @@ object Whiten {
       while (i < a.length) { a(i) += b(i); i += 1 }
       a
     }
-    override def finish(b: Array[Double]): Seq[Double] = b.toIndexedSeq
+    override def finish(b: Array[Double]): Array[Double] = b
     override def bufferEncoder: Encoder[Array[Double]] =
       ExpressionEncoder[Array[Double]]()
-    override def outputEncoder: Encoder[Seq[Double]] =
-      ExpressionEncoder[Seq[Double]]()
+    override def outputEncoder: Encoder[Array[Double]] =
+      ExpressionEncoder[Array[Double]]()
   }
 
   /** Fit-or-load the (μ, W) transform as a VERSIONED on-disk artifact
@@ -133,7 +134,7 @@ object Whiten {
     */
   def fit(embeddings: DataFrame, dim: Int, eps: Double = 1e-12)
       : (Array[Double], Array[Array[Double]]) = {
-    val agg = udaf(new MomentAgg(dim), ExpressionEncoder[Seq[Double]]())
+    val agg = udaf(new MomentAgg(dim), ExpressionEncoder[Array[Double]]())
     val m = embeddings
       .select(graft.functions.VecMath.asDouble(col("embedding")).as("e"))
       .agg(agg(col("e")).as("m"))

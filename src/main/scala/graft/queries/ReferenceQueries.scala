@@ -795,20 +795,23 @@ object ReferenceQueries {
     * stacked into one (lang, token, idf, vec) frame. A language with
     * zero qualifying posts has no dimension rows — the reference would
     * not deploy a worker for it.
+    *
+    * The corpus is tokenized once: each token row carries its post's
+    * `n_chars >= 100` flag, so one (lang, token) aggregate yields both
+    * the vocabulary (every group) and the occurrences (the flagged
+    * rows, 0 for a token seen only in short posts).
     */
   def wordvecsByLang(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
-    val tok = parallelized(docs).select(col("doc_id"), col("lang"),
+    val qualifies = col("n_chars") >= 100
+    val occ = parallelized(docs).select(col("lang"), qualifies.as("q"),
       explode(Tokenize.tokensByLang(col("text"), col("lang"))).as("token"))
-    val vocab = tok.select("lang", "token").distinct()
       .filter(length(col("token")) >= 4)
-    val posts = docs.filter(col("n_chars") >= 100).select("doc_id", "lang")
-    val nDf = posts.groupBy("lang").agg(count(lit(1)).cast("double").as("n_posts"))
-    val occ = tok.join(posts.select("doc_id"), Seq("doc_id"), "left_semi")
-      .groupBy("lang", "token").agg(count(lit(1)).as("c"))
-    val raw = vocab.join(occ, Seq("lang", "token"), "left")
-      .withColumn("occurrences", coalesce(col("c"), lit(0L)))
-      .join(broadcast(nDf), Seq("lang"))
+      .groupBy("lang", "token")
+      .agg(count(when(col("q"), 1)).as("occurrences"))
+    val nDf = docs.filter(qualifies)
+      .groupBy("lang").agg(count(lit(1)).cast("double").as("n_posts"))
+    val raw = occ.join(broadcast(nDf), Seq("lang"))
       .withColumn("raw",
         when(col("occurrences") > 0, log10(col("n_posts") / col("occurrences")))
           .otherwise(lit(-1.0)))

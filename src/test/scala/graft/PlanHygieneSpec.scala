@@ -117,6 +117,15 @@ class PlanHygieneSpec extends AnyFunSuite with SparkSpec {
       s"helper failed to surface the global-window funnel:\n${own.mkString("\n")}")
   }
 
+  test("wordvecsByLang tokenizes the corpus once: one Generate in the executed plan") {
+    // the min_raw broadcast re-reads the (lang, token) aggregate; its
+    // exchange is reused, so the explode still runs once
+    val df = ReferenceQueries.wordvecsByLang(spark, sf)
+    df.collect()
+    val ops = executedOps(df)
+    assert(ops.count(_.startsWith("Generate")) === 1, ops.mkString("\n"))
+  }
+
   test("q29 lang-dispatched tokenizer is a pure projection (no UDF, no shuffle before sort)") {
     val p = plan(ReferenceQueries.q29_lang_tokens(spark, sf))
     assert(!p.contains("BatchEvalPython") && !p.toLowerCase.contains("scalaudf"),

@@ -1,0 +1,99 @@
+package graft
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.functions.Tokenize
+import graft.queries.ReferenceQueries
+
+/** The per-language IDF dimension ([[ReferenceQueries.wordvecsByLang]])
+  * takes vocabulary and occurrences from one (lang, token) aggregate
+  * over one tokenize pass. It must equal, row for row and bit for bit,
+  * the earlier form kept here as the reference: a distinct vocabulary,
+  * a `left_semi` on the qualifying posts' `doc_id`s, a group-by and a
+  * left join.
+  */
+class WordvecsByLangSpec extends AnyFunSuite with SparkSpec {
+  import spark.implicits._
+
+  private def reference(docs: DataFrame): DataFrame = {
+    val tok = docs.select(col("doc_id"), col("lang"),
+      explode(Tokenize.tokensByLang(col("text"), col("lang"))).as("token"))
+    val vocab = tok.select("lang", "token").distinct()
+      .filter(length(col("token")) >= 4)
+    val posts = docs.filter(col("n_chars") >= 100).select("doc_id", "lang")
+    val nDf = posts.groupBy("lang").agg(count(lit(1)).cast("double").as("n_posts"))
+    val occ = tok.join(posts.select("doc_id"), Seq("doc_id"), "left_semi")
+      .groupBy("lang", "token").agg(count(lit(1)).as("c"))
+    val raw = vocab.join(occ, Seq("lang", "token"), "left")
+      .withColumn("occurrences", coalesce(col("c"), lit(0L)))
+      .join(broadcast(nDf), Seq("lang"))
+      .withColumn("raw",
+        when(col("occurrences") > 0, log10(col("n_posts") / col("occurrences")))
+          .otherwise(lit(-1.0)))
+    val minDf = raw.groupBy("lang").agg(min(col("raw")).as("min_raw"))
+    raw.join(broadcast(minDf), Seq("lang"))
+      .withColumn("idf", when(col("raw") > 0, col("raw")).otherwise(col("min_raw")))
+      .select("lang", "token", "idf")
+  }
+
+  /** A documents table with every edge the IDF rules have: a language
+    * whose posts are all under 100 chars (de), a token seen only in
+    * short posts (en "shortonly"), tokens under 4 chars, a long post
+    * with a null `lang`, and a per-language tokenizer rule (ru).
+    */
+  private lazy val fixture: String = {
+    // padded with a 2-char token, which never enters the vocabulary
+    def long(s: String) = (s + " zz" * 40).take(140)
+    val posts = Seq(
+      (1L, long("alpha alpha bravo the cat sat"), "en"),
+      (2L, long("alpha charlie delta delta delta"), "en"),
+      (3L, long("bravo echo foxtrot"), "en"),
+      (4L, "shortonly alpha the cat", "en"),
+      (5L, "shortonly too", "en"),
+      (6L, long("hola amigo amigo casa casa casa"), "es"),
+      (7L, long("amigo perro"), "es"),
+      (8L, long("gato perro perro"), "es"),
+      (9L, long("gato luna"), "es"),
+      (10L, "hallo welt freunde", "de"),
+      (11L, "guten morgen", "de"),
+      (12L, long("привет мир привет друзья"), "ru"),
+      (13L, long("nulltoken alpha"), null))
+    val dir = java.nio.file.Files.createTempDirectory("graft_wvl").toString
+    posts.map { case (id, t, l) => (id, t, l, t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "n_chars")
+      .write.parquet(s"$dir/documents.parquet")
+    dir
+  }
+
+  test("one-pass IDF table equals the distinct/semi-join form exactly") {
+    val got = ReferenceQueries.wordvecsByLang(spark, fixture)
+    assert(got.columns.toSeq === Seq("lang", "token", "idf", "vec"))
+    val rows = got.select("lang", "token", "idf").as[(String, String, Double)]
+      .collect().sorted
+    val ref = reference(Tables.documents(spark, fixture))
+      .as[(String, String, Double)].collect().sorted
+    assert(rows.toSeq === ref.toSeq)
+
+    assert(rows.map(_._1).toSet === Set("en", "es", "ru"))
+    assert(rows.forall(_._2.length >= 4))
+    val idf = rows.map(r => (r._1, r._2) -> r._3).toMap
+    // hand-computed values: Spark's log10 and this JVM's may differ in
+    // the last bit, so these compare to 1e-12 (the equality above is exact)
+    def near(k: (String, String), v: Double) =
+      assert(math.abs(idf(k) - v) < 1e-12, s"$k ${idf(k)} vs $v")
+    // seen only in short posts: 0 occurrences, raw -1, which is also
+    // en's minimum raw; alpha's raw log10(3/3) = 0 falls back to it
+    assert(idf(("en", "shortonly")) === -1.0)
+    assert(idf(("en", "alpha")) === -1.0)
+    near(("en", "bravo"), math.log10(3.0 / 2))
+    near(("es", "hola"), math.log10(4.0 / 1))
+    // es's most frequent tokens, 3 occurrences over 4 posts: raw > 0,
+    // so no es token falls back to the min raw
+    near(("es", "casa"), math.log10(4.0 / 3))
+    near(("es", "perro"), math.log10(4.0 / 3))
+    near(("ru", "привет"), math.log10(1.0 / 2))
+    near(("ru", "друзья"), math.log10(1.0 / 2))
+  }
+}
