@@ -1,6 +1,13 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.DynamicPruning
+import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
+import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -81,9 +88,80 @@ object ReferenceQueries {
 
   val SqlTokByLang: String = sqlTokByLangOf("text", "lang")
 
+  /** Small-input parallelism guard for the tokenize-heavy posting
+    * builders: a small-SF documents file is a single parquet ROW GROUP,
+    * so the scan — and the tokenization riding on it, the most
+    * expensive scalar step — lands on one task no matter how file
+    * splits are tuned (a row group is the minimum read unit). An input
+    * with fewer partitions than half the cores is redistributed; a
+    * warehouse-scale scan has thousands of splits, so the condition is
+    * false and NO shuffle is added. (Measured at sf0.1 on 4 cores, a
+    * (doc_id, token) count: 0.40-0.49 s hash-redistributed, 0.47-0.56 s
+    * round-robin over 4 partitions, 0.50-0.59 s on the one scan task;
+    * the regex tokenizer this guard was written for took 4.9 s on one
+    * task.)
+    *
+    * The count is read off the physical plan ([[plannedPartitions]]),
+    * never by running it: `.rdd.getNumPartitions` on an adaptive plan
+    * executes the plan's shuffle stages just to count, and the real
+    * query then runs them again.
+    *
+    * The redistribution hashes by `doc_id` with no fixed count, so AQE
+    * may coalesce it. Every caller tokenizes per document and keys
+    * what follows by `doc_id`; a `doc_id` distribution satisfies their
+    * doc-keyed aggregates and windows (docVectorsByLang's token count,
+    * tf window and vector sum share this one exchange), and persisted
+    * postings carry it to their doc-keyed consumers. A fixed count
+    * would also keep one output file per partition downstream.
+    */
+  private[graft] def parallelized(docs: DataFrame): DataFrame = {
+    // a streaming frame has no physical plan of its own — and no
+    // single-row-group parquet problem either: micro-batch sources
+    // split by their own planning. Pass it through untouched (round-17
+    // ADVICE: QualityModel's streaming-gate form now routes through
+    // docTokens -> here).
+    if (docs.isStreaming) return docs
+    val target = docs.sparkSession.sparkContext.defaultParallelism
+    if (plannedPartitions(docs.queryExecution.executedPlan).exists(_ >= target / 2)) docs
+    else docs.repartition(col("doc_id"))
+  }
+
+  /** The number of partitions `p` will produce, read off the plan
+    * without executing it; None when the plan does not say (and
+    * [[parallelized]] then redistributes). Leaves
+    * report the partitions of their input RDD, which is built (file
+    * splits listed, a checkpoint's blocks named) but never run. A
+    * shuffle reports its planned count: if AQE later coalesces it, the
+    * data is too small to be worth spreading, and a coalescable
+    * redistribution would be coalesced the same way. An adaptive plan
+    * that has already run reports its final, coalesced reads.
+    */
+  private def plannedPartitions(p: SparkPlan): Option[Int] = p match {
+    case a: AdaptiveSparkPlanExec => plannedPartitions(a.executedPlan)
+    case s: QueryStageExec => plannedPartitions(s.plan)
+    case m: InMemoryTableScanExec => plannedPartitions(m.relation.cachedPlan)
+    case s: FileSourceScanExec =>
+      // a dynamic-pruning filter is only known once its subquery runs
+      if (s.partitionFilters.exists(_.exists(_.isInstanceOf[DynamicPruning]))) None
+      else Some(s.inputRDD.getNumPartitions)
+    case r: RDDScanExec => Some(r.rdd.getNumPartitions)
+    case l: LocalTableScanExec => Some(l.inputRDD.getNumPartitions)
+    case _ => p.outputPartitioning match {
+      case _: UnknownPartitioning => p match {
+        case j: BroadcastHashJoinExec =>
+          plannedPartitions(if (j.buildSide == BuildLeft) j.right else j.left)
+        case _ => p.children match {
+          case Seq(child) => plannedPartitions(child)
+          case _ => None
+        }
+      }
+      case known => Some(known.numPartitions)
+    }
+  }
+
   /** The (doc_id, token) posting table — the shared working set of every
     * text query (tf, idf, vocab scan, simhash, lang-id, token stats…).
-    * Persisted: regex tokenization is the single most expensive scalar
+    * Persisted: tokenization is the single most expensive scalar
     * step, and Spark's CacheManager canonicalizes the plan so every query
     * building this exact projection — including ExtensionQueries — reads
     * one materialization instead of re-splitting the corpus. In a
@@ -99,28 +177,6 @@ object ReferenceQueries {
     * persisting callers (CacheManager matches by canonical plan, not by
     * who called persist).
     */
-  /** Small-input parallelism guard for the tokenize-heavy posting
-    * builders: a small-SF documents file is a single parquet ROW GROUP,
-    * so the scan — and the regex tokenization riding on it, the most
-    * expensive scalar step — lands on one task no matter how file
-    * splits are tuned (a row group is the minimum read unit; measured
-    * 4.9 s single-task vs 1.5 s redistributed at sf0.1). Redistribute
-    * only when the scan has fewer tasks than half the cores; a
-    * warehouse-scale scan has thousands of splits, so the condition is
-    * false and NO shuffle is added.
-    */
-  private[queries] def parallelized(docs: DataFrame): DataFrame = {
-    // a streaming frame has no .rdd (AnalysisException) — and no
-    // single-row-group parquet problem either: micro-batch sources
-    // split by their own planning. Pass it through untouched (round-17
-    // ADVICE: QualityModel's streaming-gate form now routes through
-    // docTokens -> here).
-    if (docs.isStreaming) return docs
-    val target = docs.sparkSession.sparkContext.defaultParallelism
-    if (docs.rdd.getNumPartitions < target / 2) docs.repartition(target)
-    else docs
-  }
-
   private[graft] def docTokens(docs: DataFrame, persist: Boolean = true): DataFrame = {
     val tok = parallelized(docs)
       .select(col("doc_id"), explode(Tokenize.tokens(col("text"))).as("token"))

@@ -41,12 +41,19 @@ import graft.queries.{ExtensionQueries, ReferenceQueries}
   *     never the verified measure. At warehouse scale `shpost`/`df`
   *     are bucketed by hash and the df slices are compacted nightly
   *     (sources/TableMaintenance) — here slices are summed on read.
-  *   - `docs/batch=N/` — (doc_id, text) of every accepted doc. Read
+  *   - `docs/batch=N/` — (doc_id, text, lang) of every accepted doc. Read
   *     ONLY through a left-semi join against the candidate hist-id
   *     frame: exact verification re-shingles the handful of history
   *     docs a candidate pair touches, not the corpus.
   *   - `vectors/` — the same merged doc-vector store VectorizeStream
   *     maintains, now fed survivors only.
+  *
+  * Every sliced artifact has a declared schema ([[storeSchemas]]), and
+  * history is read with it: no footer-inference job per artifact per
+  * batch, and an artifact that does not exist yet is an empty local
+  * relation the optimizer prunes at plan time, so a first batch plans
+  * no history branch at all. A micro-batch's Spark jobs are then the
+  * ones that compute something the batch keeps.
   *
   * Exactly-once: checkpointed file-source offsets make each input
   * file process once per checkpoint lineage, and every per-batch write
@@ -72,7 +79,8 @@ object DedupStream {
     StructField("sig", StringType)))
 
   private[streaming] val keptDocSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType), StructField("text", StringType)))
+    StructField("doc_id", LongType), StructField("text", StringType),
+    StructField("lang", StringType)))
 
   private[streaming] val shpostSchema: StructType = StructType(Seq(
     StructField("h", LongType), StructField("doc_id", LongType)))
@@ -304,7 +312,7 @@ object DedupStream {
                   crossing.select(col("drop_id").as("doc_id")).distinct(),
                   Seq("doc_id"), "left_anti")
               }
-            } else batchDocs.join(drops, Seq("doc_id"), "left_anti")
+            } else batchDocs.join(broadcast(drops), Seq("doc_id"), "left_anti")
           // contamination gate AFTER dedup (the Pipeline's stage
           // order — only dedup survivors pay the 8-gram projection).
           // Contaminated docs leave NO trace in the artifacts, like
@@ -366,6 +374,7 @@ object DedupStream {
                   Seq("d1"), "left_anti")
                 .join(gateDropped.select(col("doc_id").as("d2")),
                   Seq("d2"), "left_anti")
+                .select("d1", "d2")
                 .write.mode(SaveMode.Overwrite)
                 .parquet(s"$storeRoot/dupedges/batch=$batchId")
             }
@@ -637,6 +646,19 @@ object DedupStream {
     StructField("token_hll", BinaryType), StructField("token_freq", BinaryType),
     StructField("token_theta", BinaryType)))
 
+  /** Every `batch=N`-sliced store artifact with the columns its slices
+    * are written in: what the history reads declare and
+    * [[compactStore]] consolidates. `df`'s schema also declares the
+    * `batch` partition column its replay filter reads.
+    */
+  private[graft] val storeSchemas: Seq[(String, StructType)] = Seq(
+    "postings" -> bandSchema, "docs" -> keptDocSchema,
+    "shpost" -> shpostSchema, "docn" -> docnSchema,
+    "segown" -> segownSchema, "cleandocs" -> cleanDocSchema,
+    "dupedges" -> dupedgeSchema, "lexpost" -> lexpostSchema,
+    "lexdf" -> lexdfSchema, "lexconsts" -> lexconstsSchema,
+    "df" -> dfSchema, "stats" -> statsSchema)
+
   /** Live whole-corpus vocabulary stats from the maintained per-batch
     * slices: one merged sketch row per language — token total,
     * distinct-token HLL, heavy-token sketch, token theta sketch (the
@@ -662,8 +684,6 @@ object DedupStream {
   def driftReport(spark: SparkSession, storeRoot: String): DataFrame = {
     val post = readOrEmpty(spark, s"$storeRoot/lexpost",
       lexpostSchema.add(StructField("batch", LongType)))
-      // partition-value inference types small batch ids as INT; pin long
-      .withColumn("batch", col("batch").cast("long"))
     val bt = post.groupBy("batch", "token").agg(sum(col("tf")).as("c_bt"))
     val bTot = bt.groupBy("batch").agg(sum(col("c_bt")).as("n_b"))
     val ct = bt.groupBy("token").agg(sum(col("c_bt")).as("c_t"))
@@ -1016,42 +1036,29 @@ object DedupStream {
     * counts after compaction.
     */
   def compactStore(spark: SparkSession, storeRoot: String): Map[String, Int] = {
-    val verbatim: Seq[(String, StructType, DataFrame => DataFrame)] = Seq(
-      ("postings", bandSchema, identity[DataFrame] _),
-      ("docs", keptDocSchema, identity[DataFrame] _),
-      ("shpost", shpostSchema, identity[DataFrame] _),
-      ("docn", docnSchema, identity[DataFrame] _),
-      ("segown", segownSchema, identity[DataFrame] _),
-      ("cleandocs", cleanDocSchema, identity[DataFrame] _),
-      ("dupedges", dupedgeSchema, identity[DataFrame] _),
-      ("lexpost", lexpostSchema, identity[DataFrame] _),
-      ("lexdf", lexdfSchema,
-        (df: DataFrame) => df.groupBy("token").agg(sum(col("cnt")).as("cnt"))),
-      ("lexconsts", lexconstsSchema,
-        (df: DataFrame) => df.agg(sum(col("n_docs")).as("n_docs"),
-          sum(col("n_dl_docs")).as("n_dl_docs"),
-          sum(col("sum_dl")).as("sum_dl"))),
-      ("df", dfSchema,
-        (df: DataFrame) => df.groupBy("h").agg(sum(col("cnt")).as("cnt"))),
-      ("stats", statsSchema, (df: DataFrame) =>
-        graft.sources.SketchStore.merge(
-          Seq(df.select("lang", "n_rows", "token_hll", "token_freq",
-            "token_theta")), Seq("lang"))))
-    verbatim.flatMap { case (name, schema, consolidate) =>
+    val consolidate: Map[String, DataFrame => DataFrame] = Map(
+      "lexdf" ->
+        ((df: DataFrame) => df.groupBy("token").agg(sum(col("cnt")).as("cnt"))),
+      "lexconsts" -> ((df: DataFrame) => df.agg(sum(col("n_docs")).as("n_docs"),
+        sum(col("n_dl_docs")).as("n_dl_docs"),
+        sum(col("sum_dl")).as("sum_dl"))),
+      "df" -> ((df: DataFrame) => df.groupBy("h").agg(sum(col("cnt")).as("cnt"))),
+      "stats" -> ((df: DataFrame) =>
+        graft.sources.SketchStore.merge(Seq(df), Seq("lang"))))
+    storeSchemas.flatMap { case (name, schema) =>
       val dir = s"$storeRoot/$name"
       val p = new org.apache.hadoop.fs.Path(dir)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (!fs.exists(p)) None
       else {
-        val dataCols = schema.fieldNames.filterNot(_ == "batch").map(col)
-        val src = spark.read.parquet(dir).select(dataCols.toIndexedSeq: _*)
-        val out = consolidate(src)
+        val data = StructType(schema.filterNot(_.name == "batch"))
+        val out = consolidate.getOrElse(name, identity[DataFrame] _)(
+          readOrEmpty(spark, dir, data))
         val expected = out.count()
         val tmp = s"$dir.compact.tmp"
         fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
         out.write.parquet(s"$tmp/batch=-1")
-        require(spark.read.parquet(tmp)
-          .select(dataCols.toIndexedSeq: _*).count() == expected,
+        require(readOrEmpty(spark, tmp, data).count() == expected,
           s"compaction row-count mismatch for $name")
         // Two-rename swap (TableMaintenance.compact pattern): the
         // original slice set is never deleted until the consolidated
@@ -1073,11 +1080,22 @@ object DedupStream {
     }.toMap
   }
 
-  private def readOrEmpty(spark: SparkSession, path: String,
+  /** A store artifact as exactly `schema`'s columns: read with the
+    * declared schema when present, so no footer-inference job runs,
+    * and an empty LOCAL relation when absent, so the optimizer
+    * (PropagateEmptyRelation) deletes the history branches it feeds at
+    * plan time — an empty RDD is opaque to the planner, and its
+    * branches planned, pinned and ran as jobs. A present and an absent
+    * artifact return the same columns; the `batch` partition column
+    * only when the schema declares it.
+    */
+  private[graft] def readOrEmpty(spark: SparkSession, path: String,
       schema: StructType): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.parquet(path)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    if (fs.exists(p))
+      spark.read.schema(schema).parquet(path)
+        .select(schema.fieldNames.toIndexedSeq.map(col): _*)
+    else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
   }
 }

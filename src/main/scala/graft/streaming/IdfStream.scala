@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.queries.ReferenceQueries
 
@@ -72,12 +73,25 @@ object IdfStream {
       .map(_.getPath.toString)
   }
 
-  /** The serving idf table from all completed deltas (q11's shape). */
+  /** The columns [[ReferenceQueries.idfBatchState]] writes per delta
+    * part: vocab tokens, the qualifying-post count, occurrence counts.
+    */
+  private val partSchemas: Map[String, StructType] = Map(
+    "vocab" -> StructType(Seq(StructField("token", StringType))),
+    "n" -> StructType(Seq(StructField("n", LongType))),
+    "occ" -> StructType(Seq(StructField("token", StringType),
+      StructField("c", LongType))))
+
+  /** The serving idf table from all completed deltas (q11's shape).
+    * Parts are read with their declared schemas, so building the table
+    * runs no footer-inference job per part per batch.
+    */
   def currentIdf(spark: SparkSession, stateDir: String): DataFrame = {
     val dirs = doneBatches(spark, stateDir)
     require(dirs.nonEmpty, s"no completed idf state under $stateDir")
     def readAll(part: String): DataFrame =
-      dirs.map(d => spark.read.parquet(s"$d/$part")).reduce(_.unionByName(_))
+      dirs.map(d => spark.read.schema(partSchemas(part)).parquet(s"$d/$part"))
+        .reduce(_.unionByName(_))
     ReferenceQueries.idfFromState(
       readAll("vocab"), readAll("n"), readAll("occ"))
   }

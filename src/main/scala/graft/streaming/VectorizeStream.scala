@@ -122,7 +122,10 @@ object VectorizeStream {
       updates.write.parquet(storePath)
       return
     }
-    val existing = spark.read.parquet(storePath)
+    // a store is fed by one vectorizer, so it holds the columns its
+    // updates carry: read it with their schema, and no footer-inference
+    // job runs per batch
+    val existing = spark.read.schema(updates.schema).parquet(storePath)
     val merged = Upsert.mergeByKey(existing, updates, "doc_id")
     merged.write.mode("overwrite").parquet(tmp.toString)
     Files.move(store, retired)

@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,13 +13,20 @@ import graft.streaming.{DedupStream, VectorizeStream}
 
 /** The always-on ingest end to end inside the default suite: two tiny
   * `DedupStream.start` micro-batches over a hand-built dimension, with
-  * the exact accepted and dropped ids pinned, and a bound on the size
-  * of every SQL plan description the batches produce. The bound guards
-  * the lineage-cut rule in `DedupStream.processBatch`: persisted batch
-  * frames built on one another make each query's description repeat
-  * every earlier cached plan (AQE's final and initial plans each), so
-  * the description grows with every frame in the tower and Spark
-  * rebuilds it at every execution start and AQE re-plan.
+  * the exact accepted and dropped ids pinned, and three bounds on what
+  * the batches cost or leave behind:
+  *
+  *   - the size of every SQL plan description. It guards the
+  *     lineage-cut rule in `DedupStream.processBatch`: persisted batch
+  *     frames built on one another make each query's description
+  *     repeat every earlier cached plan (AQE's final and initial plans
+  *     each), so the description grows with every frame in the tower
+  *     and Spark rebuilds it at every execution start and AQE re-plan;
+  *   - the Spark jobs each micro-batch launches, which is what a small
+  *     batch's cost is made of (per-job driver overhead), and that none
+  *     of them runs outside a query;
+  *   - every store artifact's declared schema, which the history reads
+  *     use instead of inferring one from parquet footers.
   */
 class DedupStreamBatchSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -32,33 +40,75 @@ class DedupStreamBatchSpec extends AnyFunSuite with SparkSpec {
     */
   private val MaxPlanChars = 125000
 
+  /** Jobs per micro-batch at local[8] (the suite's session): 46 for
+    * the first batch (empty history) and 63-64 for the second (with
+    * history); the bounds add about 10% for run-to-run AQE re-planning.
+    * Before history reads declared their schemas, an absent artifact
+    * became an empty local relation, the survivors anti-join broadcast
+    * its drops and the posting redistribution was read off the plan,
+    * the same batches launched 58 and 79 jobs.
+    */
+  private val MaxFirstBatchJobs = 51
+  private val MaxHistoryBatchJobs = 70
+
   private def words(prefix: String, from: Int, until: Int): String =
     (from until until).map(i => s"$prefix$i").mkString(" ")
 
-  /** Stage `rows` as one parquet file in the watched directory. */
-  private def stage(docsDir: Path, work: Path, name: String,
-      rows: Seq[(Long, String)]): Unit = {
-    val tmp = work.resolve(s"stage_$name")
-    rows.map { case (id, text) => (id, text, "en", "test", text.length.toLong) }
-      .toDF(VectorizeStream.docSchema.fieldNames.toIndexedSeq: _*)
-      .coalesce(1).write.parquet(tmp.toString)
-    val part = Files.list(tmp).toArray.map(_.toString)
-      .filter(_.endsWith(".parquet")).head
-    Files.copy(Paths.get(part), docsDir.resolve(s"$name.parquet"))
+  // batch 1: doc 4 re-posts doc 3 inside the batch (higher id drops)
+  private val batch1 = Seq(
+    1L -> words("tok", 0, 30), 2L -> words("alpha", 0, 30),
+    3L -> words("beta", 0, 20), 4L -> words("beta", 0, 20))
+  // batch 2 against batch-1 survivors: doc 11 is an exact re-post of
+  // doc 2 (the banding channel), doc 12 a 10-token excerpt of doc 1
+  // (Jaccard ≈ 0.29, so only the containment probe finds it), doc 13
+  // is new
+  private val batch2 = Seq(
+    11L -> words("alpha", 0, 30), 12L -> words("tok", 10, 20),
+    13L -> words("gamma", 0, 25))
+
+  /** Hand-built dimension: a few known tokens, so vectorize runs
+    * against a real join without building an IDF table.
+    */
+  private def dimension: DataFrame = Seq("tok1", "tok12", "alpha3", "beta4", "gamma5")
+    .zipWithIndex.map { case (t, i) =>
+      ("en", t, 1.0 + i, Seq.tabulate(Dim)(j => if (j == i % Dim) 1.0 else 0.0))
+    }.toDF("lang", "token", "idf", "vec")
+
+  /** A fresh watched directory, store and checkpoint. */
+  private final class Ingest(name: String) {
+    val work: Path = Files.createTempDirectory(name)
+    val docsDir: Path = Files.createDirectory(work.resolve("docs_in"))
+    val store: String = work.resolve("store").toString
+    val ckpt: String = work.resolve("ckpt").toString
+    private val dim = dimension
+
+    /** Stage `rows` as one parquet file in the watched directory. */
+    def stage(name: String, rows: Seq[(Long, String)]): Unit = {
+      val tmp = work.resolve(s"stage_$name")
+      rows.map { case (id, text) => (id, text, "en", "test", text.length.toLong) }
+        .toDF(VectorizeStream.docSchema.fieldNames.toIndexedSeq: _*)
+        .coalesce(1).write.parquet(tmp.toString)
+      val part = Files.list(tmp).toArray.map(_.toString)
+        .filter(_.endsWith(".parquet")).head
+      Files.copy(Paths.get(part), docsDir.resolve(s"$name.parquet"))
+      ()
+    }
+
+    /** One `DedupStream.start` run over whatever is staged and new. */
+    def runBatch(softDedup: Boolean = false, lexIndex: Boolean = false): Unit = {
+      val q = DedupStream.start(spark, docsDir.toString, dim, Dim, store, ckpt,
+        softDedup = softDedup, lexIndex = lexIndex)
+      q.quiesce()
+      assert(q.exception.isEmpty, s"batch failed: ${q.exception}")
+    }
+
+    def accepted: Set[Long] = spark.read.parquet(s"$store/docs")
+      .select("doc_id").as[Long].collect().toSet
   }
 
   test("two micro-batches: exact keep/drop ids, and every plan description stays bounded") {
-    val work = Files.createTempDirectory("graft_dstream_batch")
-    val docsDir = work.resolve("docs_in")
-    Files.createDirectory(docsDir)
-    val store = work.resolve("store").toString
-    val ckpt = work.resolve("ckpt").toString
-    // hand-built dimension: a few known tokens, so vectorize runs
-    // against a real join without building an IDF table
-    val dim: DataFrame = Seq("tok1", "tok12", "alpha3", "beta4", "gamma5")
-      .zipWithIndex.map { case (t, i) =>
-        ("en", t, 1.0 + i, Seq.tabulate(Dim)(j => if (j == i % Dim) 1.0 else 0.0))
-      }.toDF("lang", "token", "idf", "vec")
+    val in = new Ingest("graft_dstream_batch")
+    import in.{accepted, runBatch, stage, store}
 
     // every SQL execution from here to the drain below: the two
     // batches plus the spec's own small staging writes and reads
@@ -74,30 +124,13 @@ class DedupStreamBatchSpec extends AnyFunSuite with SparkSpec {
         case _ => ()
       }
     }
-    def runBatch(): Unit = {
-      val q = DedupStream.start(spark, docsDir.toString, dim, Dim, store, ckpt)
-      q.quiesce()
-      assert(q.exception.isEmpty, s"batch failed: ${q.exception}")
-    }
-    def accepted: Set[Long] = spark.read.parquet(s"$store/docs")
-      .select("doc_id").as[Long].collect().toSet
-
     spark.sparkContext.addSparkListener(listener)
     try {
-      // batch 1: doc 4 re-posts doc 3 inside the batch (higher id drops)
-      stage(docsDir, work, "a", Seq(
-        1L -> words("tok", 0, 30), 2L -> words("alpha", 0, 30),
-        3L -> words("beta", 0, 20), 4L -> words("beta", 0, 20)))
+      stage("a", batch1)
       runBatch()
       assert(accepted === Set(1L, 2L, 3L), "batch 1 keep/drop")
 
-      // batch 2 against batch-1 survivors: doc 11 is an exact re-post
-      // of doc 2 (the banding channel), doc 12 a 10-token excerpt of
-      // doc 1 (Jaccard ≈ 0.29, so only the containment probe finds
-      // it), doc 13 is new
-      stage(docsDir, work, "b", Seq(
-        11L -> words("alpha", 0, 30), 12L -> words("tok", 10, 20),
-        13L -> words("gamma", 0, 25)))
+      stage("b", batch2)
       runBatch()
       assert(accepted === Set(1L, 2L, 3L, 13L), "batch 2 keep/drop")
       val arrived = Set(1L, 2L, 3L, 4L, 11L, 12L, 13L)
@@ -114,5 +147,82 @@ class DedupStreamBatchSpec extends AnyFunSuite with SparkSpec {
         s"a per-batch plan description reached ${longest.get()} chars " +
           s"(bound $MaxPlanChars): batch frames are nesting their plans again")
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("each micro-batch launches no more Spark jobs than its measured budget") {
+    val in = new Ingest("graft_dstream_jobs")
+    import in.{accepted, runBatch, stage}
+    /** Jobs started while `run` runs (the stream's start, its one
+      * micro-batch and its shutdown, none of the staging around it),
+      * and how many of them belong to no query. A query's jobs run in
+      * its own SQL execution, nested under the micro-batch's; a job in
+      * no nested execution is not a query's work — parquet footer
+      * inference (`spark.read.parquet` without a schema) is one.
+      */
+    def jobsOf(run: => Unit): (Int, Int) = {
+      val (_, started) = jobsDuring(run)
+      val outsideQueries = started.count { e =>
+        val props = Option(e.properties)
+        val exec = props.flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+        exec.isEmpty ||
+          exec == props.flatMap(p => Option(p.getProperty("spark.sql.execution.root.id")))
+      }
+      (started.size, outsideQueries)
+    }
+    stage("a", batch1)
+    val (first, firstOutside) = jobsOf(runBatch())
+    assert(accepted === Set(1L, 2L, 3L), "batch 1 keep/drop")
+    stage("b", batch2)
+    val (second, secondOutside) = jobsOf(runBatch())
+    assert(accepted === Set(1L, 2L, 3L, 13L), "batch 2 keep/drop")
+    info(s"jobs per micro-batch: first $first ($firstOutside in no query), " +
+      s"with history $second ($secondOutside in no query)")
+    assert(firstOutside === 0 && secondOutside === 0,
+      "a micro-batch ran jobs that belong to no query (footer inference?)")
+    assert(first <= MaxFirstBatchJobs,
+      s"the first micro-batch launched $first jobs (bound $MaxFirstBatchJobs)")
+    assert(second <= MaxHistoryBatchJobs,
+      s"the history micro-batch launched $second jobs (bound $MaxHistoryBatchJobs)")
+  }
+
+  test("every store artifact reads the same rows with its declared schema as inferred") {
+    // soft dedup and the lexical channel on, so every sliced artifact
+    // exists (dupedges, lexpost, lexdf, lexconsts included)
+    val in = new Ingest("graft_dstream_schemas")
+    in.stage("a", batch1)
+    in.runBatch(softDedup = true, lexIndex = true)
+    in.stage("b", batch2)
+    in.runBatch(softDedup = true, lexIndex = true)
+    assert(in.accepted === Set(1L, 2L, 3L, 4L, 11L, 12L, 13L),
+      "soft mode keeps every arrival")
+
+    def check(when: String): Unit = DedupStream.storeSchemas.foreach {
+      case (name, schema) =>
+        val dir = s"${in.store}/$name"
+        val inferred = spark.read.parquet(dir)
+        val declared = DedupStream.readOrEmpty(spark, dir, schema)
+        val data = schema.fields.filterNot(_.name == "batch").toSeq
+        val dataCols = data.map(f => col(f.name))
+        assert(inferred.schema.fields.filterNot(_.name == "batch")
+          .map(f => f.name -> f.dataType).toSeq ===
+          data.map(f => f.name -> f.dataType),
+          s"$when: $name slices are written as ${inferred.schema.simpleString}, " +
+            s"declared ${schema.simpleString}")
+        val empty = DedupStream.readOrEmpty(spark, s"${in.work}/absent_$name", schema)
+        assert(empty.columns.toSeq === declared.columns.toSeq,
+          s"$when: $name reads different columns absent and present")
+        val d = declared.select(dataCols: _*)
+        val i = inferred.select(dataCols: _*)
+        assert(d.count() > 0, s"$when: $name is empty")
+        assert(d.exceptAll(i).isEmpty && i.exceptAll(d).isEmpty,
+          s"$when: $name rows differ between the declared and inferred reads")
+        data.foreach { f =>
+          assert(!d.filter(col(f.name).isNotNull).isEmpty,
+            s"$when: $name.${f.name} reads as all nulls")
+        }
+    }
+    check("after two batches")
+    DedupStream.compactStore(spark, in.store)
+    check("after compaction")
   }
 }

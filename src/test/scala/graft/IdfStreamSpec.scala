@@ -61,4 +61,28 @@ class IdfStreamSpec extends AnyFunSuite with SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     assert(streamed.toSeq === full.toSeq)
   }
+
+  test("currentIdf starts no more jobs over three completed batches than over one") {
+    val docs = Tables.documents(spark, sf)
+    /** State of `files` completed batches (maxFilesPerTrigger = 1). */
+    def stateOf(name: String, files: Int): String = {
+      val work = Files.createTempDirectory(name)
+      val docsDir = work.resolve("docs").toString
+      docs.repartition(files).write.parquet(docsDir)
+      val stateDir = work.resolve("state").toString
+      IdfStream.start(spark, docsDir, stateDir, work.resolve("ckpt").toString)
+        .quiesce()
+      stateDir
+    }
+    val one = stateOf("graft_idfjobs1", 1)
+    val three = stateOf("graft_idfjobs3", 3)
+    val (_, j1) = jobsDuring(IdfStream.currentIdf(spark, one))
+    val (_, j3) = jobsDuring(IdfStream.currentIdf(spark, three))
+    info(s"jobs started by currentIdf: ${j1.size} over one batch, ${j3.size} over three")
+    assert(j3.size <= j1.size,
+      s"currentIdf started ${j3.size} jobs over three batches, ${j1.size} over one")
+    // and the three-batch table is still the full recompute
+    assert(IdfStream.currentIdf(spark, three).collect().toSeq ===
+      IdfStream.currentIdf(spark, one).collect().toSeq)
+  }
 }

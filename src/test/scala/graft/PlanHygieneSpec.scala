@@ -126,6 +126,43 @@ class PlanHygieneSpec extends AnyFunSuite with SparkSpec {
     assert(ops.count(_.startsWith("Generate")) === 1, ops.mkString("\n"))
   }
 
+  test("parallelized reads a shuffled frame's partitions off the plan: it starts no job") {
+    // an aggregate puts a shuffle under the frame; counting partitions
+    // by executing it would run that shuffle's stage as a job
+    val docs = spark.range(0, 400).toDF("doc_id")
+      .withColumn("text", concat(lit("w"), (col("doc_id") % 7).cast("string")))
+      .groupBy("doc_id").agg(max(col("text")).as("text"))
+    val (out, jobs) = jobsDuring(ReferenceQueries.parallelized(docs))
+    assert(jobs.isEmpty, "parallelized executed its input")
+    // the shuffle plans spark.sql.shuffle.partitions (8) partitions,
+    // at least half the cores: no redistribution
+    assert(out eq docs)
+  }
+
+  test("docVectorsByLang over a one-partition input: one doc_id exchange plus the dimension broadcast") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_dv_one")
+      .resolve("docs").toString
+    Seq((1L, "alpha beta alpha gamma", "en"), (2L, "beta gamma delta", "en"),
+      (3L, "hola mundo hola", "es"), (4L, "nothing known here", "de"))
+      .toDF("doc_id", "text", "lang").coalesce(1).write.parquet(dir)
+    val docs = spark.read.parquet(dir)
+    assert(docs.rdd.getNumPartitions === 1)
+    val dim = Seq(("en", "alpha", 1.5, Seq(1.0, 0.0)),
+      ("en", "gamma", 0.5, Seq(0.0, 1.0)), ("es", "hola", 2.0, Seq(1.0, 1.0)))
+      .toDF("lang", "token", "idf", "vec")
+    val df = ReferenceQueries.docVectorsByLang(docs, dim, 2)
+    df.collect()
+    val ops = executedOps(df)
+    val shuffles = ops.filter(_.startsWith("Exchange"))
+    assert(shuffles.size === 1, s"expected one shuffle:\n${ops.mkString("\n")}")
+    assert("""^Exchange hashpartitioning\(doc_id#\d+L, \d+\)""".r
+      .findFirstIn(shuffles.head).isDefined,
+      s"the one shuffle is not keyed on doc_id alone: ${shuffles.head}")
+    assert(ops.count(_.startsWith("BroadcastExchange")) === 1,
+      s"expected the dimension broadcast:\n${ops.mkString("\n")}")
+  }
+
   test("q29 lang-dispatched tokenizer is a pure projection (no UDF, no shuffle before sort)") {
     val p = plan(ReferenceQueries.q29_lang_tokens(spark, sf))
     assert(!p.contains("BatchEvalPython") && !p.toLowerCase.contains("scalaudf"),

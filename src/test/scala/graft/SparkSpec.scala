@@ -46,6 +46,25 @@ trait SparkSpec {
       }
     }
   }
+  /** `body`'s result and the Spark jobs started while it ran, in
+    * start order. The listener bus is drained before and after, so no
+    * earlier job leaks in and none of `body`'s is missed.
+    */
+  def jobsDuring[T](body: => T): (T, Seq[org.apache.spark.scheduler.SparkListenerJobStart]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { started.add(e); () }
+    }
+    org.apache.spark.ListenerBusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.ListenerBusDrain.drain(sc)
+      (r, started.toArray(Array.empty[SparkListenerJobStart]).toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
   /** Fixture root, overridable per-host (round-12 advice: suites must
     * not hardcode this machine's layout when they widen to other SFs).
     */

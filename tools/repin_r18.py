@@ -3,9 +3,9 @@
 
 Usage: python3 tools/repin_r18.py <bench_json_line_file>
 
-Same single-source rule as tools/repin_r17.py: reads ONE bench
-artifact, refuses unless it self-certifies (contended false,
-failed/suspect/watch/family_watch empty, epoch_verdict none,
+Supersedes the round-17 re-pin and keeps its single-source rule:
+reads ONE bench artifact, refuses unless it self-certifies (contended
+false, failed/suspect/watch/family_watch empty, epoch_verdict none,
 steal < 1%), and replaces exactly the touched entries' warm pins plus
 ALL cold:/cpu:/cold_cpu: channel pins verbatim.
 
