@@ -15,8 +15,27 @@ object Tables {
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** One table, read with a declared schema. Inferring a parquet
+    * schema runs a Spark job that reads a footer, so each table's
+    * schema is inferred once per session and memoized, keyed on the
+    * table's [[fileFingerprint]] and on the session's parquet read
+    * settings (`spark.sql.parquet.*`, `spark.sql.legacy.parquet.*`,
+    * which change the inferred types); every later load reads with
+    * that schema and starts no job. A missing table fails as the
+    * plain read does.
+    */
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val fingerprint =
+      try fileFingerprint(spark, sfDir, name)
+      catch { case _: java.io.FileNotFoundException => return spark.read.parquet(path) }
+    val readConf = spark.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }.sorted
+    val schema = Caches.memo(spark, "table-schema", sfDir, name, fingerprint,
+      readConf)(spark.read.parquet(path).schema)(_ => ())
+    spark.read.schema(schema).parquet(path)
+  }
 
   /** Cheap source-identity fingerprint of one table from filesystem
     * METADATA (no data scan): an MD5 digest over the RECURSIVE,

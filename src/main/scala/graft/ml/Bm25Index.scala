@@ -309,11 +309,14 @@ object Bm25Index {
     * per-batch totals. No accepted text is ever re-tokenized.
     */
   def fromStore(spark: SparkSession, storeRoot: String): Index = {
-    val posting = spark.read.parquet(s"$storeRoot/lexpost")
-      .select("token", "doc_id", "tf", "dl")
-    val df = spark.read.parquet(s"$storeRoot/lexdf")
+    // declared schemas: no footer-inference job per artifact
+    def slices(name: String) = spark.read
+      .schema(graft.streaming.DedupStream.storeSchemas.toMap.apply(name))
+      .parquet(s"$storeRoot/$name")
+    val posting = slices("lexpost").select("token", "doc_id", "tf", "dl")
+    val df = slices("lexdf")
       .groupBy("token").agg(sum(col("cnt")).as("df"))
-    val consts = spark.read.parquet(s"$storeRoot/lexconsts")
+    val consts = slices("lexconsts")
       .agg(sum(col("n_docs")).cast("double").as("n"),
         (sum(col("sum_dl")).cast("double") /
           sum(col("n_dl_docs")).cast("double")).as("avgdl"))

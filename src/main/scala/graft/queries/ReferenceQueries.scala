@@ -852,27 +852,51 @@ object ReferenceQueries {
     * zero qualifying posts has no dimension rows — the reference would
     * not deploy a worker for it.
     *
-    * The corpus is tokenized once: each token row carries its post's
-    * `n_chars >= 100` flag, so one (lang, token) aggregate yields both
-    * the vocabulary (every group) and the occurrences (the flagged
-    * rows, 0 for a token seen only in short posts).
+    * The corpus is tokenized once, and one aggregate over it gives
+    * every count the IDF rules read. Each token row carries its post's
+    * `n_chars >= 100` flag, so one (lang, token) group yields both the
+    * vocabulary (every group) and the occurrences (the flagged rows, 0
+    * for a token seen only in short posts). Each post also emits one
+    * null-token sentinel row, even a post with no tokens or null text,
+    * so the null group of a language counts its qualifying posts
+    * (`n_posts`). A small per-language aggregate over those groups
+    * then gives `n_posts` and `min_raw`: raw = log10(n_posts / occ)
+    * falls as occ grows (division and log10 are monotone), so the
+    * smallest raw is the one at the largest occurrence count, or -1
+    * when some token has 0 occurrences — the same value, bit for bit,
+    * as a `min` over every token's raw.
     */
   def wordvecsByLang(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
-    val qualifies = col("n_chars") >= 100
-    val occ = parallelized(docs).select(col("lang"), qualifies.as("q"),
-      explode(Tokenize.tokensByLang(col("text"), col("lang"))).as("token"))
-      .filter(length(col("token")) >= 4)
+    val tokensAndSentinel = concat(array(lit(null).cast("string")),
+      coalesce(Tokenize.tokensByLang(col("text"), col("lang")),
+        array().cast("array<string>")))
+    val occ = parallelized(docs).select(col("lang"),
+      (col("n_chars") >= 100).as("q"), explode(tokensAndSentinel).as("token"))
+      .filter(col("token").isNull || length(col("token")) >= 4)
       .groupBy("lang", "token")
-      .agg(count(when(col("q"), 1)).as("occurrences"))
-    val nDf = docs.filter(qualifies)
-      .groupBy("lang").agg(count(lit(1)).cast("double").as("n_posts"))
-    val raw = occ.join(broadcast(nDf), Seq("lang"))
+      .agg(count(when(col("q"), 1)).as("occurrences"),
+        count(col("token")).as("token_rows"))
+    // tells a token group from a sentinel group by an aggregate, not by
+    // the grouping key: a filter on `token` would be pushed below the
+    // aggregate into one branch only, and the two branches would no
+    // longer share one exchange (the corpus would be tokenized twice)
+    val vocab = col("token_rows") > 0
+    val maxRaw = when(col("max_occ") > 0,
+      log10(col("n_posts") / col("max_occ")))
+    val perLang = occ.groupBy("lang").agg(
+      max(when(!vocab, col("occurrences"))).cast("double").as("n_posts"),
+      max(when(vocab, col("occurrences"))).as("max_occ"),
+      min(when(vocab, col("occurrences"))).as("min_occ"))
+      // a language with no qualifying post gets no dimension rows
+      .filter(col("n_posts") > 0)
+      .select(col("lang"), col("n_posts"),
+        when(col("min_occ") === 0, least(maxRaw, lit(-1.0)))
+          .otherwise(maxRaw).as("min_raw"))
+    occ.filter(vocab).join(broadcast(perLang), Seq("lang"))
       .withColumn("raw",
         when(col("occurrences") > 0, log10(col("n_posts") / col("occurrences")))
           .otherwise(lit(-1.0)))
-    val minDf = raw.groupBy("lang").agg(min(col("raw")).as("min_raw"))
-    raw.join(broadcast(minDf), Seq("lang"))
       .withColumn("idf",
         when(col("raw") > 0, col("raw")).otherwise(col("min_raw")))
       .withColumn("vec", pseudoVec(col("token")))

@@ -659,6 +659,14 @@ object DedupStream {
     "lexdf" -> lexdfSchema, "lexconsts" -> lexconstsSchema,
     "df" -> dfSchema, "stats" -> statsSchema)
 
+  /** The `vectors` store's columns, as `processBatch` upserts them: one
+    * whole-store table, not `batch=N` slices, so not in [[storeSchemas]].
+    */
+  private[graft] val vectorsSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType), StructField("lang", StringType),
+    StructField("known_ratio", DoubleType),
+    StructField("vec", ArrayType(DoubleType, containsNull = false))))
+
   /** Live whole-corpus vocabulary stats from the maintained per-batch
     * slices: one merged sketch row per language — token total,
     * distinct-token HLL, heavy-token sketch, token theta sketch (the
@@ -803,7 +811,7 @@ object DedupStream {
     * vectors are excluded, they have no meaningful direction).
     */
   def storeVectors(spark: SparkSession, storeRoot: String): DataFrame =
-    spark.read.parquet(s"$storeRoot/vectors")
+    spark.read.schema(vectorsSchema).parquet(s"$storeRoot/vectors")
       .filter(col("vec").isNotNull &&
         graft.functions.VecMath.l2norm(col("vec")) > 0)
       .select(col("doc_id").as("vec_id"), col("vec").as("v"))

@@ -3,6 +3,9 @@ package org.apache.spark.sql.graftshim
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.errors.QueryExecutionErrors
+import org.apache.spark.sql.types.FloatType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Bridge to the `private[sql]` Column <-> Expression converters that
   * Spark 4 hid behind `org.apache.spark.sql.classic`. Lives under the
@@ -41,4 +44,13 @@ object CheckpointShim {
 object SessionShim {
   def uuid(spark: org.apache.spark.sql.SparkSession): String =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionUUID
+}
+
+/** The error an ANSI-mode `CAST(s AS FLOAT)` raises on a malformed
+  * string (`CAST_INVALID_INPUT`), for native expressions that parse
+  * floats themselves and must fail exactly like the cast they replace.
+  */
+object CastShim {
+  def invalidFloat(s: UTF8String): Throwable =
+    QueryExecutionErrors.invalidInputInCastToNumberError(FloatType, s, null)
 }

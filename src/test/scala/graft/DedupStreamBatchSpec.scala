@@ -26,7 +26,8 @@ import graft.streaming.{DedupStream, VectorizeStream}
   *     batch's cost is made of (per-job driver overhead), and that none
   *     of them runs outside a query;
   *   - every store artifact's declared schema, which the history reads
-  *     use instead of inferring one from parquet footers.
+  *     and the lexical index and vector store readers use instead of
+  *     inferring one from parquet footers.
   */
 class DedupStreamBatchSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -183,6 +184,28 @@ class DedupStreamBatchSpec extends AnyFunSuite with SparkSpec {
       s"the first micro-batch launched $first jobs (bound $MaxFirstBatchJobs)")
     assert(second <= MaxHistoryBatchJobs,
       s"the history micro-batch launched $second jobs (bound $MaxHistoryBatchJobs)")
+  }
+
+  test("the lexical index and vector store readers start no footer-inference job") {
+    val in = new Ingest("graft_dstream_readers")
+    in.stage("a", batch1)
+    in.runBatch(lexIndex = true)
+    val (index, indexJobs) = jobsDuring(graft.ml.Bm25Index.fromStore(spark, in.store))
+    val (vecs, vecJobs) = jobsDuring(DedupStream.storeVectors(spark, in.store))
+    assert(indexJobs.isEmpty && vecJobs.isEmpty,
+      s"Bm25Index.fromStore started ${indexJobs.size} jobs, " +
+        s"DedupStream.storeVectors ${vecJobs.size}")
+    assert(index.posting.select("doc_id").distinct().as[Long].collect().toSet ===
+      in.accepted)
+    assert(index.consts.head().getDouble(0) === in.accepted.size.toDouble)
+    assert(vecs.select("vec_id").as[Long].collect().toSet === in.accepted)
+    // the declared vector-store schema reads what an inferred read does
+    val dir = s"${in.store}/vectors"
+    val inferred = spark.read.parquet(dir)
+    val declared = spark.read.schema(DedupStream.vectorsSchema).parquet(dir)
+    assert(inferred.schema.map(f => f.name -> f.dataType.simpleString) ===
+      DedupStream.vectorsSchema.map(f => f.name -> f.dataType.simpleString))
+    assert(declared.exceptAll(inferred).isEmpty && inferred.exceptAll(declared).isEmpty)
   }
 
   test("every store artifact reads the same rows with its declared schema as inferred") {

@@ -139,6 +139,28 @@ class PlanHygieneSpec extends AnyFunSuite with SparkSpec {
     assert(out eq docs)
   }
 
+  test("parallelized passes a streaming frame through: docTokens runs inside a stream") {
+    import spark.implicits._
+    // a streaming frame has no physical plan to read partitions off;
+    // asking it for one fails the query
+    val in = java.nio.file.Files.createTempDirectory("graft_tok_stream")
+      .resolve("in").toString
+    Seq((1L, "Alpha beta", "en"), (2L, "beta gamma, gamma", "en"))
+      .toDF("doc_id", "text", "lang").write.parquet(in)
+    val docs = spark.readStream
+      .schema("doc_id LONG, text STRING, lang STRING").parquet(in)
+    assert(ReferenceQueries.parallelized(docs) eq docs)
+    val q = ReferenceQueries.docTokens(docs, persist = false).writeStream
+      .format("memory").queryName("graft_doc_tokens_stream")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.quiesce()
+    assert(q.exception.isEmpty, s"stream failed: ${q.exception}")
+    assert(spark.table("graft_doc_tokens_stream").as[(Long, String)]
+      .collect().sorted.toSeq === Seq(1L -> "alpha", 1L -> "beta",
+        2L -> "beta", 2L -> "gamma", 2L -> "gamma"))
+  }
+
   test("docVectorsByLang over a one-partition input: one doc_id exchange plus the dimension broadcast") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_dv_one")

@@ -17,6 +17,13 @@ import graft.queries.ReferenceQueries
 class WordvecsByLangSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
+  /** Jobs of a repeated dimension build over [[fixture]] at local[8]:
+    * 4 measured. Before `n_posts` folded into the token aggregate and
+    * table schemas were memoized, the same build took 7: a parquet
+    * footer-inference job, and the `n_posts` aggregate and broadcast.
+    */
+  private val MaxDimensionJobs = 5
+
   private def reference(docs: DataFrame): DataFrame = {
     val tok = docs.select(col("doc_id"), col("lang"),
       explode(Tokenize.tokensByLang(col("text"), col("lang"))).as("token"))
@@ -41,7 +48,10 @@ class WordvecsByLangSpec extends AnyFunSuite with SparkSpec {
   /** A documents table with every edge the IDF rules have: a language
     * whose posts are all under 100 chars (de), a token seen only in
     * short posts (en "shortonly"), tokens under 4 chars, a long post
-    * with a null `lang`, and a per-language tokenizer rule (ru).
+    * with a null `lang`, a per-language tokenizer rule (ru), qualifying
+    * posts that contribute no vocabulary (it: no tokens at all; fr:
+    * null text, and only tokens under 4 chars), and a language whose
+    * every token has 0 occurrences (fr).
     */
   private lazy val fixture: String = {
     // padded with a 2-char token, which never enters the vocabulary
@@ -59,9 +69,15 @@ class WordvecsByLangSpec extends AnyFunSuite with SparkSpec {
       (10L, "hallo welt freunde", "de"),
       (11L, "guten morgen", "de"),
       (12L, long("привет мир привет друзья"), "ru"),
-      (13L, long("nulltoken alpha"), null))
+      (13L, long("nulltoken alpha"), null),
+      (14L, "!" * 120, "it"),
+      (15L, long("ciao ciao mondo"), "it"),
+      (16L, null, "fr"),
+      (17L, long("le la de un"), "fr"),
+      (18L, "bonjour monde", "fr"))
     val dir = java.nio.file.Files.createTempDirectory("graft_wvl").toString
-    posts.map { case (id, t, l) => (id, t, l, t.length.toLong) }
+    // a post with null text still declares its length
+    posts.map { case (id, t, l) => (id, t, l, Option(t).fold(150L)(_.length.toLong)) }
       .toDF("doc_id", "text", "lang", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
     dir
@@ -76,7 +92,7 @@ class WordvecsByLangSpec extends AnyFunSuite with SparkSpec {
       .as[(String, String, Double)].collect().sorted
     assert(rows.toSeq === ref.toSeq)
 
-    assert(rows.map(_._1).toSet === Set("en", "es", "ru"))
+    assert(rows.map(_._1).toSet === Set("en", "es", "ru", "it", "fr"))
     assert(rows.forall(_._2.length >= 4))
     val idf = rows.map(r => (r._1, r._2) -> r._3).toMap
     // hand-computed values: Spark's log10 and this JVM's may differ in
@@ -95,5 +111,27 @@ class WordvecsByLangSpec extends AnyFunSuite with SparkSpec {
     near(("es", "perro"), math.log10(4.0 / 3))
     near(("ru", "привет"), math.log10(1.0 / 2))
     near(("ru", "друзья"), math.log10(1.0 / 2))
+    // it: the punctuation-only post counts, so n_posts is 2; ciao's raw
+    // log10(2/2) = 0 is also the language's minimum raw
+    assert(idf(("it", "ciao")) === 0.0)
+    near(("it", "mondo"), math.log10(2.0 / 1))
+    // fr: two qualifying posts (null text, short tokens) and every
+    // token seen only in a short post, so every raw and the min are -1
+    assert(rows.filter(_._1 == "fr").map(r => r._2 -> r._3).toSeq.sorted ===
+      Seq("bonjour" -> -1.0, "monde" -> -1.0))
+  }
+
+  test("the dimension build starts a bounded number of jobs and no footer job") {
+    val dir = fixture
+    def build(): Unit = ReferenceQueries.wordvecsByLang(spark, dir)
+      .write.format("noop").mode("overwrite").save()
+    build() // the first load of a table infers its schema
+    val (_, jobs) = jobsDuring(build())
+    val names = jobs.map(_.stageInfos.map(_.name).mkString(" | "))
+    info(s"${jobs.size} jobs: ${names.mkString("; ")}")
+    assert(!names.exists(_.contains("Tables.scala")),
+      s"a repeated table load inferred its schema again: ${names.mkString("; ")}")
+    assert(jobs.size <= MaxDimensionJobs,
+      s"the dimension build started ${jobs.size} jobs (bound $MaxDimensionJobs)")
   }
 }
