@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.DynamicPruning
 import org.apache.spark.sql.catalyst.optimizer.BuildLeft
-import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
+import org.apache.spark.sql.catalyst.plans.physical.{SinglePartition, UnknownPartitioning}
 import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -113,6 +113,12 @@ object ReferenceQueries {
     * tf window and vector sum share this one exchange), and persisted
     * postings carry it to their doc-keyed consumers. A fixed count
     * would also keep one output file per partition downstream.
+    *
+    * An input whose physical plan already reports `SinglePartition` is
+    * returned unchanged: that is a frame declared small enough to sit
+    * in one partition (a `DedupStream` batch frame under its pin's
+    * size rule), and re-spreading it by `doc_id` would only add a
+    * shuffle that AQE coalesces straight back into one partition.
     */
   private[graft] def parallelized(docs: DataFrame): DataFrame = {
     // a streaming frame has no physical plan of its own — and no
@@ -122,7 +128,9 @@ object ReferenceQueries {
     // docTokens -> here).
     if (docs.isStreaming) return docs
     val target = docs.sparkSession.sparkContext.defaultParallelism
-    if (plannedPartitions(docs.queryExecution.executedPlan).exists(_ >= target / 2)) docs
+    val planned = docs.queryExecution.executedPlan
+    if (planned.outputPartitioning == SinglePartition ||
+        plannedPartitions(planned).exists(_ >= target / 2)) docs
     else docs.repartition(col("doc_id"))
   }
 
@@ -235,15 +243,26 @@ object ReferenceQueries {
     // dimension is exactly the thing to materialize once per session).
     // Caches.persist dedups the consumers' identical canonical plans
     // and Caches.clear(sfDir) releases it by file lineage.
-    graft.Caches.persist(idfTableFresh(spark, sfDir))
+    graft.Caches.persist(idfTableOf(Tables.documents(spark, sfDir)))
 
-  private def idfTableFresh(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = Tables.documents(spark, sfDir)
+  /** [[idfTable]] over a documents frame. Vocabulary and occurrences
+    * both come from the one session posting `docTokens(docs)`: the
+    * occurrences are its rows whose `doc_id` is a qualifying post's,
+    * through a left-semi join against the qualifying ids, so the corpus
+    * is tokenized once. The join carries no broadcast hint: the ids
+    * grow with the corpus, so the planner broadcasts them only when
+    * their statistics say they are small. This relies on `doc_id` being
+    * unique in `docs`, as it is in the documents table: a duplicated
+    * id that one qualifying row carries would count every row's
+    * tokens under it.
+    */
+  private[graft] def idfTableOf(docs: DataFrame): DataFrame = {
     val tok = docTokens(docs)
     val vocab = tok.select("token").distinct().filter(length(col("token")) >= 4)
     val posts = docs.filter(col("lang") === "en" && col("n_chars") >= 100)
     val nDf = posts.agg(count(lit(1)).cast("double").as("n_posts"))
-    val occ = docTokens(posts).groupBy("token").agg(count(lit(1)).as("c"))
+    val occ = tok.join(posts.select("doc_id"), Seq("doc_id"), "left_semi")
+      .groupBy("token").agg(count(lit(1)).as("c"))
     val raw = vocab.join(occ, Seq("token"), "left")
       .withColumn("occurrences", coalesce(col("c"), lit(0L)))
       .crossJoin(broadcast(nDf))

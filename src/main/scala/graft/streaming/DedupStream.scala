@@ -55,6 +55,15 @@ import graft.queries.{ExtensionQueries, ReferenceQueries}
   * no history branch at all. A micro-batch's Spark jobs are then the
   * ones that compute something the batch keeps.
   *
+  * A batch's frames are small, and its cost is the number of jobs it
+  * launches, not the rows it moves. Every frame the batch reads more
+  * than once is [[pin]]ned, and a pin AQE would coalesce into one
+  * partition anyway is declared one partition: the doc-keyed
+  * aggregates, windows and joins over it then plan no shuffle, so
+  * they run no shuffle-map job. Measured at local[8], the first batch
+  * of `DedupStreamBatchSpec` launches 29 jobs and its history batch 48
+  * (46 and 63-64 over plain checkpoints).
+  *
   * Exactly-once: checkpointed file-source offsets make each input
   * file process once per checkpoint lineage, and every per-batch write
   * is idempotent — postings/docs land in a `batch=N` directory that a
@@ -492,7 +501,7 @@ object DedupStream {
   }
 
   /** Lineage cut for a frame that lives only inside one micro-batch:
-    * an eager `localCheckpoint`, so every downstream query plans
+    * an eager local checkpoint, so every downstream query plans
     * against a `LogicalRDD` leaf. `persist()` would keep the full
     * plan under an `InMemoryRelation`, and a cached plan prints its
     * cached plans (AQE's final and initial plan each) — with the
@@ -504,11 +513,41 @@ object DedupStream {
     * is an idempotent `batch=N` overwrite — the exactly-once argument
     * of the object doc, so `Caches.iterCheckpoint`'s reliable mode is
     * not needed.
+    *
+    * Size rule. In Spark 4.1 a checkpoint of an adaptive plan keeps no
+    * output partitioning (`CheckpointShim`), so every doc-keyed
+    * aggregate, window or join over a pinned frame would shuffle it
+    * again — and a batch's frames are small enough that AQE coalesces
+    * each such shuffle back into one partition. The pin's eager job
+    * also measures the bytes a shuffle of the frame would write. When
+    * the checkpoint sits in one partition and AQE would coalesce a
+    * shuffle of it into one partition anyway (coalescing on, and the
+    * bytes at most `spark.sql.adaptive.coalescePartitions
+    * .minPartitionSize`), the frame is returned as ONE declared
+    * partition, and the planner adds no exchange for aggregates and
+    * windows over it, or for joins between two such frames. A larger
+    * frame, or one of several partitions (whose narrow work then stays
+    * spread over its tasks), keeps a plain checkpoint and its
+    * shuffles. The rows are the same either way.
+    *
     * Release with [[unpin]] (`unpersist` is a silent no-op on a
     * checkpoint); a pin that fails mid-batch leaves the earlier pins
     * to the ContextCleaner, since the batch fails and replays anyway.
     */
-  private def pin(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
+  private[graft] def pin(df: DataFrame): DataFrame =
+    org.apache.spark.sql.graftshim.CheckpointShim.localCheckpoint(df)(
+      coalescesToOne(df.sparkSession, _))
+
+  /** Whether AQE would read a shuffle that writes `bytes` as one
+    * partition: it never splits below the minimum partition size.
+    */
+  private def coalescesToOne(spark: SparkSession, bytes: Long): Boolean = {
+    val conf = spark.conf
+    conf.get("spark.sql.adaptive.enabled").toBoolean &&
+      conf.get("spark.sql.adaptive.coalescePartitions.enabled").toBoolean &&
+      bytes <= org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize"))
+  }
 
   /** Release a [[pin]]ned frame's blocks; the frame is unusable after. */
   private[graft] def unpin(df: DataFrame): Unit = {

@@ -13,7 +13,7 @@ import graft.streaming.{DedupStream, VectorizeStream}
 
 /** The always-on ingest end to end inside the default suite: two tiny
   * `DedupStream.start` micro-batches over a hand-built dimension, with
-  * the exact accepted and dropped ids pinned, and three bounds on what
+  * the exact accepted and dropped ids pinned, and four bounds on what
   * the batches cost or leave behind:
   *
   *   - the size of every SQL plan description. It guards the
@@ -27,30 +27,34 @@ import graft.streaming.{DedupStream, VectorizeStream}
   *     of them runs outside a query;
   *   - every store artifact's declared schema, which the history reads
   *     and the lexical index and vector store readers use instead of
-  *     inferring one from parquet footers.
+  *     inferring one from parquet footers;
+  *   - the storage the batches' pins hold, which `unpin` must release.
   */
 class DedupStreamBatchSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
   private val Dim = 4
 
-  /** About twice the measured maximum: 62,328 characters over both
-    * batches (the history verify join, local[8], AQE on). Persisting
-    * the batch frames instead of pinning them measured about 9.4
-    * million.
+  /** About twice the measured maximum before small pins declared one
+    * partition: 62,328 characters over both batches (the history
+    * verify join, local[8], AQE on; 49,097 since). Persisting the
+    * batch frames instead of pinning them measured about 9.4 million.
     */
   private val MaxPlanChars = 125000
 
-  /** Jobs per micro-batch at local[8] (the suite's session): 46 for
-    * the first batch (empty history) and 63-64 for the second (with
+  /** Jobs per micro-batch at local[8] (the suite's session): 29 for
+    * the first batch (empty history) and 48 for the second (with
     * history); the bounds add about 10% for run-to-run AQE re-planning.
-    * Before history reads declared their schemas, an absent artifact
-    * became an empty local relation, the survivors anti-join broadcast
-    * its drops and the posting redistribution was read off the plan,
-    * the same batches launched 58 and 79 jobs.
+    * Before a small pinned frame declared itself one partition, every
+    * doc-keyed aggregate over a pin shuffled it again only for AQE to
+    * coalesce the shuffle back into one partition, and the same
+    * batches launched 46 and 63-64 jobs; before history reads declared
+    * their schemas, an absent artifact became an empty local relation,
+    * the survivors anti-join broadcast its drops and the posting
+    * redistribution was read off the plan, 58 and 79.
     */
-  private val MaxFirstBatchJobs = 51
-  private val MaxHistoryBatchJobs = 70
+  private val MaxFirstBatchJobs = 32
+  private val MaxHistoryBatchJobs = 53
 
   private def words(prefix: String, from: Int, until: Int): String =
     (from until until).map(i => s"$prefix$i").mkString(" ")
@@ -184,6 +188,49 @@ class DedupStreamBatchSpec extends AnyFunSuite with SparkSpec {
       s"the first micro-batch launched $first jobs (bound $MaxFirstBatchJobs)")
     assert(second <= MaxHistoryBatchJobs,
       s"the history micro-batch launched $second jobs (bound $MaxHistoryBatchJobs)")
+  }
+
+  /** Ids of the RDDs the session holds persisted. */
+  private def persistedRdds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  test("a small one-partition pin is one declared partition, and unpin frees it") {
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    val before = persistedRdds
+    val rows = (0L until 100L).map(i => (i, s"w$i"))
+    val p = DedupStream.pin(rows.toDF("doc_id", "text").coalesce(1))
+    assert(p.queryExecution.executedPlan.outputPartitioning === SinglePartition)
+    assert(p.as[(Long, String)].collect().sorted.toSeq === rows)
+    // a pin of several partitions keeps them: its narrow work stays spread
+    val wide = DedupStream.pin(rows.toDF("doc_id", "text").repartition(4))
+    try {
+      assert(wide.queryExecution.executedPlan.outputPartitioning !== SinglePartition)
+      assert(wide.rdd.getNumPartitions === 4)
+    } finally DedupStream.unpin(wide)
+    val held = persistedRdds -- before
+    assert(held.nonEmpty, "the pin persisted nothing")
+    // an empty frame can plan no partition at all: it keeps the plain
+    // checkpoint, which any join still plans against correctly
+    val empty = DedupStream.pin(rows.take(0).toDF("doc_id", "text"))
+    try withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      assert(p.join(empty, Seq("doc_id")).count() === 0)
+    } finally DedupStream.unpin(empty)
+    DedupStream.unpin(p)
+    assert(persistedRdds.intersect(held).isEmpty,
+      s"unpin left the pin's RDDs ${held.mkString(", ")} persisted")
+  }
+
+  test("two micro-batches release every RDD their pins persisted") {
+    // the batches persist nothing but their pins (no gate is given)
+    val before = persistedRdds
+    val in = new Ingest("graft_dstream_release")
+    in.stage("a", batch1)
+    in.runBatch()
+    in.stage("b", batch2)
+    in.runBatch()
+    assert(in.accepted === Set(1L, 2L, 3L, 13L))
+    val left = spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    assert(left.isEmpty, "persisted after the batches: " +
+      left.values.map(r => s"${r.id} ${r.getStorageLevel.description}").mkString("; "))
   }
 
   test("the lexical index and vector store readers start no footer-inference job") {

@@ -185,6 +185,93 @@ class PlanHygieneSpec extends AnyFunSuite with SparkSpec {
       s"expected the dimension broadcast:\n${ops.mkString("\n")}")
   }
 
+  /** Two small frames checkpointed by `pin`, each from an adaptive
+    * plan that shuffles (the Spark 4.1 case whose checkpoint loses its
+    * partitioning), and the exchanges that a doc-keyed aggregate over
+    * the first and a doc_id join of both plan. The join is kept off
+    * broadcast, so it shows the exchanges a sort-merge join needs.
+    */
+  private def shufflesOverPins(
+      pin: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): (Int, Int) = {
+    val a = pin(spark.range(0, 300).toDF("doc_id")
+      .withColumn("w", concat(lit("w"), (col("doc_id") % 11).cast("string")))
+      .repartition(col("doc_id")))
+    // a computed doc_id: a range's own ordering would spare the
+    // aggregate its shuffle and leave the frame several partitions wide
+    val b = pin(spark.range(0, 100).select((col("id") * 3).as("doc_id"))
+      .groupBy("doc_id").agg(count(lit(1)).as("n")))
+    try {
+      def shuffles(df: org.apache.spark.sql.DataFrame): Int = {
+        df.collect()
+        executedOps(df).count(_.startsWith("Exchange"))
+      }
+      val agg = a.groupBy("doc_id").agg(max(col("w")).as("w"))
+      val joined = withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        val j = a.join(b, Seq("doc_id"))
+        assert(j.count() === 100)
+        shuffles(j)
+      }
+      (shuffles(agg), joined)
+    } finally { graft.streaming.DedupStream.unpin(a); graft.streaming.DedupStream.unpin(b) }
+  }
+
+  private val batchPin = graft.streaming.DedupStream.pin _
+  private val plainCheckpoint =
+    (df: org.apache.spark.sql.DataFrame) => df.localCheckpoint(eager = true)
+
+  test("a doc-keyed aggregate and join over two small pins plan no shuffle") {
+    val (agg, join) = shufflesOverPins(batchPin)
+    assert(agg === 0, s"the aggregate over a small pin shuffled ($agg exchanges)")
+    assert(join === 0, s"the join of two small pins shuffled ($join exchanges)")
+    // what the pins save: a plain checkpoint of the same frames shuffles
+    assert(shufflesOverPins(plainCheckpoint) === ((1, 2)))
+  }
+
+  test("pins above the coalescing floor, or with coalescing off, keep a plain checkpoint's exchanges") {
+    Seq("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "16b",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false").foreach { kv =>
+      withConfs(kv) {
+        val pinned = shufflesOverPins(batchPin)
+        assert(pinned === shufflesOverPins(plainCheckpoint), s"with $kv")
+        assert(pinned._2 > 0, s"with $kv the join of two pins planned no exchange")
+      }
+    }
+  }
+
+  test("parallelized returns a one-partition pin untouched and starts no job") {
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    import graft.streaming.DedupStream
+    val docs = batchPin(spark.range(0, 50).toDF("doc_id")
+      .withColumn("text", lit("alpha beta")).repartition(col("doc_id")))
+    try {
+      assert(docs.queryExecution.executedPlan.outputPartitioning === SinglePartition)
+      val (out, jobs) = jobsDuring(ReferenceQueries.parallelized(docs))
+      assert(out eq docs, "parallelized re-spread a one-partition frame")
+      assert(jobs.isEmpty, s"parallelized started ${jobs.size} jobs")
+    } finally DedupStream.unpin(docs)
+  }
+
+  test("the single-language IDF table tokenizes the corpus once: one Generate, caches included") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    // the posting is a session cache, so the explode sits in a cached
+    // plan: walk into each distinct cache once
+    val seen = scala.collection.mutable.Set.empty[SparkPlan]
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case s: QueryStageExec => walk(s.plan)
+      case m: InMemoryTableScanExec =>
+        val cached = m.relation.cachedPlan
+        if (seen.add(cached)) m +: walk(cached) else Seq(m)
+      case other => other +: other.children.flatMap(walk)
+    }
+    val df = ReferenceQueries.idfTableOf(Tables.documents(spark, sf))
+    df.collect()
+    val ops = walk(df.queryExecution.executedPlan).map(_.simpleString(200))
+    assert(ops.count(_.startsWith("Generate")) === 1, ops.mkString("\n"))
+  }
+
   test("q29 lang-dispatched tokenizer is a pure projection (no UDF, no shuffle before sort)") {
     val p = plan(ReferenceQueries.q29_lang_tokens(spark, sf))
     assert(!p.contains("BatchEvalPython") && !p.toLowerCase.contains("scalaudf"),

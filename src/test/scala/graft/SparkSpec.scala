@@ -65,6 +65,16 @@ trait SparkSpec {
       (r, started.toArray(Array.empty[SparkListenerJobStart]).toSeq)
     } finally sc.removeSparkListener(listener)
   }
+  /** Runs `body` with the session confs `kv` set, restoring each after. */
+  def withConfs[T](kv: (String, String)*)(body: => T): T = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
   /** Fixture root, overridable per-host (round-12 advice: suites must
     * not hardcode this machine's layout when they widen to other SFs).
     */

@@ -45,6 +45,30 @@ class WordvecsByLangSpec extends AnyFunSuite with SparkSpec {
       .select("lang", "token", "idf")
   }
 
+  /** The single-language IDF table ([[ReferenceQueries.idfTableOf]])
+    * in its earlier form: the qualifying posts tokenized a second time
+    * for their occurrences.
+    */
+  private def idfReference(docs: DataFrame): DataFrame = {
+    def tokens(d: DataFrame) =
+      d.select(col("doc_id"), explode(Tokenize.tokens(col("text"))).as("token"))
+    val vocab = tokens(docs).select("token").distinct()
+      .filter(length(col("token")) >= 4)
+    val posts = docs.filter(col("lang") === "en" && col("n_chars") >= 100)
+    val nDf = posts.agg(count(lit(1)).cast("double").as("n_posts"))
+    val occ = tokens(posts).groupBy("token").agg(count(lit(1)).as("c"))
+    val raw = vocab.join(occ, Seq("token"), "left")
+      .withColumn("occurrences", coalesce(col("c"), lit(0L)))
+      .crossJoin(broadcast(nDf))
+      .withColumn("raw",
+        when(col("occurrences") > 0, log10(col("n_posts") / col("occurrences")))
+          .otherwise(lit(-1.0)))
+    val minDf = raw.agg(min(col("raw")).as("min_raw"))
+    raw.crossJoin(broadcast(minDf))
+      .withColumn("idf", when(col("raw") > 0, col("raw")).otherwise(col("min_raw")))
+      .select("token", "occurrences", "idf")
+  }
+
   /** A documents table with every edge the IDF rules have: a language
     * whose posts are all under 100 chars (de), a token seen only in
     * short posts (en "shortonly"), tokens under 4 chars, a long post
@@ -119,6 +143,25 @@ class WordvecsByLangSpec extends AnyFunSuite with SparkSpec {
     // token seen only in a short post, so every raw and the min are -1
     assert(rows.filter(_._1 == "fr").map(r => r._2 -> r._3).toSeq.sorted ===
       Seq("bonjour" -> -1.0, "monde" -> -1.0))
+  }
+
+  test("the single-language IDF table equals its two-tokenize-pass form exactly") {
+    Seq(fixture, sf).foreach { dir =>
+      val docs = Tables.documents(spark, dir)
+      // the table's precondition: doc_id is unique
+      assert(docs.select("doc_id").distinct().count() === docs.count(), dir)
+      val got = ReferenceQueries.idfTableOf(docs)
+      assert(got.columns.toSeq === Seq("token", "occurrences", "idf"))
+      val rows = got.as[(String, Long, Double)].collect().sorted
+      val ref = idfReference(docs).as[(String, Long, Double)].collect().sorted
+      assert(rows.nonEmpty && rows.toSeq === ref.toSeq, dir)
+      if (dir == fixture) {
+        // seen only in short posts, and an en token of a null-lang post
+        assert(rows.find(_._1 == "shortonly").map(_._2) === Some(0L))
+        assert(rows.find(_._1 == "nulltoken").map(_._2) === Some(0L))
+        assert(rows.find(_._1 == "alpha").map(_._2) === Some(3L))
+      }
+    }
   }
 
   test("the dimension build starts a bounded number of jobs and no footer job") {
