@@ -7197,9 +7197,9 @@ st AS (SELECT doc_id, count(*) AS n_tokens, avg(length(token)) AS avg_tok_len,
   // ======================================================================
   // x60: INCREMENTAL near-dedup — the arriving-batch shape. At 100 TB a
   // store never re-pairs the whole corpus when a batch lands: the
-  // existing corpus's band postings are a maintained artifact (kept
-  // fresh with Upsert.mergeByKeyPartitioned; band is the partition
-  // key), the new batch computes its own signatures, and the candidate
+  // existing corpus's band postings are a maintained artifact
+  // (DedupStream appends them as `postings/batch=N` slices), the new
+  // batch computes its own signatures, and the candidate
   // join is new-batch × all — O(batch) band probes, not O(corpus²).
   // "New batch" here is the stable 10% slice doc_id % 10 == 7;
   // signature parameters are exactly x02's (k=12 min-md5 over

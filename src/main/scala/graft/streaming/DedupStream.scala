@@ -45,8 +45,9 @@ import graft.queries.{ExtensionQueries, ReferenceQueries}
   *     ONLY through a left-semi join against the candidate hist-id
   *     frame: exact verification re-shingles the handful of history
   *     docs a candidate pair touches, not the corpus.
-  *   - `vectors/` — the same merged doc-vector store VectorizeStream
-  *     maintains, now fed survivors only.
+  *   - `vectors/batch=N/` — the survivors' doc vectors, in the slice
+  *     layout VectorizeStream writes; [[storeVectors]] reads the
+  *     latest row per doc.
   *
   * Every sliced artifact has a declared schema ([[storeSchemas]]), and
   * history is read with it: no footer-inference job per artifact per
@@ -61,14 +62,14 @@ import graft.queries.{ExtensionQueries, ReferenceQueries}
   * partition anyway is declared one partition: the doc-keyed
   * aggregates, windows and joins over it then plan no shuffle, so
   * they run no shuffle-map job. Measured at local[8], the first batch
-  * of `DedupStreamBatchSpec` launches 29 jobs and its history batch 48
+  * of `DedupStreamBatchSpec` launches 29 jobs and its history batch 46
   * (46 and 63-64 over plain checkpoints).
   *
   * Exactly-once: checkpointed file-source offsets make each input
   * file process once per checkpoint lineage, and every per-batch write
-  * is idempotent — postings/docs land in a `batch=N` directory that a
-  * replayed batch OVERWRITES (same batch id, same content), and the
-  * vector store is merge-by-key. A replayed batch must also see the
+  * is idempotent — every artifact, the vectors included, lands in a
+  * `batch=N` directory that a replayed batch OVERWRITES (same batch
+  * id, same content). A replayed batch must also see the
   * same history it saw the first time, so history reads anti-join the
   * current batch's ids: a crash between the postings write and the
   * vector write would otherwise replay the batch against its own
@@ -199,7 +200,7 @@ object DedupStream {
     * against the accepted corpus (and, when a [[ContamGate]] is
     * given, eval-contaminated docs), then vectorize survivors — every
     * language, against the (lang, token)-keyed dimension table — into
-    * `storeRoot/vectors`.
+    * `storeRoot/vectors/batch=N`.
     *
     * `ruleBatteries` runs the Pipeline's rule-battery stage in its
     * STREAMING shape, FIRST in the loop (the cheapest gate goes
@@ -487,10 +488,11 @@ object DedupStream {
                 .write.mode(SaveMode.Overwrite)
                 .parquet(s"$storeRoot/cleandocs/batch=$batchId")
             } finally unpin(seg)
-            val vecs = ReferenceQueries
+            ReferenceQueries
               .docVectorsByLang(survivors, wordvecsLang, dim)
               .select("doc_id", "lang", "known_ratio", "vec")
-            VectorizeStream.upsertStore(spark, vecs, s"$storeRoot/vectors")
+              .write.mode(SaveMode.Overwrite)
+              .parquet(s"$storeRoot/vectors/batch=$batchId")
           } finally {
             unpin(survivors)
             gatePins.foreach(unpin)
@@ -685,10 +687,18 @@ object DedupStream {
     StructField("token_hll", BinaryType), StructField("token_freq", BinaryType),
     StructField("token_theta", BinaryType)))
 
+  private[streaming] val vectorsSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType), StructField("lang", StringType),
+    StructField("known_ratio", DoubleType),
+    StructField("vec", ArrayType(DoubleType)),
+    StructField("batch", LongType)))
+
   /** Every `batch=N`-sliced store artifact with the columns its slices
-    * are written in: what the history reads declare and
-    * [[compactStore]] consolidates. `df`'s schema also declares the
-    * `batch` partition column its replay filter reads.
+    * are written in: what the history and store reads declare and
+    * [[compactStore]] consolidates. `df`'s and `vectors`' schemas also
+    * declare the `batch` partition column: `df`'s replay filter reads
+    * it, and the vector store's latest row per doc is the one of the
+    * highest batch.
     */
   private[graft] val storeSchemas: Seq[(String, StructType)] = Seq(
     "postings" -> bandSchema, "docs" -> keptDocSchema,
@@ -696,15 +706,7 @@ object DedupStream {
     "segown" -> segownSchema, "cleandocs" -> cleanDocSchema,
     "dupedges" -> dupedgeSchema, "lexpost" -> lexpostSchema,
     "lexdf" -> lexdfSchema, "lexconsts" -> lexconstsSchema,
-    "df" -> dfSchema, "stats" -> statsSchema)
-
-  /** The `vectors` store's columns, as `processBatch` upserts them: one
-    * whole-store table, not `batch=N` slices, so not in [[storeSchemas]].
-    */
-  private[graft] val vectorsSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType), StructField("lang", StringType),
-    StructField("known_ratio", DoubleType),
-    StructField("vec", ArrayType(DoubleType, containsNull = false))))
+    "df" -> dfSchema, "stats" -> statsSchema, "vectors" -> vectorsSchema)
 
   /** Live whole-corpus vocabulary stats from the maintained per-batch
     * slices: one merged sketch row per language — token total,
@@ -845,12 +847,14 @@ object DedupStream {
   }
 
   /** The maintained vector store as an ANN-ready (vec_id, v) frame —
-    * every accepted doc's vector, keyed by doc id (the store's vec
+    * every accepted doc's latest vector ([[graft.sources.Upsert
+    * .latestByKey]] over the slices), keyed by doc id (the store's vec
     * column is the array<double> VecAgg emits; null/unknown-only
     * vectors are excluded, they have no meaningful direction).
     */
   def storeVectors(spark: SparkSession, storeRoot: String): DataFrame =
-    spark.read.schema(vectorsSchema).parquet(s"$storeRoot/vectors")
+    graft.sources.Upsert.latestByKey(
+        readOrEmpty(spark, s"$storeRoot/vectors", vectorsSchema), "doc_id")
       .filter(col("vec").isNotNull &&
         graft.functions.VecMath.l2norm(col("vec")) > 0)
       .select(col("doc_id").as("vec_id"), col("vec").as("v"))
@@ -1073,7 +1077,9 @@ object DedupStream {
     * is for flat tables, specialized to the store's partitioned
     * replay contract: df rows re-aggregate by hash (their batch
     * identity existed only for replay), stats slices merge
-    * sketch-wise, doc-keyed artifacts rewrite verbatim.
+    * sketch-wise, vectors fold to the latest row per doc (so the
+    * consolidated `batch=-1` slice sorts below every later batch's),
+    * other doc-keyed artifacts rewrite verbatim.
     *
     * Crash-safe per artifact: consolidated slice written to a temp
     * sibling, row-count (or merge-shape) validated, then swapped by
@@ -1091,7 +1097,9 @@ object DedupStream {
         sum(col("sum_dl")).as("sum_dl"))),
       "df" -> ((df: DataFrame) => df.groupBy("h").agg(sum(col("cnt")).as("cnt"))),
       "stats" -> ((df: DataFrame) =>
-        graft.sources.SketchStore.merge(Seq(df), Seq("lang"))))
+        graft.sources.SketchStore.merge(Seq(df), Seq("lang"))),
+      "vectors" -> ((df: DataFrame) =>
+        graft.sources.Upsert.latestByKey(df, "doc_id")))
     storeSchemas.flatMap { case (name, schema) =>
       val dir = s"$storeRoot/$name"
       val p = new org.apache.hadoop.fs.Path(dir)
@@ -1100,7 +1108,8 @@ object DedupStream {
       else {
         val data = StructType(schema.filterNot(_.name == "batch"))
         val out = consolidate.getOrElse(name, identity[DataFrame] _)(
-          readOrEmpty(spark, dir, data))
+          readOrEmpty(spark, dir, schema))
+          .select(data.fieldNames.toIndexedSeq.map(col): _*)
         val expected = out.count()
         val tmp = s"$dir.compact.tmp"
         fs.delete(new org.apache.hadoop.fs.Path(tmp), true)

@@ -43,8 +43,10 @@ class DedupStreamBatchSpec extends AnyFunSuite with SparkSpec {
   private val MaxPlanChars = 125000
 
   /** Jobs per micro-batch at local[8] (the suite's session): 29 for
-    * the first batch (empty history) and 48 for the second (with
+    * the first batch (empty history) and 46 for the second (with
     * history); the bounds add about 10% for run-to-run AQE re-planning.
+    * The history batch launched 48 while it merged the whole vector
+    * store into a rewritten copy instead of writing its own slice.
     * Before a small pinned frame declared itself one partition, every
     * doc-keyed aggregate over a pin shuffled it again only for AQE to
     * coalesce the shuffle back into one partition, and the same
@@ -54,7 +56,7 @@ class DedupStreamBatchSpec extends AnyFunSuite with SparkSpec {
     * redistribution was read off the plan, 58 and 79.
     */
   private val MaxFirstBatchJobs = 32
-  private val MaxHistoryBatchJobs = 53
+  private val MaxHistoryBatchJobs = 51
 
   private def words(prefix: String, from: Int, until: Int): String =
     (from until until).map(i => s"$prefix$i").mkString(" ")
@@ -79,11 +81,14 @@ class DedupStreamBatchSpec extends AnyFunSuite with SparkSpec {
       ("en", t, 1.0 + i, Seq.tabulate(Dim)(j => if (j == i % Dim) 1.0 else 0.0))
     }.toDF("lang", "token", "idf", "vec")
 
-  /** A fresh watched directory, store and checkpoint. */
-  private final class Ingest(name: String) {
+  /** A fresh watched directory, store and checkpoint; the store is
+    * named by a bare path, or by a `file:` URI when `uri` is set.
+    */
+  private final class Ingest(name: String, uri: Boolean = false) {
     val work: Path = Files.createTempDirectory(name)
     val docsDir: Path = Files.createDirectory(work.resolve("docs_in"))
-    val store: String = work.resolve("store").toString
+    val store: String =
+      if (uri) work.resolve("store").toUri.toString else work.resolve("store").toString
     val ckpt: String = work.resolve("ckpt").toString
     private val dim = dimension
 
@@ -246,13 +251,39 @@ class DedupStreamBatchSpec extends AnyFunSuite with SparkSpec {
       in.accepted)
     assert(index.consts.head().getDouble(0) === in.accepted.size.toDouble)
     assert(vecs.select("vec_id").as[Long].collect().toSet === in.accepted)
-    // the declared vector-store schema reads what an inferred read does
-    val dir = s"${in.store}/vectors"
-    val inferred = spark.read.parquet(dir)
-    val declared = spark.read.schema(DedupStream.vectorsSchema).parquet(dir)
-    assert(inferred.schema.map(f => f.name -> f.dataType.simpleString) ===
-      DedupStream.vectorsSchema.map(f => f.name -> f.dataType.simpleString))
-    assert(declared.exceptAll(inferred).isEmpty && inferred.exceptAll(declared).isEmpty)
+  }
+
+  test("a store named by a file: URI ingests two batches") {
+    val in = new Ingest("graft_dstream_uri", uri = true)
+    assert(in.store.startsWith("file:"))
+    in.stage("a", batch1)
+    in.runBatch()
+    in.stage("b", batch2)
+    in.runBatch()
+    assert(in.accepted === Set(1L, 2L, 3L, 13L))
+    assert(DedupStream.storeVectors(spark, in.store).select("vec_id")
+      .as[Long].collect().sorted.toSeq === in.accepted.toSeq.sorted)
+  }
+
+  test("the vector store reads the latest row per doc, before and after compaction") {
+    val store = Files.createTempDirectory("graft_dstream_latest").resolve("store").toString
+    def slice(batch: Long, rows: (Long, Seq[Double])*): Unit =
+      rows.map { case (id, v) => (id, "en", 1.0, v) }
+        .toDF("doc_id", "lang", "known_ratio", "vec")
+        .write.parquet(s"$store/vectors/batch=$batch")
+    def latest: Map[Long, Seq[Double]] = DedupStream.storeVectors(spark, store)
+      .as[(Long, Seq[Double])].collect().toMap
+    slice(0L, 1L -> Seq(1.0, 0.0), 2L -> Seq(0.0, 1.0))
+    slice(1L, 1L -> Seq(3.0, 3.0))
+    assert(latest === Map(1L -> Seq(3.0, 3.0), 2L -> Seq(0.0, 1.0)))
+    DedupStream.compactStore(spark, store)
+    assert(Files.list(Paths.get(store, "vectors")).toArray.map(_.toString)
+      .filter(_.contains("batch=")).map(p => Paths.get(p).getFileName.toString)
+      .toSeq === Seq("batch=-1"))
+    assert(latest === Map(1L -> Seq(3.0, 3.0), 2L -> Seq(0.0, 1.0)))
+    // a batch after compaction still wins over the consolidated slice
+    slice(2L, 2L -> Seq(5.0, 5.0))
+    assert(latest === Map(1L -> Seq(3.0, 3.0), 2L -> Seq(5.0, 5.0)))
   }
 
   test("every store artifact reads the same rows with its declared schema as inferred") {
@@ -266,8 +297,14 @@ class DedupStreamBatchSpec extends AnyFunSuite with SparkSpec {
     assert(in.accepted === Set(1L, 2L, 3L, 4L, 11L, 12L, 13L),
       "soft mode keeps every arrival")
 
-    def check(when: String): Unit = DedupStream.storeSchemas.foreach {
-      case (name, schema) =>
+    def check(when: String): Unit = {
+      // every artifact a batch writes is declared: none escapes the
+      // declared reads and compaction
+      val written = Files.list(Paths.get(in.store)).toArray.map(_.asInstanceOf[Path])
+        .filter(Files.isDirectory(_)).map(_.getFileName.toString).toSet
+      assert(written -- DedupStream.storeSchemas.map(_._1) === Set.empty[String],
+        s"$when: store artifacts missing from storeSchemas")
+      DedupStream.storeSchemas.foreach { case (name, schema) =>
         val dir = s"${in.store}/$name"
         val inferred = spark.read.parquet(dir)
         val declared = DedupStream.readOrEmpty(spark, dir, schema)
@@ -290,6 +327,7 @@ class DedupStreamBatchSpec extends AnyFunSuite with SparkSpec {
           assert(!d.filter(col(f.name).isNotNull).isEmpty,
             s"$when: $name.${f.name} reads as all nulls")
         }
+      }
     }
     check("after two batches")
     DedupStream.compactStore(spark, in.store)

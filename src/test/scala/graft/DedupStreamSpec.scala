@@ -389,7 +389,8 @@ class DedupStreamSpec extends AnyFunSuite with SparkSpec {
       "shpost" -> Seq("h", "doc_id"),
       "docn" -> Seq("doc_id", "n_sh"),
       "segown" -> Seq("h", "owner"),
-      "cleandocs" -> Seq("doc_id", "n_dropped", "cleaned_text"))
+      "cleandocs" -> Seq("doc_id", "n_dropped", "cleaned_text"),
+      "vectors" -> Seq("doc_id", "lang", "known_ratio", "vec"))
     val before = arts.map { case (n, cs) => n -> artifact(n, cs) }.toMap
     val dfBefore = spark.read.parquet(s"$store/df")
       .groupBy("h").agg(sum(col("cnt")).as("c")).collect()
@@ -657,9 +658,9 @@ class DedupStreamSpec extends AnyFunSuite with SparkSpec {
     stage(docsDir, work, "a", col("doc_id") < 250)
     DedupStream.start(spark, docsDir.toString, wordvecs, 8, store, ckpt)
       .quiesce()
-    // localCheckpoint: batch 2's upsert REWRITES the vectors store, and
-    // a plain persist over the same path would serve batch-1 rows to
-    // the later fresh read via canonical-plan cache matching
+    // localCheckpoint: batch 2 adds a slice under the same vectors
+    // path, and a plain persist of this read could serve batch-1 rows
+    // to the later fresh read via canonical-plan cache matching
     val baseVecs = DedupStream.storeVectors(spark, store).localCheckpoint(true)
     val base = graft.ml.IvfPq.buildFrom(spark, baseVecs,
       nLists = 4, m = 4, ksub = 4)
@@ -859,7 +860,7 @@ class DedupStreamSpec extends AnyFunSuite with SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(kept === expect, "stream gating diverged from the batch rules")
     // survivors were vectorized; casualties were not
-    val vecIds = spark.read.parquet(s"$store/vectors")
+    val vecIds = graft.streaming.VectorizeStream.readStore(spark, s"$store/vectors")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(vecIds === kept.keySet)
   }
@@ -952,13 +953,13 @@ class DedupStreamSpec extends AnyFunSuite with SparkSpec {
     // ---- CONTENT churn under stable vec_ids (round-12 advice: an
     // id-presence gate alone would keep serving): scale one stored
     // vector in place — ids identical, growth zero — and the content
-    // signature must force a refit
+    // signature must force a refit. The churned row lands as a later
+    // slice than any the stream wrote, as a re-vectorized doc would.
     val vecsDir = s"$store/vectors"
-    val cur = spark.read.parquet(vecsDir).localCheckpoint(true)
-    cur.withColumn("vec",
-        when(col("doc_id") === 900101L,
-          transform(col("vec"), x => x * 2.0)).otherwise(col("vec")))
-      .write.mode("overwrite").parquet(vecsDir)
+    graft.streaming.VectorizeStream.readStore(spark, vecsDir)
+      .filter(col("doc_id") === 900101L)
+      .withColumn("vec", transform(col("vec"), x => x * 2.0))
+      .write.parquet(s"$vecsDir/batch=1000")
     val (v5, refit5) = DedupStream.maintainAnnQuantizers(
       spark, store, ixRoot, nLists = 4, m = 4, ksub = 4)
     assert(v5 > v4 && refit5,

@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The 100 TB upsert recipe Upsert.scala's docs point to: with
-  * dynamic partition overwrite, a batch write replaces ONLY the
-  * partitions it contains rows for — untouched partitions survive
+/** Spark's partition-targeted write: with dynamic partition
+  * overwrite, a batch write replaces ONLY the partitions it contains
+  * rows for — untouched partitions survive
   * byte-for-byte, so a day-partitioned store absorbs a late batch
   * without rewriting history.
   */

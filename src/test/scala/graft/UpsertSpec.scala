@@ -62,11 +62,28 @@ class UpsertSpec extends AnyFunSuite with SparkSpec {
     assert(rows === Seq((1L, "b", true), (2L, "c", false)))
   }
 
-  test("overwriteParquet is idempotent") {
+  test("a replayed batch=N slice overwrites itself and reads back once") {
     val dir = java.nio.file.Files.createTempDirectory("graft_upsert").toString
     val df = Seq((1L, "x"), (2L, "y")).toDF("id", "v")
-    Upsert.overwriteParquet(df, dir)
-    Upsert.overwriteParquet(df, dir) // second write must not fail/dup
-    assert(spark.read.parquet(dir).count() === 2)
+    df.write.mode("overwrite").parquet(s"$dir/batch=0")
+    df.write.mode("overwrite").parquet(s"$dir/batch=0") // the replay
+    assert(Upsert.latestByKey(spark.read.parquet(dir), "id").count() === 2)
+  }
+
+  test("latestByKey: the highest batch wins the whole row, even a NULL value") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_latest").toString
+    def slice(batch: Long, rows: (Long, Option[String], Double)*): Unit =
+      rows.toDF("id", "name", "score").write.parquet(s"$dir/batch=$batch")
+    // batch=-1 is a compacted slice: every later batch sorts above it
+    slice(-1L, (1L, Some("a"), 1.0), (2L, Some("b"), 2.0))
+    slice(0L, (2L, None, 20.0), (3L, Some("c"), 3.0))
+    slice(3L, (1L, Some("z"), 10.0))
+    val latest = Upsert.latestByKey(spark.read.parquet(dir), "id")
+    assert(latest.columns.toSeq === Seq("id", "name", "score", "batch"))
+    assert(latest.select("id", "name", "score")
+      .as[(Long, Option[String], Double)].collect().sortBy(_._1) === Array(
+        (1L, Some("z"), 10.0),
+        (2L, None, 20.0), // the NULL is the later row's, not coalesced away
+        (3L, Some("c"), 3.0)))
   }
 }

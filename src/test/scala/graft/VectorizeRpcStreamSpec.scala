@@ -77,7 +77,7 @@ class VectorizeRpcStreamSpec extends AnyFunSuite with SparkSpec {
 
       // the RPC-composed stream lands exactly the batch q12 vectors
       val batch = graft.queries.ReferenceQueries.q12_doc_vectors(spark, sf)
-      val streamed = spark.read.parquet(store)
+      val streamed = VectorizeStream.readStore(spark, store)
       assert(streamed.count() === batch.count())
       def r6(c: org.apache.spark.sql.Column) = floor(c * 1e6 + lit(0.5)) / 1e6
       val s = streamed.select(col("doc_id"), r6(col("known_ratio")).as("kr"))

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -27,7 +28,7 @@ class VectorizeStreamSpec extends AnyFunSuite with SparkSpec {
       store, ckpt)
     q.quiesce()
 
-    val streamed = spark.read.parquet(store)
+    val streamed = VectorizeStream.readStore(spark, store)
     val batch = graft.queries.ReferenceQueries.docVectorsByLang(
       Tables.documents(spark, sf), wvl, 8)
     assert(streamed.count() === batch.count())
@@ -52,42 +53,112 @@ class VectorizeStreamSpec extends AnyFunSuite with SparkSpec {
     val q2 = VectorizeStream.start(spark, docsDir.toString, wvl, 8,
       store, work.resolve("ckpt2").toString)
     q2.quiesce()
-    assert(spark.read.parquet(store).count() === batch.count())
+    assert(VectorizeStream.readStore(spark, store).count() === batch.count())
   }
 
-  test("upsertStore swap recovers the store from every crash window") {
+  /** Stage `half` of the corpus as ONE arrival file `name.parquet`. */
+  private def stage(work: java.nio.file.Path, name: String,
+      half: DataFrame): Unit = {
+    val tmp = work.resolve(s"stage_$name")
+    half.coalesce(1).write.parquet(tmp.toString)
+    val part = Files.list(tmp).toArray.map(_.toString)
+      .filter(_.endsWith(".parquet")).head
+    Files.copy(Paths.get(part), work.resolve("docs").resolve(s"$name.parquet"))
+    ()
+  }
+
+  /** (doc_id, lang, known_ratio) -> vec of a vector store. */
+  private def storeRows(store: String): Map[(Long, String, Double), Seq[Double]] =
+    VectorizeStream.readStore(spark, store)
+      .select("doc_id", "lang", "known_ratio", "vec").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)) -> r.getSeq[Double](3))
+      .toMap
+
+  test("a crash between a slice write and the stream's commit replays to the same store") {
+    val work = Files.createTempDirectory("graft_vcrash")
+    Files.createDirectory(work.resolve("docs"))
+    val docsDir = work.resolve("docs").toString
+    val store = work.resolve("store").toString
+    val ckpt = work.resolve("ckpt").toString
+    val wvl = graft.queries.ReferenceQueries.wordvecsByLang(spark, sf)
+    val docs = Tables.documents(spark, sf)
+    def run(): org.apache.spark.sql.streaming.StreamingQuery = {
+      val q = VectorizeStream.start(spark, docsDir, wvl, 8, store, ckpt)
+      q.quiesce()
+      assert(q.exception.isEmpty, s"stream failed: ${q.exception}")
+      q
+    }
+
+    stage(work, "a", docs.filter(col("doc_id") < 250))
+    run()
+    stage(work, "b", docs.filter(col("doc_id") >= 250))
+    run()
+    val uninterrupted = storeRows(store)
+    assert(uninterrupted.size === docs.count())
+
+    // the crash: batch 1's slice write had started but the stream never
+    // committed the batch — its commit entry is gone, one of its part
+    // files never landed, and the writer's _temporary/ is left behind
+    Files.delete(Paths.get(ckpt, "commits", "1"))
+    Files.deleteIfExists(Paths.get(ckpt, "commits", ".1.crc"))
+    val slice = Paths.get(store, "batch=1")
+    val parts = Files.list(slice).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+    assert(parts.nonEmpty, "batch 1 wrote no part file")
+    Files.delete(parts.head)
+    Files.deleteIfExists(slice.resolve("_SUCCESS"))
+    Files.write(Files.createDirectories(slice.resolve("_temporary/0"))
+      .resolve("part-stray.parquet"), Array[Byte](1, 2, 3))
+
+    // restart from the SAME checkpoint: batch 1 replays and overwrites
+    // its own slice; batch 0's slice is never touched
+    val q = run()
+    assert(q.recentProgress.filter(_.numInputRows > 0).map(_.batchId).toSeq === Seq(1L),
+      "the restart must replay exactly the uncommitted batch 1")
+    assert(!Files.exists(slice.resolve("_temporary")))
+    val replayed = storeRows(store)
+    assert(replayed.keySet === uninterrupted.keySet)
+    uninterrupted.foreach { case (k, v) =>
+      assert(replayed(k).zip(v).forall { case (x, y) => math.abs(x - y) <= 1e-12 },
+        s"doc ${k._1}: the replayed vector differs")
+    }
+  }
+
+  test("a doc re-vectorized in a later batch reads back its new vector") {
     import spark.implicits._
-    def store(dir: java.nio.file.Path) = dir.resolve("vectors").toString
-    def ids(path: String): Set[Long] =
-      spark.read.parquet(path).select("doc_id").as[Long].collect().toSet
-    def upsert(path: String, docIds: Long*): Unit =
-      VectorizeStream.upsertStore(spark,
-        docIds.map(i => (i, 1.0, Array(i.toFloat))).toDF("doc_id", "known_ratio", "vec"),
-        path)
+    val work = Files.createTempDirectory("graft_vupsert")
+    Files.createDirectory(work.resolve("docs"))
+    val store = work.resolve("store").toString
+    val dim = 4
+    val wvl = Seq("tok0", "tok1", "tok2", "tok3").zipWithIndex.map { case (t, i) =>
+      ("en", t, 1.0 + i, Seq.tabulate(dim)(j => if (j == i) 1.0 else 0.0))
+    }.toDF("lang", "token", "idf", "vec")
+    def docs(rows: (Long, String)*): DataFrame =
+      rows.map { case (id, text) => (id, text, "en", "test", text.length.toLong) }
+        .toDF(VectorizeStream.docSchema.fieldNames.toIndexedSeq: _*)
+    def vecOf(store: String, id: Long): Seq[Double] =
+      VectorizeStream.readStore(spark, store).filter(col("doc_id") === id)
+        .select("vec").as[Seq[Double]].collect().toSeq match {
+          case Seq(v) => v
+          case vs => fail(s"doc $id has ${vs.size} rows in the store")
+        }
 
-    // crash AFTER store->retired, BEFORE tmp->store: the store is
-    // missing but .retired holds the accepted history — the replayed
-    // batch must restore it and re-merge, not start a fresh store
-    // (the old delete-then-move swap lost all prior batches here)
-    val w1 = Files.createTempDirectory("graft_swap1")
-    upsert(store(w1), 1L, 2L)
-    Files.move(Paths.get(store(w1)), Paths.get(store(w1) + ".retired"))
-    upsert(store(w1), 3L)
-    assert(ids(store(w1)) === Set(1L, 2L, 3L))
-    assert(!Files.exists(Paths.get(store(w1) + ".retired")))
-
-    // crash AFTER tmp->store, BEFORE retired cleanup: the swap
-    // completed — recovery discards the stale .retired and the
-    // replayed batch re-merges idempotently
-    val w2 = Files.createTempDirectory("graft_swap2")
-    upsert(store(w2), 1L, 2L)
-    upsert(store(w2), 3L)
-    val stale = Paths.get(store(w2) + ".retired")
-    Files.createDirectory(stale)
-    Files.write(stale.resolve("junk"), Array[Byte](1))
-    upsert(store(w2), 3L)
-    assert(ids(store(w2)) === Set(1L, 2L, 3L))
-    assert(!Files.exists(stale))
+    stage(work, "a", docs(1L -> "tok0 tok0", 2L -> "tok1"))
+    VectorizeStream.start(spark, work.resolve("docs").toString, wvl, dim,
+      store, work.resolve("ckpt").toString).quiesce()
+    assert(vecOf(store, 1L) === Seq(1.0, 0.0, 0.0, 0.0))
+    // doc 1 arrives again with new text; doc 2 is untouched
+    stage(work, "b", docs(1L -> "tok2 tok3"))
+    VectorizeStream.start(spark, work.resolve("docs").toString, wvl, dim,
+      store, work.resolve("ckpt").toString).quiesce()
+    assert(vecOf(store, 1L) === Seq(0.0, 0.0, 1.5, 2.0))
+    assert(vecOf(store, 2L) === Seq(0.0, 2.0, 0.0, 0.0))
+    // a later row wins whole, even when its vector is NULL ($set)
+    Seq((1L, "en", 0.0, Option.empty[Seq[Double]]))
+      .toDF("doc_id", "lang", "known_ratio", "vec")
+      .write.parquet(s"$store/batch=2")
+    assert(vecOf(store, 1L) === null)
+    assert(VectorizeStream.readStore(spark, store).count() === 2)
   }
 
   test("restart from the SAME checkpoint processes only newly-arrived files") {
@@ -127,6 +198,6 @@ class VectorizeStreamSpec extends AnyFunSuite with SparkSpec {
     // final store equals the oracle-checked batch pipeline over the full corpus
     val batch = graft.queries.ReferenceQueries.docVectorsByLang(
       Tables.documents(spark, sf), wordvecs, 8)
-    assert(spark.read.parquet(store).count() === batch.count())
+    assert(VectorizeStream.readStore(spark, store).count() === batch.count())
   }
 }
