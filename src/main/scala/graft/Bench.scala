@@ -311,8 +311,8 @@ object Bench {
       // The round-17 session caches (r17 verdict #1: their first-touch
       // build cost had no deterministic probe). Each appended probe
       // adds exactly ONE cold family on top of the previous probes'
-      // warm state: q11 builds the idf dimension (idfTable) over the
-      // docTokens posting it warms; x02 builds the MinHash band frame
+      // warm state: q11 builds the idf dimension (idfTable) from its
+      // own one-pass token counts; x02 builds the MinHash band frame
       // (sharedBands) on top of x04's shingle posting; x29 runs the
       // dup-closure loop to convergence and memoizes the labels
       // (the "closure" memo); x82 fits+caches the quality-model feature frame
@@ -322,7 +322,7 @@ object Bench {
       "q11_idf", "x02_dedup_minhash", "x29_dup_clusters",
       "x82_quality_model", "x144_bitext_mining",
       // x03 builds the round-18 shared (doc, token, cnt) rollup
-      // (docTokenCounts) on top of the q11-warmed token posting; x101
+      // (docTokenCounts) over the docTokens posting; x101
       // builds the shared dense batch-ranking frame (denseBatchRanks)
       // on top of the x96-warmed BM25 artifact
       "x03_dedup_simhash", "x101_hybrid_batch")

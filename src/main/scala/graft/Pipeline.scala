@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.queries.{AnalyticsQueries, ExtensionQueries, ReferenceQueries}
 import graft.sources.VersionedStore
-import graft.streaming.Observe
+import graft.streaming.{DedupStream, Observe}
 
 /** End-to-end training-data pipeline over one corpus snapshot — the
   * "a reference user could switch" demo, wiring the library's stages
@@ -47,7 +47,8 @@ import graft.streaming.Observe
   *   6. doc vectors for the final corpus (the reference's E1
   *      flagship), per-language: each doc tokenized by its own
   *      language's rule and joined to its own language's word-vector
-  *      table (q32's `docVectorsByLang` core)
+  *      table (q32's `docVectorsByLang` core); a doc with no known
+  *      token is published with a NULL vector (F12)
   *   7. sequence packing of the final corpus into fixed-size training
   *      sequences (the x59 pack-then-chunk shape, survivor-only)
   *   8. publish masked documents + vectors + packing + vocabulary
@@ -485,10 +486,10 @@ object Pipeline {
       // end (q32's core): each doc tokenized by its own language's
       // rule, joined to its own language's word-vector table, the way
       // the reference runs one worker per language
-      val vecs = ReferenceQueries.docVectorsByLang(
-        corpus, ReferenceQueries.wordvecsByLang(spark, sfDir),
-        ReferenceQueries.VecDim)
-        .select(col("doc_id"), col("lang"), col("known_ratio"), col("vec"))
+      val vecs = DedupStream.storeVectorRows(
+          ReferenceQueries.docVectorsByLang(
+            corpus, ReferenceQueries.wordvecsByLang(spark, sfDir),
+            ReferenceQueries.VecDim))
         .observe(vectorsObs, count(lit(1)).as("n_rows"))
 
       // 7. pack ONLY the final corpus into training sequences (no

@@ -177,8 +177,9 @@ object ReferenceQueries {
     * index a text engine would maintain anyway; MEMORY_AND_DISK degrades
     * to spill, not OOM.
     *
-    * `persist = false` exists for per-micro-batch callers (docVectors
-    * under the streaming vectorizer): each micro-batch has a fresh
+    * `persist = false` exists for per-micro-batch callers (the
+    * lexical posting of a `DedupStream` batch, the quality gate's
+    * token pairs): each micro-batch has a fresh
     * plan, so persisting would register a new never-unpersisted cache
     * entry per trigger — an unbounded leak over a long-running stream.
     * Batch queries still share the cache entries registered by the
@@ -233,84 +234,123 @@ object ReferenceQueries {
     * else min(raw over all vocab). `calculate_idf_scores.py:28-77`.
     */
   private def idfTable(spark: SparkSession, sfDir: String): DataFrame =
-    // Session-shared like the posting it derives from: the idf table
-    // is the engine's stand-in for the reference's PRECOMPUTED
-    // word-vector store (`fasttext.word-vectors-<lang>`, written once
-    // by enter_wordvecs.py and only ever READ by the workers), yet six
-    // declared queries (q11/q12/q15/q21/q30/q32) and the streaming
-    // vectorizer each re-derived it per call — two posting aggregates
-    // + two scalar-agg passes every time (guide §2.4: the vocab-sized
-    // dimension is exactly the thing to materialize once per session).
-    // Caches.persist dedups the consumers' identical canonical plans
-    // and Caches.clear(sfDir) releases it by file lineage.
+    // The idf table is the engine's stand-in for the reference's
+    // PRECOMPUTED word-vector store (`fasttext.word-vectors-<lang>`,
+    // written once by enter_wordvecs.py and only ever READ by the
+    // workers), yet six declared queries (q11/q12/q15/q21/q30/q32) and
+    // the streaming vectorizer each re-derived it per call (guide §2.4:
+    // the vocab-sized dimension is exactly the thing to materialize
+    // once per session). Caches.persist dedups the consumers'
+    // identical canonical plans and Caches.clear(sfDir) releases it by
+    // file lineage.
     graft.Caches.persist(idfTableOf(Tables.documents(spark, sfDir)))
 
-  /** [[idfTable]] over a documents frame. Vocabulary and occurrences
-    * both come from the one session posting `docTokens(docs)`: the
-    * occurrences are its rows whose `doc_id` is a qualifying post's,
-    * through a left-semi join against the qualifying ids, so the corpus
-    * is tokenized once. The join carries no broadcast hint: the ids
-    * grow with the corpus, so the planner broadcasts them only when
-    * their statistics say they are small. This relies on `doc_id` being
-    * unique in `docs`, as it is in the documents table: a duplicated
-    * id that one qualifying row carries would count every row's
-    * tokens under it.
+  /** [[idfTable]] over a documents frame: [[idfOf]] over the counts
+    * [[idfBatchState]] takes in one pass over `docs`. When no post
+    * qualifies, every vocabulary token has 0 occurrences and idf -1.
     */
-  private[graft] def idfTableOf(docs: DataFrame): DataFrame = {
-    val tok = docTokens(docs)
-    val vocab = tok.select("token").distinct().filter(length(col("token")) >= 4)
-    val posts = docs.filter(col("lang") === "en" && col("n_chars") >= 100)
-    val nDf = posts.agg(count(lit(1)).cast("double").as("n_posts"))
-    val occ = tok.join(posts.select("doc_id"), Seq("doc_id"), "left_semi")
-      .groupBy("token").agg(count(lit(1)).as("c"))
-    val raw = vocab.join(occ, Seq("token"), "left")
-      .withColumn("occurrences", coalesce(col("c"), lit(0L)))
-      .crossJoin(broadcast(nDf))
+  private[graft] def idfTableOf(docs: DataFrame): DataFrame =
+    idfOf(idfBatchState(docs), Nil)
+
+  /** The IDF counts of `docs`, from one tokenize pass and one
+    * aggregate: per (keys…, token) of length >= 4, `occurrences` (the
+    * token's rows from posts where `qualifies` holds) and `token_rows`
+    * (all its rows). Each post also emits one null-token row, even a
+    * post with no tokens or null text, so each key's null-token group
+    * holds that key's qualifying-post count in `occurrences` and 0 in
+    * `token_rows`. Counts are sums of per-post rows, so the counts of
+    * two disjoint corpora summed by (keys…, token) are the counts of
+    * their union ([[summedCounts]]).
+    */
+  private[graft] def idfCounts(docs: DataFrame, keys: Seq[String],
+      tokens: Column, qualifies: Column): DataFrame = {
+    val tokensAndSentinel = concat(array(lit(null).cast("string")),
+      coalesce(tokens, array().cast("array<string>")))
+    parallelized(docs).select(keys.map(col) ++ Seq(qualifies.as("q"),
+        explode(tokensAndSentinel).as("token")): _*)
+      .filter(col("token").isNull || length(col("token")) >= 4)
+      .groupBy((keys :+ "token").map(col): _*)
+      .agg(count(when(col("q"), 1)).as("occurrences"),
+        count(col("token")).as("token_rows"))
+  }
+
+  /** The reference IDF rule (quirks A2 + F6,
+    * `calculate_idf_scores.py:28-77`) over [[idfCounts]]-shaped
+    * `counts`, per key: (keys…, token, occurrences, idf) for every
+    * vocabulary token (`token_rows > 0`). raw = log10(n_posts / occ),
+    * or -1 when occ is 0; idf = raw when raw > 0, else the key's
+    * smallest raw. A small per-key aggregate gives `n_posts` (the
+    * null-token group) and that smallest raw: raw falls as occ grows
+    * (division and log10 are monotone), so it is the raw at the
+    * largest occurrence count, or -1 when some token has 0
+    * occurrences — the same value, bit for bit, as a `min` over every
+    * token's raw. A key with no qualifying post gets no rows, as the
+    * reference deploys no worker for it; with no keys the table covers
+    * the whole corpus and a corpus with no qualifying post keeps every
+    * token at -1.
+    */
+  private[graft] def idfOf(counts: DataFrame, keys: Seq[String]): DataFrame = {
+    // tells a token group from a sentinel group by an aggregate, not by
+    // the grouping key: a filter on `token` would be pushed below the
+    // aggregate into one branch only, and the two branches would no
+    // longer share one exchange (the corpus would be tokenized twice)
+    val vocab = col("token_rows") > 0
+    val maxRaw = when(col("max_occ") > 0,
+      log10(col("n_posts") / col("max_occ")))
+    val perKey = counts.groupBy(keys.map(col): _*).agg(
+      max(when(!vocab, col("occurrences"))).cast("double").as("n_posts"),
+      max(when(vocab, col("occurrences"))).as("max_occ"),
+      min(when(vocab, col("occurrences"))).as("min_occ"))
+    val floors = (if (keys.isEmpty) perKey else perKey.filter(col("n_posts") > 0))
+      .select(keys.map(col) ++ Seq(col("n_posts"),
+        when(col("min_occ") === 0, least(maxRaw, lit(-1.0)))
+          .otherwise(maxRaw).as("min_raw")): _*)
+    val tokens = counts.filter(vocab)
+    (if (keys.isEmpty) tokens.crossJoin(broadcast(floors))
+     else tokens.join(broadcast(floors), keys))
       .withColumn("raw",
         when(col("occurrences") > 0, log10(col("n_posts") / col("occurrences")))
           .otherwise(lit(-1.0)))
-    val minDf = raw.agg(min(col("raw")).as("min_raw"))
-    raw.crossJoin(broadcast(minDf))
       .withColumn("idf",
         when(col("raw") > 0, col("raw")).otherwise(col("min_raw")))
-      .select("token", "occurrences", "idf")
+      .select(keys.map(col) ++ Seq(col("token"), col("occurrences"), col("idf")): _*)
   }
 
-  /** The E1 core (`worker.py:69-94`), reusable by batch q12/q15 and the
-    * streaming vectorizer: per-doc tf over `docs`, left-join a
-    * `(token, idf, vec)` word-vector dimension (broadcast), axpy-sum via
-    * the custom Aggregator. Returns
-    * (doc_id, total, known, known_ratio, vec) with vec NULL-semantics
-    * deferred to callers (known=0 -> all-zero vec, F12).
+  /** The E1 core (`worker.py:69-94`) behind every doc-vector path: per
+    * doc, tokenize `docs` with `tokens`, take tf, left-join the
+    * broadcast word-vector dimension `wordvecs` on `joinKeys`
+    * (`token`, or `lang, token` for a per-language dimension) and
+    * axpy-sum Σ tf·idf·vec through the custom Aggregator. Returns
+    * (doc_id, the join keys but `token`…, total, known, vec,
+    * known_ratio); a doc with no known token has known = 0 and an
+    * all-zero vec, which a store writes as NULL (F12,
+    * [[graft.streaming.DedupStream.storeVectorRows]]). The token count,
+    * tf window and vector sum share one `doc_id` exchange.
     */
-  def docVectors(docs: DataFrame, wordvecs: DataFrame, dim: Int): DataFrame =
-    // no persist: called per micro-batch by the streaming vectorizer
-    // (see docTokens doc); the token rows are consumed exactly once here
-    docVectorsFromTok(docTokens(docs, persist = false), wordvecs, dim)
-
-  /** [[docVectors]] over an explicit `(doc_id, token)` posting table —
-    * lets callers swap the tokenizer (q30 feeds the per-language rules).
-    */
-  private[queries] def docVectorsFromTok(tok: DataFrame, wordvecs: DataFrame,
-      dim: Int): DataFrame = {
+  private[graft] def docVectorsOf(docs: DataFrame, tokens: Column,
+      wordvecs: DataFrame, joinKeys: Seq[String], dim: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val counts = tok.groupBy("doc_id", "token").agg(count(lit(1)).as("cnt"))
+    val docKeys = "doc_id" +: joinKeys.filterNot(_ == "token")
+    val counts = parallelized(docs)
+      .select(docKeys.map(col) :+ explode(tokens).as("token"): _*)
+      .groupBy(("doc_id" +: joinKeys).map(col): _*)
+      .agg(count(lit(1)).as("cnt"))
     val w = Window.partitionBy("doc_id")
     val tf = counts.withColumn("total", sum(col("cnt")).over(w))
       .withColumn("tf", col("cnt").cast("double") / col("total"))
-    val joined = tf.join(broadcast(wordvecs), Seq("token"), "left")
-    joined.groupBy("doc_id").agg(
-      max(col("total")).as("total"),
-      count(col("idf")).as("known"),
-      VecAgg.weightedSum(dim)(
-        coalesce(col("tf") * col("idf"), lit(0.0)),
-        coalesce(col("vec"), VecMath.zeros(dim))).as("vec"))
+    tf.join(broadcast(wordvecs), joinKeys, "left")
+      .groupBy(docKeys.map(col): _*).agg(
+        max(col("total")).as("total"),
+        count(col("idf")).as("known"),
+        VecAgg.weightedSum(dim)(
+          coalesce(col("tf") * col("idf"), lit(0.0)),
+          coalesce(col("vec"), VecMath.zeros(dim))).as("vec"))
       .withColumn("known_ratio",
         when(col("total") > 0, col("known").cast("double") / col("total"))
           .otherwise(lit(0.0)))
   }
 
-  /** Scalar projections of [[docVectors]] for oracle hashing. */
+  /** Scalar projections of [[docVectorsOf]] for oracle hashing. */
   private def docVectorScalars(dv: DataFrame): DataFrame =
     dv.select(
       col("doc_id"),
@@ -492,9 +532,11 @@ object ReferenceQueries {
 
   // E2/A2/A7/A8/F5/F6: the IDF pipeline with every reference quirk.
   def q11_idf(spark: SparkSession, sfDir: String): DataFrame =
-    idfTable(spark, sfDir)
-      .select(col("token"), col("occurrences"),
-        round(col("idf"), 6).as("idf"))
+    idfRows(idfTable(spark, sfDir))
+
+  /** q11's output over an IDF table: idf rounded, token order. */
+  private[graft] def idfRows(idf: DataFrame): DataFrame =
+    idf.select(col("token"), col("occurrences"), round(col("idf"), 6).as("idf"))
       .orderBy("token")
 
   val q11Sql: String =
@@ -505,54 +547,31 @@ object ReferenceQueries {
   // x52: incremental idf maintenance — the scale answer to the
   // reference's periodic full recompute (`calculate_idf_scores.py`
   // re-reads the whole corpus each run). At 100 TB the corpus arrives
-  // in batches; each batch contributes ASSOCIATIVE state (vocab set,
-  // qualifying-post count, per-token occurrence counts) and the idf
-  // table is rebuilt from merged state without re-tokenizing history.
+  // in batches; each batch contributes summable counts and the idf
+  // table is rebuilt from their sum without re-tokenizing history.
   // Here the corpus splits into two deterministic "batches" (doc_id %
-  // 10), each batch's state is computed independently, merged (set
-  // union / scalar add / counts-by-key sum), and run through the
-  // reference idf formula. The ORACLE is the DIRECT full recompute
-  // (q11's SQL) — the hash match proves the merge algebra is exact.
-  /** Per-batch associative idf state: (vocab tokens, qualifying-post
-    * count, per-token occurrence counts). Shared by x52 and the
-    * streaming idf maintainer (streaming/IdfStream).
+  // 10), each batch's counts are computed independently, summed, and
+  // run through the reference idf rule. The ORACLE is the DIRECT full
+  // recompute (q11's SQL) — the hash match proves the sum is exact.
+  /** One batch's q11 IDF counts ([[idfCounts]]: ASCII tokens; a post
+    * qualifies when it is `en` with n_chars >= 100). Shared by x52,
+    * [[idfTableOf]] and the streaming idf maintainer
+    * (streaming/IdfStream).
     */
-  private[graft] def idfBatchState(d: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val tok = docTokens(d, persist = false)
-    val vocab = tok.select("token").distinct().filter(length(col("token")) >= 4)
-    val posts = d.filter(col("lang") === "en" && col("n_chars") >= 100)
-    val n = posts.agg(count(lit(1)).as("n"))
-    val occ = docTokens(posts, persist = false)
-      .groupBy("token").agg(count(lit(1)).as("c"))
-    (vocab, n, occ)
-  }
+  private[graft] def idfBatchState(d: DataFrame): DataFrame =
+    idfCounts(d, Nil, Tokenize.tokens(col("text")),
+      col("lang") === "en" && col("n_chars") >= 100)
 
-  /** The reference idf formula over MERGED state — (token, occurrences,
-    * idf) rounded and token-ordered, exactly q11's shape.
-    */
-  private[graft] def idfFromState(vocab: DataFrame, nn: DataFrame,
-      occ: DataFrame): DataFrame = {
-    val nPosts = nn.agg(sum(col("n")).cast("double").as("n_posts"))
-    val occR = occ.groupBy("token").agg(sum(col("c")).as("c"))
-    val raw = vocab.distinct().join(occR, Seq("token"), "left")
-      .withColumn("occurrences", coalesce(col("c"), lit(0L)))
-      .crossJoin(broadcast(nPosts))
-      .withColumn("raw",
-        when(col("occurrences") > 0, log10(col("n_posts") / col("occurrences")))
-          .otherwise(lit(-1.0)))
-    val minDf = raw.agg(min(col("raw")).as("min_raw"))
-    raw.crossJoin(broadcast(minDf))
-      .withColumn("idf",
-        when(col("raw") > 0, col("raw")).otherwise(col("min_raw")))
-      .select(col("token"), col("occurrences"), round(col("idf"), 6).as("idf"))
-      .orderBy("token")
-  }
+  /** Per-batch [[idfBatchState]] counts summed into their union's. */
+  private[graft] def summedCounts(deltas: DataFrame): DataFrame =
+    deltas.groupBy("token").agg(sum(col("occurrences")).as("occurrences"),
+      sum(col("token_rows")).as("token_rows"))
 
   def x52_incremental_idf(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
-    val (vb, nb, ob) = idfBatchState(docs.filter(col("doc_id") % 10 =!= 0))
-    val (vd, nd, od) = idfBatchState(docs.filter(col("doc_id") % 10 === 0))
-    idfFromState(vb.union(vd), nb.union(nd), ob.union(od))
+    val deltas = idfBatchState(docs.filter(col("doc_id") % 10 =!= 0))
+      .union(idfBatchState(docs.filter(col("doc_id") % 10 === 0)))
+    idfRows(idfOf(summedCounts(deltas), Nil))
   }
 
   // E1: the flagship doc-vector pipeline (`worker.py:69-94`): tf ->
@@ -570,7 +589,8 @@ object ReferenceQueries {
 
   def q12_doc_vectors(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir).filter(col("lang") === "en")
-    docVectorScalars(docVectors(docs, wordvecs8(spark, sfDir), VecDim))
+    docVectorScalars(docVectorsOf(docs, Tokenize.tokens(col("text")),
+      wordvecs8(spark, sfDir), Seq("token"), VecDim))
   }
 
   val q12Sql: String =
@@ -610,7 +630,8 @@ object ReferenceQueries {
       .select(col("vec_id"), VecMath.asDouble(col("embedding")).as("vec"))
     val wv = ranked.join(emb, ranked("rank") === emb("vec_id"))
       .select("token", "idf", "vec")
-    docVectorScalars(docVectors(docs, wv, 64))
+    docVectorScalars(
+      docVectorsOf(docs, Tokenize.tokens(col("text")), wv, Seq("token"), 64))
   }
 
   val q15Sql: String =
@@ -812,9 +833,8 @@ object ReferenceQueries {
   // hash it — the map column itself is the user-facing output.
   def q30_doc_vector_map(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
-    val tok = docs.select(col("doc_id"),
-      explode(Tokenize.tokensByLang(col("text"), col("lang"))).as("token"))
-    val dv = docVectorsFromTok(tok, wordvecs8(spark, sfDir), VecDim)
+    val dv = docVectorsOf(docs, Tokenize.tokensByLang(col("text"), col("lang")),
+      wordvecs8(spark, sfDir), Seq("token"), VecDim)
     val withMap = dv.join(docs.select("doc_id", "lang"), Seq("doc_id"))
       .select(col("doc_id"), col("lang"),
         map(col("lang"),
@@ -867,89 +887,31 @@ object ReferenceQueries {
     * occurrence counts, and idf (quirks A2 + F6) computed WITHIN that
     * language, exactly what the reference's per-collection idf job
     * produces (`calculate_idf_scores.py:28-77` runs per deployment),
-    * stacked into one (lang, token, idf, vec) frame. A language with
-    * zero qualifying posts has no dimension rows — the reference would
-    * not deploy a worker for it.
-    *
-    * The corpus is tokenized once, and one aggregate over it gives
-    * every count the IDF rules read. Each token row carries its post's
-    * `n_chars >= 100` flag, so one (lang, token) group yields both the
-    * vocabulary (every group) and the occurrences (the flagged rows, 0
-    * for a token seen only in short posts). Each post also emits one
-    * null-token sentinel row, even a post with no tokens or null text,
-    * so the null group of a language counts its qualifying posts
-    * (`n_posts`). A small per-language aggregate over those groups
-    * then gives `n_posts` and `min_raw`: raw = log10(n_posts / occ)
-    * falls as occ grows (division and log10 are monotone), so the
-    * smallest raw is the one at the largest occurrence count, or -1
-    * when some token has 0 occurrences — the same value, bit for bit,
-    * as a `min` over every token's raw.
+    * stacked into one (lang, token, idf, vec) frame: [[idfOf]] keyed
+    * by `lang` over [[idfCounts]] from one per-language tokenize pass
+    * (a post qualifies when n_chars >= 100). A language with zero
+    * qualifying posts has no dimension rows — the reference would not
+    * deploy a worker for it.
     */
   def wordvecsByLang(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = Tables.documents(spark, sfDir)
-    val tokensAndSentinel = concat(array(lit(null).cast("string")),
-      coalesce(Tokenize.tokensByLang(col("text"), col("lang")),
-        array().cast("array<string>")))
-    val occ = parallelized(docs).select(col("lang"),
-      (col("n_chars") >= 100).as("q"), explode(tokensAndSentinel).as("token"))
-      .filter(col("token").isNull || length(col("token")) >= 4)
-      .groupBy("lang", "token")
-      .agg(count(when(col("q"), 1)).as("occurrences"),
-        count(col("token")).as("token_rows"))
-    // tells a token group from a sentinel group by an aggregate, not by
-    // the grouping key: a filter on `token` would be pushed below the
-    // aggregate into one branch only, and the two branches would no
-    // longer share one exchange (the corpus would be tokenized twice)
-    val vocab = col("token_rows") > 0
-    val maxRaw = when(col("max_occ") > 0,
-      log10(col("n_posts") / col("max_occ")))
-    val perLang = occ.groupBy("lang").agg(
-      max(when(!vocab, col("occurrences"))).cast("double").as("n_posts"),
-      max(when(vocab, col("occurrences"))).as("max_occ"),
-      min(when(vocab, col("occurrences"))).as("min_occ"))
-      // a language with no qualifying post gets no dimension rows
-      .filter(col("n_posts") > 0)
-      .select(col("lang"), col("n_posts"),
-        when(col("min_occ") === 0, least(maxRaw, lit(-1.0)))
-          .otherwise(maxRaw).as("min_raw"))
-    occ.filter(vocab).join(broadcast(perLang), Seq("lang"))
-      .withColumn("raw",
-        when(col("occurrences") > 0, log10(col("n_posts") / col("occurrences")))
-          .otherwise(lit(-1.0)))
-      .withColumn("idf",
-        when(col("raw") > 0, col("raw")).otherwise(col("min_raw")))
+    val counts = idfCounts(Tables.documents(spark, sfDir), Seq("lang"),
+      Tokenize.tokensByLang(col("text"), col("lang")), col("n_chars") >= 100)
+    idfOf(counts, Seq("lang"))
       .withColumn("vec", pseudoVec(col("token")))
       .select("lang", "token", "idf", "vec")
   }
 
-  /** [[docVectors]] for a mixed-language corpus: per-language
-    * tokenization, dimension join on (lang, token), same tf/axpy core.
-    * `docs` needs (doc_id, text, lang). Output adds `lang` to the
-    * [[docVectors]] shape. The dimension stays a broadcast — per-lang
-    * vocabularies are each bounded the same way the single table is
-    * (vocab bound, BASELINE.md) and the stacked frame is their sum.
+  /** [[docVectorsOf]] for a mixed-language corpus: per-language
+    * tokenization, dimension join on (lang, token). `docs` needs
+    * (doc_id, text, lang); the output carries `lang`. The dimension
+    * stays a broadcast — per-lang vocabularies are each bounded the
+    * same way the single table is (vocab bound, BASELINE.md) and the
+    * stacked frame is their sum.
     */
   def docVectorsByLang(docs: DataFrame, wordvecsLang: DataFrame,
-      dim: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val tok = parallelized(docs).select(col("doc_id"), col("lang"),
-      explode(Tokenize.tokensByLang(col("text"), col("lang"))).as("token"))
-    val counts = tok.groupBy("doc_id", "lang", "token")
-      .agg(count(lit(1)).as("cnt"))
-    val w = Window.partitionBy("doc_id")
-    val tf = counts.withColumn("total", sum(col("cnt")).over(w))
-      .withColumn("tf", col("cnt").cast("double") / col("total"))
-    val joined = tf.join(broadcast(wordvecsLang), Seq("lang", "token"), "left")
-    joined.groupBy("doc_id", "lang").agg(
-      max(col("total")).as("total"),
-      count(col("idf")).as("known"),
-      VecAgg.weightedSum(dim)(
-        coalesce(col("tf") * col("idf"), lit(0.0)),
-        coalesce(col("vec"), VecMath.zeros(dim))).as("vec"))
-      .withColumn("known_ratio",
-        when(col("total") > 0, col("known").cast("double") / col("total"))
-          .otherwise(lit(0.0)))
-  }
+      dim: Int): DataFrame =
+    docVectorsOf(docs, Tokenize.tokensByLang(col("text"), col("lang")),
+      wordvecsLang, Seq("lang", "token"), dim)
 
   /** The mixed-corpus per-language vector query — q30's
     * `map<lang, binary>` output shape over [[docVectorsByLang]] with

@@ -488,9 +488,8 @@ object DedupStream {
                 .write.mode(SaveMode.Overwrite)
                 .parquet(s"$storeRoot/cleandocs/batch=$batchId")
             } finally unpin(seg)
-            ReferenceQueries
-              .docVectorsByLang(survivors, wordvecsLang, dim)
-              .select("doc_id", "lang", "known_ratio", "vec")
+            storeVectorRows(
+                ReferenceQueries.docVectorsByLang(survivors, wordvecsLang, dim))
               .write.mode(SaveMode.Overwrite)
               .parquet(s"$storeRoot/vectors/batch=$batchId")
           } finally {
@@ -692,6 +691,16 @@ object DedupStream {
     StructField("known_ratio", DoubleType),
     StructField("vec", ArrayType(DoubleType)),
     StructField("batch", LongType)))
+
+  /** A doc-vector frame ([[ReferenceQueries.docVectorsOf]]) as rows of
+    * [[vectorsSchema]] before the `batch` column: (doc_id, lang,
+    * known_ratio, vec), with a NULL `vec` for a doc with no known
+    * token, as the reference stores `doc_vectors=None` (F12,
+    * `worker.py:90`). Every vector-store writer projects through it.
+    */
+  private[graft] def storeVectorRows(dv: DataFrame): DataFrame =
+    dv.select(col("doc_id"), col("lang"), col("known_ratio"),
+      when(col("known") > 0, col("vec")).as("vec"))
 
   /** Every `batch=N`-sliced store artifact with the columns its slices
     * are written in: what the history and store reads declare and

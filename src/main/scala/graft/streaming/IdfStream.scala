@@ -10,26 +10,27 @@ import graft.queries.ReferenceQueries
 /** Continuous idf maintenance — the streaming form of the reference's
   * periodic `calculate_idf_scores.py` job (and of the batch x52 merge).
   *
-  * Each micro-batch contributes ASSOCIATIVE state — vocab tokens,
-  * qualifying-post count, per-token occurrence counts — written as an
-  * APPEND-ONLY per-batch delta directory (`state/batch=<id>/…`) with a
+  * Each micro-batch contributes its IDF counts
+  * ([[ReferenceQueries.idfBatchState]]: per token, occurrences and
+  * rows; a null-token row with the qualifying-post count), written as
+  * an APPEND-ONLY per-batch delta `state/batch=<id>/counts` with a
   * `_done` marker committed last. Append-only is what makes replay
   * exactly-once: foreachBatch is at-least-once, and a replayed batch
   * simply overwrites its own delta with identical deterministic
   * content before re-marking it — no read-modify-write fold exists to
   * double-count, and a crash at ANY point leaves either a complete
   * marked delta or an unmarked one the replay rewrites. `currentIdf`
-  * reduces across all marked deltas through the same reference
-  * formula the batch queries use, so the streamed result is
-  * bit-identical to a full recompute (IdfStreamSpec pins that against
-  * the oracle-checked q11).
+  * sums all marked deltas by token and runs the one reference rule
+  * ([[ReferenceQueries.idfOf]]) over the sum, so the streamed result
+  * is bit-identical to a full recompute (IdfStreamSpec pins that
+  * against the oracle-checked q11).
   *
   * At 100 TB: per-batch work is proportional to the BATCH (tokenize +
   * one shuffle), each delta is vocabulary-sized, and serving reads
-  * reduce over #batches deltas — compact old deltas into one (the
-  * merge is the same associative union) when the batch count grows.
-  * All metadata I/O goes through the Hadoop FileSystem of the state
-  * path, so the store works wherever the parquet does.
+  * sum over #batches deltas — compacting old deltas into one is the
+  * same sum, written once. All metadata I/O goes through the Hadoop
+  * FileSystem of the state path, so the store works wherever the
+  * parquet does.
   */
 object IdfStream {
 
@@ -49,13 +50,11 @@ object IdfStream {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val dir = s"$stateDir/batch=$id"
-        val (vocab, n, occ) = ReferenceQueries.idfBatchState(batch)
         // overwrite, not errorifexists: a replayed batch regenerates
         // the identical delta, and a half-written delta from a crash
         // is simply rewritten before the marker goes back down
-        vocab.write.mode("overwrite").parquet(s"$dir/vocab")
-        n.write.mode("overwrite").parquet(s"$dir/n")
-        occ.write.mode("overwrite").parquet(s"$dir/occ")
+        ReferenceQueries.idfBatchState(batch)
+          .write.mode("overwrite").parquet(s"$dir/counts")
         val fs = fsOf(batch.sparkSession, dir)
         fs.create(new Path(dir, "_done"), true).close()
       }
@@ -73,26 +72,19 @@ object IdfStream {
       .map(_.getPath.toString)
   }
 
-  /** The columns [[ReferenceQueries.idfBatchState]] writes per delta
-    * part: vocab tokens, the qualifying-post count, occurrence counts.
-    */
-  private val partSchemas: Map[String, StructType] = Map(
-    "vocab" -> StructType(Seq(StructField("token", StringType))),
-    "n" -> StructType(Seq(StructField("n", LongType))),
-    "occ" -> StructType(Seq(StructField("token", StringType),
-      StructField("c", LongType))))
+  /** The columns [[ReferenceQueries.idfBatchState]] writes per delta. */
+  private val countsSchema = StructType(Seq(StructField("token", StringType),
+    StructField("occurrences", LongType), StructField("token_rows", LongType)))
 
   /** The serving idf table from all completed deltas (q11's shape).
-    * Parts are read with their declared schemas, so building the table
-    * runs no footer-inference job per part per batch.
+    * The deltas are read with their declared schema, so building the
+    * table runs no footer-inference job per batch.
     */
   def currentIdf(spark: SparkSession, stateDir: String): DataFrame = {
     val dirs = doneBatches(spark, stateDir)
     require(dirs.nonEmpty, s"no completed idf state under $stateDir")
-    def readAll(part: String): DataFrame =
-      dirs.map(d => spark.read.schema(partSchemas(part)).parquet(s"$d/$part"))
-        .reduce(_.unionByName(_))
-    ReferenceQueries.idfFromState(
-      readAll("vocab"), readAll("n"), readAll("occ"))
+    val deltas = spark.read.schema(countsSchema).parquet(dirs.map(d => s"$d/counts"): _*)
+    ReferenceQueries.idfRows(
+      ReferenceQueries.idfOf(ReferenceQueries.summedCounts(deltas), Nil))
   }
 }

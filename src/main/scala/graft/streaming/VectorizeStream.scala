@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
+import graft.functions.Tokenize
 import graft.queries.ReferenceQueries
 import graft.sources.Upsert
 
@@ -15,12 +16,13 @@ import graft.sources.Upsert
   * is unset, vectorize a micro-batch, upsert doc vectors + flag.
   * Spark-native: a file stream of documents is the unbounded source
   * (checkpointed offsets replace the job-flag "offset", §2.10), each
-  * micro-batch runs the SAME plan as the batch q12 pipeline via
-  * [[ReferenceQueries.docVectors]], and `foreachBatch` writes its
-  * vectors as the store's `batch=N` slice. A replayed batch overwrites
-  * its own slice with the same rows, so at-least-once delivery
-  * composes to exactly-once; [[readStore]] reads the latest row per
-  * doc, the reference's `$set` upsert.
+  * micro-batch runs the SAME doc-vector core as the batch queries
+  * ([[ReferenceQueries.docVectorsOf]]), and `foreachBatch` writes its
+  * vectors as the store's `batch=N` slice, through the store's one
+  * projection ([[DedupStream.storeVectorRows]]). A replayed batch
+  * overwrites its own slice with the same rows, so at-least-once
+  * delivery composes to exactly-once; [[readStore]] reads the latest
+  * row per doc, the reference's `$set` upsert.
   */
 object VectorizeStream {
 
@@ -47,9 +49,8 @@ object VectorizeStream {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ReferenceQueries
-          .docVectorsByLang(batch, wordvecsLang, dim)
-          .select("doc_id", "lang", "known_ratio", "vec")
+        DedupStream.storeVectorRows(
+            ReferenceQueries.docVectorsByLang(batch, wordvecsLang, dim))
           .write.mode(SaveMode.Overwrite)
           .parquet(s"$storePath/batch=$batchId")
       }
@@ -64,8 +65,11 @@ object VectorizeStream {
     * the corpus genuinely lives behind a service this composition is
     * the honest stream: per micro-batch, RPC-fetch the batch's texts
     * ([[graft.sources.HttpTextSource.fetchTexts]], pooled client, loud
-    * non-200), run the same vectorize plan, write the batch's slice —
-    * tagged with `lang`, so both vectorizers write one store schema.
+    * non-200), tokenize them by `lang`'s own rule
+    * (`Tokenize.tokens(text, lang)`), run the same doc-vector core
+    * against the token-keyed dimension `wordvecs`, and write the
+    * batch's slice — tagged with `lang`, so both vectorizers write one
+    * store schema.
     *
     * Exactly-once still holds WITH the RPC in the loop: checkpointed
     * file-source offsets make each input file process once per
@@ -86,10 +90,10 @@ object VectorizeStream {
         val texts = graft.sources.HttpTextSource.fetchTexts(
           pending.select(lit(target).as("target"), col("doc_id")),
           baseUri, lang)
-        ReferenceQueries
-          .docVectors(pending.join(texts, Seq("doc_id")), wordvecs, dim)
-          .select(col("doc_id"), lit(lang).as("lang"), col("known_ratio"),
-            col("vec"))
+        val dv = ReferenceQueries.docVectorsOf(
+          pending.join(texts, Seq("doc_id")), Tokenize.tokens(col("text"), lang),
+          wordvecs, Seq("token"), dim)
+        DedupStream.storeVectorRows(dv.withColumn("lang", lit(lang)))
           .write.mode(SaveMode.Overwrite)
           .parquet(s"$storePath/batch=$batchId")
       }

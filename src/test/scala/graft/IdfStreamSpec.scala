@@ -62,6 +62,31 @@ class IdfStreamSpec extends AnyFunSuite with SparkSpec {
     assert(streamed.toSeq === full.toSeq)
   }
 
+  test("a batch with no qualifying post, then the rest of the corpus, equals q11 over the union") {
+    import org.apache.spark.sql.functions._
+    val work = Files.createTempDirectory("graft_idfnoqual")
+    val docsDir = work.resolve("docs").toString
+    val stateDir = work.resolve("state").toString
+    val ckpt = work.resolve("ckpt").toString
+    val docs = Tables.documents(spark, sf)
+    val qualifies = col("lang") === "en" && col("n_chars") >= 100
+
+    docs.filter(!qualifies).coalesce(1).write.mode("append").parquet(docsDir)
+    IdfStream.start(spark, docsDir, stateDir, ckpt).quiesce()
+    // no qualifying post yet: every token has 0 occurrences and idf -1
+    val first = IdfStream.currentIdf(spark, stateDir)
+      .collect().map(r => (r.getLong(1), r.getDouble(2))).toSet
+    assert(first === Set((0L, -1.0)))
+
+    docs.filter(qualifies).coalesce(1).write.mode("append").parquet(docsDir)
+    IdfStream.start(spark, docsDir, stateDir, ckpt).quiesce()
+    val streamed = IdfStream.currentIdf(spark, stateDir)
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
+    val full = graft.queries.ReferenceQueries.q11_idf(spark, sf)
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
+    assert(streamed.nonEmpty && streamed.toSeq === full.toSeq)
+  }
+
   test("currentIdf starts no more jobs over three completed batches than over one") {
     val docs = Tables.documents(spark, sf)
     /** State of `files` completed batches (maxFilesPerTrigger = 1). */

@@ -133,7 +133,7 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
     }
 
     assert(r.vectorized > 0)
-    // vectorized <= snapshot docs: docVectors drops token-less docs only
+    // vectorized <= snapshot docs: the doc-vector core drops token-less docs only
     assert(r.vectorized <= snapIds.size)
 
     // packing reconciles: the packed doc set is exactly the vectorized

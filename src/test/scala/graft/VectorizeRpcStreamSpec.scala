@@ -21,13 +21,12 @@ import graft.streaming.VectorizeStream
   */
 class VectorizeRpcStreamSpec extends AnyFunSuite with SparkSpec {
 
-  test("micro-batches fetch text via RPC; resume from checkpoint fetches only new docs") {
-    // fake lang-detector serving the actual corpus text per doc_id,
-    // JSON-escaped; counts every id it is asked for
-    val textById = Tables.documents(spark, sf)
-      .select("doc_id", "text").collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    val hits = new ConcurrentHashMap[Long, Integer]()
+  /** Runs `body` against a fake lang-detector serving `textById` per
+    * doc_id, JSON-escaped, at the base URI it is given; `hits` counts
+    * every id the server is asked for.
+    */
+  private def withTextServer[T](textById: Map[Long, String],
+      hits: ConcurrentHashMap[Long, Integer])(body: String => T): T = {
     val server = HttpServer.create(new InetSocketAddress(0), 0)
     server.createContext("/", new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
@@ -41,8 +40,17 @@ class VectorizeRpcStreamSpec extends AnyFunSuite with SparkSpec {
       }
     })
     server.start()
-    try {
-      val base = s"http://127.0.0.1:${server.getAddress.getPort}"
+    try body(s"http://127.0.0.1:${server.getAddress.getPort}")
+    finally server.stop(0)
+  }
+
+  test("micro-batches fetch text via RPC; resume from checkpoint fetches only new docs") {
+    // fake lang-detector serving the actual corpus text per doc_id
+    val textById = Tables.documents(spark, sf)
+      .select("doc_id", "text").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    val hits = new ConcurrentHashMap[Long, Integer]()
+    withTextServer(textById, hits) { base =>
       val work = Files.createTempDirectory("graft_vrpc")
       val docsDir = work.resolve("docs")
       Files.createDirectory(docsDir)
@@ -85,7 +93,46 @@ class VectorizeRpcStreamSpec extends AnyFunSuite with SparkSpec {
       val b = batch.select(col("doc_id"), r6(col("known_ratio")).as("kr"))
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
       assert(s === b)
-    } finally server.stop(0)
+    }
+  }
+
+  test("an RPC worker tokenizes by its own language: de equals the per-language batch core") {
+    import spark.implicits._
+    // diacritic words the ASCII rule would split ("über" -> "ber"),
+    // one doc of known words only and one with none known
+    val texts = Seq(
+      1L -> "Über die Brücke läuft das Mädchen über",
+      2L -> "Grüße aus München, schöne Grüße",
+      3L -> "nichts bekannt hier")
+    val dim = 3
+    val dimByLang = Seq(("de", "über", 1.5, Seq(1.0, 0.0, 0.0)),
+      ("de", "brücke", 0.5, Seq(0.0, 1.0, 0.0)),
+      ("de", "mädchen", 2.0, Seq(0.0, 0.0, 1.0)),
+      ("de", "grüße", 1.0, Seq(1.0, 1.0, 0.0)),
+      ("de", "münchen", 3.0, Seq(0.0, 1.0, 1.0)))
+      .toDF("lang", "token", "idf", "vec")
+    val docs = texts.map { case (id, t) => (id, t, "de", "test", t.length.toLong) }
+      .toDF(VectorizeStream.docSchema.fieldNames.toIndexedSeq: _*)
+    val work = Files.createTempDirectory("graft_vrpc_de")
+    docs.coalesce(1).write.parquet(work.resolve("docs").toString)
+    val store = work.resolve("store").toString
+    withTextServer(texts.toMap, new ConcurrentHashMap[Long, Integer]()) { base =>
+      VectorizeStream.startWithRpc(spark, work.resolve("docs").toString,
+        dimByLang.drop("lang"), dim, store, work.resolve("ckpt").toString,
+        base, lang = "de").quiesce()
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id", "lang", "known_ratio", "vec")
+        .as[(Long, String, Double, Option[Seq[Double]])].collect().sortBy(_._1).toSeq
+    val streamed = rows(VectorizeStream.readStore(spark, store))
+    val batch = rows(graft.streaming.DedupStream.storeVectorRows(
+      graft.queries.ReferenceQueries.docVectorsByLang(docs, dimByLang, dim)))
+    assert(streamed === batch)
+    // the per-language rule kept the diacritic words whole: known
+    // counts distinct known tokens, total counts every token
+    assert(streamed.map(r => r._1 -> r._3) ===
+      Seq(1L -> 3.0 / 7, 2L -> 2.0 / 5, 3L -> 0.0))
+    assert(streamed.last._4.isEmpty)
   }
 
   /** Minimal JSON string escaping for the fake server (corpus text is

@@ -41,10 +41,10 @@ class VectorizeStreamSpec extends AnyFunSuite with SparkSpec {
       col("lang"), r6(col("known_ratio")).as("kr"),
       r6(sqrt(graft.functions.VecMath.dot(col("vec"), col("vec")))).as("nrm"))
       .collect()
-      .map(r => r.getLong(0) -> (r.getString(1), r.getDouble(2), r.getDouble(3)))
+      .map(r => r.getLong(0) -> (r.getString(1), r.getDouble(2), Option(r.get(3))))
       .toMap
     val s = keyed(streamed)
-    val b = keyed(batch.select("doc_id", "lang", "known_ratio", "vec"))
+    val b = keyed(graft.streaming.DedupStream.storeVectorRows(batch))
     assert(s === b)
     // the corpus is genuinely mixed: several languages flowed through
     assert(streamed.select("lang").distinct().count() >= 3)
@@ -68,10 +68,11 @@ class VectorizeStreamSpec extends AnyFunSuite with SparkSpec {
   }
 
   /** (doc_id, lang, known_ratio) -> vec of a vector store. */
-  private def storeRows(store: String): Map[(Long, String, Double), Seq[Double]] =
+  private def storeRows(store: String): Map[(Long, String, Double), Option[Seq[Double]]] =
     VectorizeStream.readStore(spark, store)
       .select("doc_id", "lang", "known_ratio", "vec").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)) -> r.getSeq[Double](3))
+      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)) ->
+        Option(r.getSeq[Double](3)))
       .toMap
 
   test("a crash between a slice write and the stream's commit replays to the same store") {
@@ -119,7 +120,9 @@ class VectorizeStreamSpec extends AnyFunSuite with SparkSpec {
     val replayed = storeRows(store)
     assert(replayed.keySet === uninterrupted.keySet)
     uninterrupted.foreach { case (k, v) =>
-      assert(replayed(k).zip(v).forall { case (x, y) => math.abs(x - y) <= 1e-12 },
+      assert(replayed(k).isDefined === v.isDefined &&
+        replayed(k).toSeq.flatten.zip(v.toSeq.flatten)
+          .forall { case (x, y) => math.abs(x - y) <= 1e-12 },
         s"doc ${k._1}: the replayed vector differs")
     }
   }
@@ -159,6 +162,28 @@ class VectorizeStreamSpec extends AnyFunSuite with SparkSpec {
       .write.parquet(s"$store/batch=2")
     assert(vecOf(store, 1L) === null)
     assert(VectorizeStream.readStore(spark, store).count() === 2)
+  }
+
+  test("a doc with no known token is stored with a NULL vector (F12)") {
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft_vnull")
+    Files.createDirectory(work.resolve("docs"))
+    // VectorizeStream's store at DedupStream's `vectors` path, so both
+    // stores' readers see the same slices
+    val store = work.resolve("vectors").toString
+    val wvl = Seq(("en", "tok0", 1.0, Seq(1.0, 0.0)), ("en", "tok1", 2.0, Seq(0.0, 1.0)))
+      .toDF("lang", "token", "idf", "vec")
+    stage(work, "a", Seq((1L, "tok0 tok1 tok1"), (2L, "nothing here known"))
+      .map { case (id, text) => (id, text, "en", "test", text.length.toLong) }
+      .toDF(VectorizeStream.docSchema.fieldNames.toIndexedSeq: _*))
+    VectorizeStream.start(spark, work.resolve("docs").toString, wvl, 2,
+      store, work.resolve("ckpt").toString).quiesce()
+    val rows = VectorizeStream.readStore(spark, store)
+      .select("doc_id", "known_ratio", "vec")
+      .as[(Long, Double, Option[Seq[Double]])].collect().sortBy(_._1).toSeq
+    assert(rows === Seq((1L, 2.0 / 3, Some(Seq(1.0 / 3, 4.0 / 3))), (2L, 0.0, None)))
+    assert(graft.streaming.DedupStream.storeVectors(spark, work.toString)
+      .select("vec_id").as[Long].collect().toSeq === Seq(1L))
   }
 
   test("restart from the SAME checkpoint processes only newly-arrived files") {

@@ -164,6 +164,23 @@ class WordvecsByLangSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("the single-language IDF table over a corpus with no qualifying post: every token at -1") {
+    // en posts all under 100 chars; the long posts are not en
+    val docs = Seq(
+      (1L, "alpha bravo alpha", "en", 17L),
+      (2L, "charlie delta", "en", 13L),
+      (3L, ("alpha echo foxtrot " * 8).trim, "es", 151L),
+      (4L, ("golf hotel " * 12).trim, null, 131L))
+      .toDF("doc_id", "text", "lang", "n_chars")
+    val got = ReferenceQueries.idfTableOf(docs).as[(String, Long, Double)]
+      .collect().sorted
+    val ref = idfReference(docs).as[(String, Long, Double)].collect().sorted
+    assert(got.toSeq === ref.toSeq)
+    assert(got.map(_._1).toSeq === Seq("alpha", "bravo", "charlie", "delta",
+      "echo", "foxtrot", "golf", "hotel"))
+    assert(got.forall(r => r._2 == 0L && r._3 == -1.0))
+  }
+
   test("the dimension build starts a bounded number of jobs and no footer job") {
     val dir = fixture
     def build(): Unit = ReferenceQueries.wordvecsByLang(spark, dir)
