@@ -95,11 +95,8 @@ object ReferenceQueries {
     * splits are tuned (a row group is the minimum read unit). An input
     * with fewer partitions than half the cores is redistributed; a
     * warehouse-scale scan has thousands of splits, so the condition is
-    * false and NO shuffle is added. (Measured at sf0.1 on 4 cores, a
-    * (doc_id, token) count: 0.40-0.49 s hash-redistributed, 0.47-0.56 s
-    * round-robin over 4 partitions, 0.50-0.59 s on the one scan task;
-    * the regex tokenizer this guard was written for took 4.9 s on one
-    * task.)
+    * false and NO shuffle is added. (The regex tokenizer this guard
+    * was written for took 4.9 s on one task at sf0.1.)
     *
     * The count is read off the physical plan ([[plannedPartitions]]),
     * never by running it: `.rdd.getNumPartitions` on an adaptive plan
@@ -109,16 +106,21 @@ object ReferenceQueries {
     * The redistribution hashes by `doc_id` with no fixed count, so AQE
     * may coalesce it. Every caller tokenizes per document and keys
     * what follows by `doc_id`; a `doc_id` distribution satisfies their
-    * doc-keyed aggregates and windows (docVectorsByLang's token count,
-    * tf window and vector sum share this one exchange), and persisted
-    * postings carry it to their doc-keyed consumers. A fixed count
-    * would also keep one output file per partition downstream.
+    * doc-keyed aggregates and windows, and persisted postings carry it
+    * to their doc-keyed consumers. A fixed count would also keep one
+    * output file per partition downstream.
     *
-    * An input whose physical plan already reports `SinglePartition` is
-    * returned unchanged: that is a frame declared small enough to sit
-    * in one partition (a `DedupStream` batch frame under its pin's
-    * size rule), and re-spreading it by `doc_id` would only add a
-    * shuffle that AQE coalesces straight back into one partition.
+    * Returned unchanged, with no shuffle added:
+    *  - an input whose physical plan already reports `SinglePartition`
+    *    (a `DedupStream` batch frame under its pin's size rule);
+    *  - an input AQE would read a shuffle of as one partition anyway
+    *    ([[fitsOnePartition]]). The documents scans of the test data are
+    *    all such inputs. On 4 cores the redistribution wrote 90,172,
+    *    88,081 and 868,630 shuffle bytes at sf0.001, sf0.01 and sf0.1,
+    *    each read back as ONE partition under the 1 MB default floor,
+    *    and Spark's estimates for the (doc_id, text, lang) scans are
+    *    43,676, 43,366 and 396,378 bytes (65,515, 65,049 and 594,568
+    *    for all five columns).
     */
   private[graft] def parallelized(docs: DataFrame): DataFrame = {
     // a streaming frame has no physical plan of its own — and no
@@ -126,12 +128,44 @@ object ReferenceQueries {
     // split by their own planning. Pass it through untouched (round-17
     // ADVICE: QualityModel's streaming-gate form now routes through
     // docTokens -> here).
-    if (docs.isStreaming) return docs
+    if (docs.isStreaming || fitsOnePartition(docs)) return docs
     val target = docs.sparkSession.sparkContext.defaultParallelism
     val planned = docs.queryExecution.executedPlan
     if (planned.outputPartitioning == SinglePartition ||
         plannedPartitions(planned).exists(_ >= target / 2)) docs
     else docs.repartition(col("doc_id"))
+  }
+
+  /** Whether AQE would read a shuffle of the batch frame `docs` as one
+    * partition, judged from the optimizer's size estimate alone (no
+    * job runs): [[coalescesToOne]] of `sizeInBytes`. For a file scan
+    * the estimate is the files' bytes scaled to the projected columns,
+    * and compressed parquet reads about 2× smaller than the rows a
+    * shuffle writes (above). An input the estimate misjudges small is
+    * thus at most a few times the floor, which AQE would have coalesced
+    * into that few partitions: all it loses is the spreading of the
+    * narrow work before the first shuffle over those few tasks, and
+    * every keyed operator above still shuffles as before. A plan Spark
+    * cannot size (an RDD leaf without statistics) reports
+    * `Long.MaxValue` and is judged large; a streaming frame is never
+    * judged small.
+    */
+  private[graft] def fitsOnePartition(docs: DataFrame): Boolean = !docs.isStreaming && {
+    val est = docs.queryExecution.optimizedPlan.stats.sizeInBytes
+    est.isValidLong && coalescesToOne(docs.sparkSession, est.toLong)
+  }
+
+  /** Whether AQE would read a shuffle that writes `bytes` as one
+    * partition: coalescing is on and it never splits below the minimum
+    * partition size. The size rule of [[parallelized]],
+    * [[docVectorsOf]] and [[graft.streaming.DedupStream.pin]].
+    */
+  private[graft] def coalescesToOne(spark: SparkSession, bytes: Long): Boolean = {
+    val conf = spark.conf
+    conf.get("spark.sql.adaptive.enabled").toBoolean &&
+      conf.get("spark.sql.adaptive.coalescePartitions.enabled").toBoolean &&
+      bytes <= org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize"))
   }
 
   /** The number of partitions `p` will produce, read off the plan
@@ -255,23 +289,27 @@ object ReferenceQueries {
   /** The IDF counts of `docs`, from one tokenize pass and one
     * aggregate: per (keys…, token) of length >= 4, `occurrences` (the
     * token's rows from posts where `qualifies` holds) and `token_rows`
-    * (all its rows). Each post also emits one null-token row, even a
-    * post with no tokens or null text, so each key's null-token group
-    * holds that key's qualifying-post count in `occurrences` and 0 in
-    * `token_rows`. Counts are sums of per-post rows, so the counts of
-    * two disjoint corpora summed by (keys…, token) are the counts of
-    * their union ([[summedCounts]]).
+    * (all its rows). Each post also emits one sentinel row with the
+    * empty token `""`, even a post with no tokens or null text, so each
+    * key's sentinel group holds that key's qualifying-post count in
+    * `occurrences` and 0 in `token_rows`. `token` is non-nullable: a
+    * null-rejecting filter that a join on `token` infers above the
+    * table is then always true, and is never pushed below the
+    * aggregate into one of [[idfOf]]'s two branches only. Counts are
+    * sums of per-post rows, so the counts of two disjoint corpora
+    * summed by (keys…, token) are the counts of their union
+    * ([[summedCounts]]).
     */
   private[graft] def idfCounts(docs: DataFrame, keys: Seq[String],
       tokens: Column, qualifies: Column): DataFrame = {
-    val tokensAndSentinel = concat(array(lit(null).cast("string")),
-      coalesce(tokens, array().cast("array<string>")))
+    val vocab = filter(coalesce(tokens, array().cast("array<string>")),
+      t => length(t) >= 4)
     parallelized(docs).select(keys.map(col) ++ Seq(qualifies.as("q"),
-        explode(tokensAndSentinel).as("token")): _*)
-      .filter(col("token").isNull || length(col("token")) >= 4)
-      .groupBy((keys :+ "token").map(col): _*)
+        explode(concat(array(lit("")), vocab)).as("token")): _*)
+      // the exploded element type is nullable, though no element is null
+      .groupBy((keys.map(col) :+ coalesce(col("token"), lit("")).as("token")): _*)
       .agg(count(when(col("q"), 1)).as("occurrences"),
-        count(col("token")).as("token_rows"))
+        count(when(col("token") =!= "", 1)).as("token_rows"))
   }
 
   /** The reference IDF rule (quirks A2 + F6,
@@ -280,9 +318,9 @@ object ReferenceQueries {
     * vocabulary token (`token_rows > 0`). raw = log10(n_posts / occ),
     * or -1 when occ is 0; idf = raw when raw > 0, else the key's
     * smallest raw. A small per-key aggregate gives `n_posts` (the
-    * null-token group) and that smallest raw: raw falls as occ grows
-    * (division and log10 are monotone), so it is the raw at the
-    * largest occurrence count, or -1 when some token has 0
+    * sentinel group, `token_rows` 0) and that smallest raw: raw falls
+    * as occ grows (division and log10 are monotone), so it is the raw
+    * at the largest occurrence count, or -1 when some token has 0
     * occurrences — the same value, bit for bit, as a `min` over every
     * token's raw. A key with no qualifying post gets no rows, as the
     * reference deploys no worker for it; with no keys the table covers
@@ -290,8 +328,8 @@ object ReferenceQueries {
     * token at -1.
     */
   private[graft] def idfOf(counts: DataFrame, keys: Seq[String]): DataFrame = {
-    // tells a token group from a sentinel group by an aggregate, not by
-    // the grouping key: a filter on `token` would be pushed below the
+    // tells a token group from the sentinel group by an aggregate, not
+    // by the grouping key: a filter on `token` would be pushed below the
     // aggregate into one branch only, and the two branches would no
     // longer share one exchange (the corpus would be tokenized twice)
     val vocab = col("token_rows") > 0
@@ -325,13 +363,16 @@ object ReferenceQueries {
     * known_ratio); a doc with no known token has known = 0 and an
     * all-zero vec, which a store writes as NULL (F12,
     * [[graft.streaming.DedupStream.storeVectorRows]]). The token count,
-    * tf window and vector sum share one `doc_id` exchange.
+    * tf window and vector sum share one `doc_id` exchange, and plan
+    * none when `docs` is small ([[fitsOnePartition]]): that input is
+    * read as one declared partition (`coalesce(1)`), the one partition
+    * AQE would have coalesced the exchange into.
     */
   private[graft] def docVectorsOf(docs: DataFrame, tokens: Column,
       wordvecs: DataFrame, joinKeys: Seq[String], dim: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val docKeys = "doc_id" +: joinKeys.filterNot(_ == "token")
-    val counts = parallelized(docs)
+    val counts = (if (fitsOnePartition(docs)) docs.coalesce(1) else parallelized(docs))
       .select(docKeys.map(col) :+ explode(tokens).as("token"): _*)
       .groupBy(("doc_id" +: joinKeys).map(col): _*)
       .agg(count(lit(1)).as("cnt"))
@@ -562,10 +603,15 @@ object ReferenceQueries {
     idfCounts(d, Nil, Tokenize.tokens(col("text")),
       col("lang") === "en" && col("n_chars") >= 100)
 
-  /** Per-batch [[idfBatchState]] counts summed into their union's. */
+  /** Per-batch [[idfBatchState]] counts summed into their union's. A
+    * delta whose sentinel row has a null token (the form
+    * [[graft.streaming.IdfStream]] state was first written in) sums
+    * into the `""` sentinel group.
+    */
   private[graft] def summedCounts(deltas: DataFrame): DataFrame =
-    deltas.groupBy("token").agg(sum(col("occurrences")).as("occurrences"),
-      sum(col("token_rows")).as("token_rows"))
+    deltas.groupBy(coalesce(col("token"), lit("")).as("token"))
+      .agg(sum(col("occurrences")).as("occurrences"),
+        sum(col("token_rows")).as("token_rows"))
 
   def x52_incremental_idf(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)

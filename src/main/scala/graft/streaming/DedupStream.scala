@@ -522,14 +522,15 @@ object DedupStream {
     * each such shuffle back into one partition. The pin's eager job
     * also measures the bytes a shuffle of the frame would write. When
     * the checkpoint sits in one partition and AQE would coalesce a
-    * shuffle of it into one partition anyway (coalescing on, and the
-    * bytes at most `spark.sql.adaptive.coalescePartitions
-    * .minPartitionSize`), the frame is returned as ONE declared
-    * partition, and the planner adds no exchange for aggregates and
-    * windows over it, or for joins between two such frames. A larger
-    * frame, or one of several partitions (whose narrow work then stays
-    * spread over its tasks), keeps a plain checkpoint and its
-    * shuffles. The rows are the same either way.
+    * shuffle of it into one partition anyway
+    * ([[ReferenceQueries.coalescesToOne]] of the measured bytes, the
+    * rule `parallelized` applies to an estimate), the frame is
+    * returned as ONE declared partition, and the planner adds no
+    * exchange for aggregates and windows over it, or for joins
+    * between two such frames. A larger frame, or one of several
+    * partitions (whose narrow work then stays spread over its tasks),
+    * keeps a plain checkpoint and its shuffles. The rows are the same
+    * either way.
     *
     * Release with [[unpin]] (`unpersist` is a silent no-op on a
     * checkpoint); a pin that fails mid-batch leaves the earlier pins
@@ -537,18 +538,7 @@ object DedupStream {
     */
   private[graft] def pin(df: DataFrame): DataFrame =
     org.apache.spark.sql.graftshim.CheckpointShim.localCheckpoint(df)(
-      coalescesToOne(df.sparkSession, _))
-
-  /** Whether AQE would read a shuffle that writes `bytes` as one
-    * partition: it never splits below the minimum partition size.
-    */
-  private def coalescesToOne(spark: SparkSession, bytes: Long): Boolean = {
-    val conf = spark.conf
-    conf.get("spark.sql.adaptive.enabled").toBoolean &&
-      conf.get("spark.sql.adaptive.coalescePartitions.enabled").toBoolean &&
-      bytes <= org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize"))
-  }
+      ReferenceQueries.coalescesToOne(df.sparkSession, _))
 
   /** Release a [[pin]]ned frame's blocks; the frame is unusable after. */
   private[graft] def unpin(df: DataFrame): Unit = {

@@ -161,7 +161,10 @@ class PlanHygieneSpec extends AnyFunSuite with SparkSpec {
         2L -> "beta", 2L -> "gamma", 2L -> "gamma"))
   }
 
-  test("docVectorsByLang over a one-partition input: one doc_id exchange plus the dimension broadcast") {
+  /** Four docs in en/es/de as one parquet file (one partition), and a
+    * (lang, token, idf, vec) dimension of dim 2 for them.
+    */
+  private def smallDocsAndDim(): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_dv_one")
       .resolve("docs").toString
@@ -173,16 +176,64 @@ class PlanHygieneSpec extends AnyFunSuite with SparkSpec {
     val dim = Seq(("en", "alpha", 1.5, Seq(1.0, 0.0)),
       ("en", "gamma", 0.5, Seq(0.0, 1.0)), ("es", "hola", 2.0, Seq(1.0, 1.0)))
       .toDF("lang", "token", "idf", "vec")
+    (docs, dim)
+  }
+
+  test("docVectorsByLang over a one-partition input: one doc_id exchange plus the dimension broadcast") {
+    // a floor below the input's size: the input is redistributed by doc_id
+    withConfs("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "16b") {
+      val (docs, dim) = smallDocsAndDim()
+      val df = ReferenceQueries.docVectorsByLang(docs, dim, 2)
+      df.collect()
+      val ops = executedOps(df)
+      val shuffles = ops.filter(_.startsWith("Exchange"))
+      assert(shuffles.size === 1, s"expected one shuffle:\n${ops.mkString("\n")}")
+      assert("""^Exchange hashpartitioning\(doc_id#\d+L, \d+\)""".r
+        .findFirstIn(shuffles.head).isDefined,
+        s"the one shuffle is not keyed on doc_id alone: ${shuffles.head}")
+      assert(ops.count(_.startsWith("BroadcastExchange")) === 1,
+        s"expected the dimension broadcast:\n${ops.mkString("\n")}")
+    }
+  }
+
+  test("docVectorsByLang over a small input plans no exchange but the dimension broadcast") {
+    // under the coalescing floor the input is one declared partition:
+    // the token count, tf window and vector sum need no exchange
+    val (docs, dim) = smallDocsAndDim()
     val df = ReferenceQueries.docVectorsByLang(docs, dim, 2)
-    df.collect()
+    val rows = df.select("doc_id", "known").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).sorted.toSeq
+    assert(rows === Seq(1L -> 2L, 2L -> 1L, 3L -> 1L, 4L -> 0L))
     val ops = executedOps(df)
-    val shuffles = ops.filter(_.startsWith("Exchange"))
-    assert(shuffles.size === 1, s"expected one shuffle:\n${ops.mkString("\n")}")
-    assert("""^Exchange hashpartitioning\(doc_id#\d+L, \d+\)""".r
-      .findFirstIn(shuffles.head).isDefined,
-      s"the one shuffle is not keyed on doc_id alone: ${shuffles.head}")
+    assert(ops.count(_.startsWith("Exchange")) === 0,
+      s"expected no shuffle:\n${ops.mkString("\n")}")
     assert(ops.count(_.startsWith("BroadcastExchange")) === 1,
       s"expected the dimension broadcast:\n${ops.mkString("\n")}")
+  }
+
+  test("wordvecsByLang inner-joined on (lang, token) tokenizes the corpus once") {
+    import spark.implicits._
+    // an inner join infers a not-null filter on the join keys above the
+    // IDF table; it must not split the exchange idfOf's branches share
+    val vecs = Seq(("en", "column", Seq(1.0, 0.0)), ("en", "window", Seq(0.0, 1.0)))
+      .toDF("lang", "token", "vec")
+    val df = ReferenceQueries.wordvecsByLang(spark, sf).drop("vec")
+      .join(vecs, Seq("lang", "token"))
+    // an empty join would let AQE drop the IDF plan altogether
+    assert(df.collect().length === 2)
+    val ops = executedOps(df)
+    assert(ops.count(_.startsWith("Generate")) === 1, ops.mkString("\n"))
+  }
+
+  test("docVectorsByLang over wordvecsByLang tokenizes the dimension's corpus once") {
+    // two tokenize passes in all: the docs' own, and the IDF table's
+    // under the dimension broadcast (its left join infers the filter)
+    val docs = Tables.documents(spark, sf)
+    val df = ReferenceQueries.docVectorsByLang(docs,
+      ReferenceQueries.wordvecsByLang(spark, sf), ReferenceQueries.VecDim)
+    df.collect()
+    val ops = executedOps(df)
+    assert(ops.count(_.startsWith("Generate")) === 2, ops.mkString("\n"))
   }
 
   /** Two small frames checkpointed by `pin`, each from an adaptive
@@ -234,6 +285,32 @@ class PlanHygieneSpec extends AnyFunSuite with SparkSpec {
         val pinned = shufflesOverPins(batchPin)
         assert(pinned === shufflesOverPins(plainCheckpoint), s"with $kv")
         assert(pinned._2 > 0, s"with $kv the join of two pins planned no exchange")
+      }
+    }
+  }
+
+  test("parallelized returns a small file scan untouched and starts no job") {
+    val (docs, _) = smallDocsAndDim()
+    val (out, jobs) = jobsDuring(ReferenceQueries.parallelized(docs))
+    assert(out eq docs, "parallelized re-spread a scan under the coalescing floor")
+    assert(jobs.isEmpty, s"parallelized started ${jobs.size} jobs")
+  }
+
+  test("parallelized redistributes a small scan by doc_id above the floor or with coalescing off") {
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    val (docs, _) = smallDocsAndDim()
+    Seq("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "16b",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false").foreach { kv =>
+      withConfs(kv) {
+        val (out, jobs) = jobsDuring(ReferenceQueries.parallelized(docs))
+        assert(jobs.isEmpty, s"with $kv parallelized started ${jobs.size} jobs")
+        assert("""Exchange hashpartitioning\(doc_id#\d+L, \d+\), REPARTITION_BY_COL""".r
+          .findFirstIn(out.queryExecution.executedPlan.toString).isDefined,
+          s"with $kv the scan was not redistributed by doc_id")
+        // a frame that already reports one partition is still returned as is
+        val one = docs.coalesce(1)
+        assert(one.queryExecution.executedPlan.outputPartitioning === SinglePartition)
+        assert(ReferenceQueries.parallelized(one) eq one, s"with $kv")
       }
     }
   }
