@@ -95,8 +95,11 @@ object ReferenceQueries {
     * splits are tuned (a row group is the minimum read unit). An input
     * with fewer partitions than half the cores is redistributed; a
     * warehouse-scale scan has thousands of splits, so the condition is
-    * false and NO shuffle is added. (The regex tokenizer this guard
-    * was written for took 4.9 s on one task at sf0.1.)
+    * false and NO shuffle is added. (Measured at sf0.1 on 4 cores, a
+    * (doc_id, token) count: 0.40-0.49 s hash-redistributed, 0.47-0.56 s
+    * round-robin over 4 partitions, 0.50-0.59 s on the one scan task;
+    * the regex tokenizer this guard was written for took 4.9 s on one
+    * task.)
     *
     * The count is read off the physical plan ([[plannedPartitions]]),
     * never by running it: `.rdd.getNumPartitions` on an adaptive plan
@@ -110,17 +113,21 @@ object ReferenceQueries {
     * to their doc-keyed consumers. A fixed count would also keep one
     * output file per partition downstream.
     *
-    * Returned unchanged, with no shuffle added:
-    *  - an input whose physical plan already reports `SinglePartition`
-    *    (a `DedupStream` batch frame under its pin's size rule);
-    *  - an input AQE would read a shuffle of as one partition anyway
-    *    ([[fitsOnePartition]]). The documents scans of the test data are
-    *    all such inputs. On 4 cores the redistribution wrote 90,172,
-    *    88,081 and 868,630 shuffle bytes at sf0.001, sf0.01 and sf0.1,
-    *    each read back as ONE partition under the 1 MB default floor,
-    *    and Spark's estimates for the (doc_id, text, lang) scans are
-    *    43,676, 43,366 and 396,378 bytes (65,515, 65,049 and 594,568
-    *    for all five columns).
+    * That holds under AQE's coalescing floor too, where the
+    * redistribution is read back as one partition: the `doc_id`
+    * distribution it leaves is what the cached posting and its
+    * `docTokenCounts` rollup hand their consumers. Without it, eight
+    * of the rollup's nine consumers planned one to six more exchanges
+    * on every call at sf0.1. Two callers judge a small input first
+    * ([[fitsOnePartition]]) and skip the redistribution:
+    * [[idfCounts]], whose one aggregate keys by token, and
+    * [[docVectorsOf]], which declares such an input one partition.
+    *
+    * An input whose physical plan already reports `SinglePartition` is
+    * returned unchanged: that is a frame declared small enough to sit
+    * in one partition (a `DedupStream` batch frame under its pin's
+    * size rule), and re-spreading it by `doc_id` would only add a
+    * shuffle that AQE coalesces straight back into one partition.
     */
   private[graft] def parallelized(docs: DataFrame): DataFrame = {
     // a streaming frame has no physical plan of its own — and no
@@ -128,7 +135,7 @@ object ReferenceQueries {
     // split by their own planning. Pass it through untouched (round-17
     // ADVICE: QualityModel's streaming-gate form now routes through
     // docTokens -> here).
-    if (docs.isStreaming || fitsOnePartition(docs)) return docs
+    if (docs.isStreaming) return docs
     val target = docs.sparkSession.sparkContext.defaultParallelism
     val planned = docs.queryExecution.executedPlan
     if (planned.outputPartitioning == SinglePartition ||
@@ -139,14 +146,21 @@ object ReferenceQueries {
   /** Whether AQE would read a shuffle of the batch frame `docs` as one
     * partition, judged from the optimizer's size estimate alone (no
     * job runs): [[coalescesToOne]] of `sizeInBytes`. For a file scan
-    * the estimate is the files' bytes scaled to the projected columns,
-    * and compressed parquet reads about 2× smaller than the rows a
-    * shuffle writes (above). An input the estimate misjudges small is
-    * thus at most a few times the floor, which AQE would have coalesced
-    * into that few partitions: all it loses is the spreading of the
-    * narrow work before the first shuffle over those few tasks, and
-    * every keyed operator above still shuffles as before. A plan Spark
-    * cannot size (an RDD leaf without statistics) reports
+    * the estimate is the files' bytes scaled to the projected columns.
+    * On 4 cores a `doc_id` redistribution of the documents wrote
+    * 90,172, 88,081 and 868,630 shuffle bytes at sf0.001, sf0.01 and
+    * sf0.1, each read back as ONE partition under the 1 MB default
+    * floor, while Spark's estimates for the (doc_id, text, lang) scans
+    * are 43,676, 43,366 and 396,378 bytes (65,515, 65,049 and 594,568
+    * for all five columns): compressed parquet reads about 2× smaller
+    * than the rows a shuffle writes, and text that compresses better
+    * reads smaller still. An input misjudged small is thus some
+    * multiple of the floor that AQE would have split into that many
+    * partitions, and its caller runs on fewer tasks than it could:
+    * [[idfCounts]] tokenizes on the scan's own tasks (its aggregate
+    * still shuffles by token), and [[docVectorsOf]] runs all its work
+    * (tokenize, token count, tf window, vector sum) in ONE task.
+    * A plan Spark cannot size (an RDD leaf without statistics) reports
     * `Long.MaxValue` and is judged large; a streaming frame is never
     * judged small.
     */
@@ -157,8 +171,8 @@ object ReferenceQueries {
 
   /** Whether AQE would read a shuffle that writes `bytes` as one
     * partition: coalescing is on and it never splits below the minimum
-    * partition size. The size rule of [[parallelized]],
-    * [[docVectorsOf]] and [[graft.streaming.DedupStream.pin]].
+    * partition size. The size rule of [[fitsOnePartition]] and
+    * [[graft.streaming.DedupStream.pin]].
     */
   private[graft] def coalescesToOne(spark: SparkSession, bytes: Long): Boolean = {
     val conf = spark.conf
@@ -304,7 +318,10 @@ object ReferenceQueries {
       tokens: Column, qualifies: Column): DataFrame = {
     val vocab = filter(coalesce(tokens, array().cast("array<string>")),
       t => length(t) >= 4)
-    parallelized(docs).select(keys.map(col) ++ Seq(qualifies.as("q"),
+    // nothing here keys by doc_id, so a small input skips that
+    // redistribution (AQE would read it back as one partition)
+    (if (fitsOnePartition(docs)) docs else parallelized(docs))
+      .select(keys.map(col) ++ Seq(qualifies.as("q"),
         explode(concat(array(lit("")), vocab)).as("token")): _*)
       // the exploded element type is nullable, though no element is null
       .groupBy((keys.map(col) :+ coalesce(col("token"), lit("")).as("token")): _*)
@@ -366,7 +383,9 @@ object ReferenceQueries {
     * tf window and vector sum share one `doc_id` exchange, and plan
     * none when `docs` is small ([[fitsOnePartition]]): that input is
     * read as one declared partition (`coalesce(1)`), the one partition
-    * AQE would have coalesced the exchange into.
+    * AQE would have coalesced the exchange into. The scan, tokenize
+    * and all three then run in one task; an input the estimate
+    * misjudges small loses all its spread, not only the scan's.
     */
   private[graft] def docVectorsOf(docs: DataFrame, tokens: Column,
       wordvecs: DataFrame, joinKeys: Seq[String], dim: Int): DataFrame = {
@@ -603,15 +622,10 @@ object ReferenceQueries {
     idfCounts(d, Nil, Tokenize.tokens(col("text")),
       col("lang") === "en" && col("n_chars") >= 100)
 
-  /** Per-batch [[idfBatchState]] counts summed into their union's. A
-    * delta whose sentinel row has a null token (the form
-    * [[graft.streaming.IdfStream]] state was first written in) sums
-    * into the `""` sentinel group.
-    */
+  /** Per-batch [[idfBatchState]] counts summed into their union's. */
   private[graft] def summedCounts(deltas: DataFrame): DataFrame =
-    deltas.groupBy(coalesce(col("token"), lit("")).as("token"))
-      .agg(sum(col("occurrences")).as("occurrences"),
-        sum(col("token_rows")).as("token_rows"))
+    deltas.groupBy("token").agg(sum(col("occurrences")).as("occurrences"),
+      sum(col("token_rows")).as("token_rows"))
 
   def x52_incremental_idf(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)

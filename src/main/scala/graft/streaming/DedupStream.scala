@@ -524,7 +524,7 @@ object DedupStream {
     * the checkpoint sits in one partition and AQE would coalesce a
     * shuffle of it into one partition anyway
     * ([[ReferenceQueries.coalescesToOne]] of the measured bytes, the
-    * rule `parallelized` applies to an estimate), the frame is
+    * rule `fitsOnePartition` applies to an estimate), the frame is
     * returned as ONE declared partition, and the planner adds no
     * exchange for aggregates and windows over it, or for joins
     * between two such frames. A larger frame, or one of several

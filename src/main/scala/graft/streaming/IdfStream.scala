@@ -12,8 +12,7 @@ import graft.queries.ReferenceQueries
   *
   * Each micro-batch contributes its IDF counts
   * ([[ReferenceQueries.idfBatchState]]: per token, occurrences and
-  * rows; a sentinel row, token `""`, with the qualifying-post count;
-  * deltas written with a null-token sentinel sum into it), written as
+  * rows; a `""`-token row with the qualifying-post count), written as
   * an APPEND-ONLY per-batch delta `state/batch=<id>/counts` with a
   * `_done` marker committed last. Append-only is what makes replay
   * exactly-once: foreachBatch is at-least-once, and a replayed batch

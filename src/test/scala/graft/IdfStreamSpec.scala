@@ -87,35 +87,6 @@ class IdfStreamSpec extends AnyFunSuite with SparkSpec {
     assert(streamed.nonEmpty && streamed.toSeq === full.toSeq)
   }
 
-  test("a delta with a null-token sentinel sums with a new delta: q11 over the union") {
-    import org.apache.spark.sql.functions._
-    import graft.queries.ReferenceQueries
-    val work = Files.createTempDirectory("graft_idfnullsentinel")
-    val docsDir = work.resolve("docs").toString
-    val stateDir = work.resolve("state").toString
-    val docs = Tables.documents(spark, sf)
-
-    docs.filter(col("doc_id") % 2 === 0).coalesce(1).write.parquet(docsDir)
-    IdfStream.start(spark, docsDir, stateDir, work.resolve("ckpt").toString).quiesce()
-    // the other half as a delta in the first state form: the sentinel
-    // row's token is null, not ""
-    val old = s"$stateDir/batch=1"
-    ReferenceQueries.idfBatchState(docs.filter(col("doc_id") % 2 =!= 0))
-      .withColumn("token", when(col("token") =!= "", col("token")))
-      .write.parquet(s"$old/counts")
-    Files.createFile(java.nio.file.Paths.get(old, "_done"))
-    assert(spark.read.parquet(s"$old/counts").filter(col("token").isNull).count() === 1)
-
-    val deltas = spark.read.parquet(s"$stateDir/batch=0/counts", s"$old/counts")
-    assert(ReferenceQueries.summedCounts(deltas).filter(col("token_rows") === 0)
-      .count() === 1, "the two deltas' sentinels summed into two groups")
-    val streamed = IdfStream.currentIdf(spark, stateDir)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
-    val full = ReferenceQueries.q11_idf(spark, sf)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
-    assert(streamed.nonEmpty && streamed.toSeq === full.toSeq)
-  }
-
   test("currentIdf starts no more jobs over three completed batches than over one") {
     val docs = Tables.documents(spark, sf)
     /** State of `files` completed batches (maxFilesPerTrigger = 1). */

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions.Tokenize
 import graft.queries.{AnalyticsQueries, ReferenceQueries}
 
 /** Physical-plan assertions for the properties the 100 TB posture
@@ -289,30 +290,58 @@ class PlanHygieneSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("parallelized returns a small file scan untouched and starts no job") {
-    val (docs, _) = smallDocsAndDim()
-    val (out, jobs) = jobsDuring(ReferenceQueries.parallelized(docs))
-    assert(out eq docs, "parallelized re-spread a scan under the coalescing floor")
-    assert(jobs.isEmpty, s"parallelized started ${jobs.size} jobs")
+  /** The shuffle exchanges of `df`'s executed plan, after running it. */
+  private def shuffleOps(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    df.collect()
+    executedOps(df).filter(_.startsWith("Exchange"))
   }
 
-  test("parallelized redistributes a small scan by doc_id above the floor or with coalescing off") {
-    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+  private val docIdRedistribution =
+    """Exchange hashpartitioning\(doc_id#\d+L, \d+\), REPARTITION_BY_COL""".r
+
+  test("idfCounts over a small file scan plans only its token exchange and sizes it without a job") {
+    val (docs, _) = smallDocsAndDim()
+    val (small, jobs) = jobsDuring(ReferenceQueries.fitsOnePartition(docs))
+    assert(small, "a four-row scan was judged above the coalescing floor")
+    assert(jobs.isEmpty, s"sizing the scan started ${jobs.size} jobs")
+    val shuffles = shuffleOps(ReferenceQueries.idfCounts(docs, Seq("lang"),
+      Tokenize.tokens(col("text")), lit(true)))
+    assert(shuffles.size === 1, shuffles.mkString("\n"))
+    assert(!shuffles.head.contains("doc_id"), s"not keyed on token: ${shuffles.head}")
+  }
+
+  test("idfCounts redistributes a small scan by doc_id above the floor or with coalescing off") {
     val (docs, _) = smallDocsAndDim()
     Seq("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "16b",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false").foreach { kv =>
       withConfs(kv) {
-        val (out, jobs) = jobsDuring(ReferenceQueries.parallelized(docs))
-        assert(jobs.isEmpty, s"with $kv parallelized started ${jobs.size} jobs")
-        assert("""Exchange hashpartitioning\(doc_id#\d+L, \d+\), REPARTITION_BY_COL""".r
-          .findFirstIn(out.queryExecution.executedPlan.toString).isDefined,
-          s"with $kv the scan was not redistributed by doc_id")
-        // a frame that already reports one partition is still returned as is
-        val one = docs.coalesce(1)
-        assert(one.queryExecution.executedPlan.outputPartitioning === SinglePartition)
-        assert(ReferenceQueries.parallelized(one) eq one, s"with $kv")
+        val (small, jobs) = jobsDuring(ReferenceQueries.fitsOnePartition(docs))
+        assert(!small && jobs.isEmpty, s"with $kv")
+        val shuffles = shuffleOps(ReferenceQueries.idfCounts(docs, Seq("lang"),
+          Tokenize.tokens(col("text")), lit(true)))
+        assert(shuffles.exists(docIdRedistribution.findFirstIn(_).isDefined),
+          s"with $kv the scan was not redistributed by doc_id:\n${shuffles.mkString("\n")}")
       }
     }
+  }
+
+  test("a posting over a small file scan keeps its doc_id distribution for doc-keyed consumers") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    val (docs, _) = smallDocsAndDim()
+    // q10's shape over docTokenCounts: a (doc_id, token) count and a
+    // doc_id window over the posting, both satisfied by the one
+    // redistribution under it
+    val posting = ReferenceQueries.docTokens(docs, persist = false)
+    val tf = posting.groupBy("doc_id", "token").agg(count(lit(1)).as("cnt"))
+      .withColumn("total", sum(col("cnt")).over(Window.partitionBy("doc_id")))
+    val shuffles = shuffleOps(tf)
+    assert(shuffles.size === 1, shuffles.mkString("\n"))
+    assert(docIdRedistribution.findFirstIn(shuffles.head).isDefined, shuffles.head)
+    // a frame that already reports one partition is still returned as is
+    val one = docs.coalesce(1)
+    assert(one.queryExecution.executedPlan.outputPartitioning === SinglePartition)
+    assert(ReferenceQueries.parallelized(one) eq one)
   }
 
   test("parallelized returns a one-partition pin untouched and starts no job") {
