@@ -47,6 +47,12 @@ object Tables {
     * max-mtime of immediate children (round-11 advice): a regenerated
     * table with an identical TOTAL byte size, or a change inside a
     * nested partition subdirectory, must still read as a new identity.
+    *
+    * The tree is walked with `listStatus`, not `listFiles`: the latter
+    * builds a `LocatedFileStatus` per file, which loads the file's
+    * owner and permissions, and on a local filesystem without native
+    * Hadoop IO that starts one `ls -ld` process per file on every
+    * table load.
     */
   def fileFingerprint(spark: SparkSession, sfDir: String,
       name: String): String = {
@@ -54,12 +60,12 @@ object Tables {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val base = fs.makeQualified(p).toString
     val tuples = scala.collection.mutable.ArrayBuffer.empty[String]
-    val it = fs.listFiles(p, true) // recursive: nested partition dirs count
-    while (it.hasNext) {
-      val st = it.next()
-      val rel = st.getPath.toString.stripPrefix(base)
-      tuples += s"$rel:${st.getLen}:${st.getModificationTime}"
+    // recursive: nested partition dirs count
+    def walk(dir: org.apache.hadoop.fs.Path): Unit = fs.listStatus(dir).foreach { st =>
+      if (st.isDirectory) walk(st.getPath)
+      else tuples += s"${st.getPath.toString.stripPrefix(base)}:${st.getLen}:${st.getModificationTime}"
     }
+    walk(p)
     val md = java.security.MessageDigest.getInstance("MD5")
     tuples.sorted.foreach(t => md.update(t.getBytes("UTF-8")))
     md.digest().map("%02x".format(_)).mkString

@@ -119,9 +119,9 @@ object ReferenceQueries {
     * `docTokenCounts` rollup hand their consumers. Without it, eight
     * of the rollup's nine consumers planned one to six more exchanges
     * on every call at sf0.1. Two callers judge a small input first
-    * ([[fitsOnePartition]]) and skip the redistribution:
-    * [[idfCounts]], whose one aggregate keys by token, and
-    * [[docVectorsOf]], which declares such an input one partition.
+    * ([[fitsOnePartition]]) and read it as one declared partition
+    * instead ([[onePartitionIfSmall]]): [[idfCounts]], whose aggregate
+    * keys by token, and [[docVectorsOf]].
     *
     * An input whose physical plan already reports `SinglePartition` is
     * returned unchanged: that is a frame declared small enough to sit
@@ -156,10 +156,11 @@ object ReferenceQueries {
     * than the rows a shuffle writes, and text that compresses better
     * reads smaller still. An input misjudged small is thus some
     * multiple of the floor that AQE would have split into that many
-    * partitions, and its caller runs on fewer tasks than it could:
-    * [[idfCounts]] tokenizes on the scan's own tasks (its aggregate
-    * still shuffles by token), and [[docVectorsOf]] runs all its work
-    * (tokenize, token count, tf window, vector sum) in ONE task.
+    * partitions, and its caller runs in ONE task what could have run
+    * on that many ([[onePartitionIfSmall]]): [[idfCounts]] its
+    * tokenize and (keys…, token) count, and [[idfOf]] over them its
+    * per-key window; [[docVectorsOf]] its tokenize, token count, tf
+    * window and vector sum.
     * A plan Spark cannot size (an RDD leaf without statistics) reports
     * `Long.MaxValue` and is judged large; a streaming frame is never
     * judged small.
@@ -168,6 +169,14 @@ object ReferenceQueries {
     val est = docs.queryExecution.optimizedPlan.stats.sizeInBytes
     est.isValidLong && coalescesToOne(docs.sparkSession, est.toLong)
   }
+
+  /** `docs` read as one declared partition (`coalesce(1)`) when it is
+    * small ([[fitsOnePartition]]), the one partition AQE would have
+    * coalesced a shuffle of it into; else [[parallelized]]. Operators
+    * above a small input then plan no exchange at all.
+    */
+  private def onePartitionIfSmall(docs: DataFrame): DataFrame =
+    if (fitsOnePartition(docs)) docs.coalesce(1) else parallelized(docs)
 
   /** Whether AQE would read a shuffle that writes `bytes` as one
     * partition: coalescing is on and it never splits below the minimum
@@ -184,7 +193,8 @@ object ReferenceQueries {
 
   /** The number of partitions `p` will produce, read off the plan
     * without executing it; None when the plan does not say (and
-    * [[parallelized]] then redistributes). Leaves
+    * [[parallelized]] then redistributes, [[idfOf]] takes its
+    * several-partition form). Leaves
     * report the partitions of their input RDD, which is built (file
     * splits listed, a checkpoint's blocks named) but never run. A
     * shuffle reports its planned count: if AQE later coalesces it, the
@@ -312,15 +322,15 @@ object ReferenceQueries {
     * aggregate into one of [[idfOf]]'s two branches only. Counts are
     * sums of per-post rows, so the counts of two disjoint corpora
     * summed by (keys…, token) are the counts of their union
-    * ([[summedCounts]]).
+    * ([[summedCounts]]). A small `docs` is read as one declared
+    * partition ([[onePartitionIfSmall]]): the aggregate then plans no
+    * exchange, and [[idfOf]] over it none either.
     */
   private[graft] def idfCounts(docs: DataFrame, keys: Seq[String],
       tokens: Column, qualifies: Column): DataFrame = {
     val vocab = filter(coalesce(tokens, array().cast("array<string>")),
       t => length(t) >= 4)
-    // nothing here keys by doc_id, so a small input skips that
-    // redistribution (AQE would read it back as one partition)
-    (if (fitsOnePartition(docs)) docs else parallelized(docs))
+    onePartitionIfSmall(docs)
       .select(keys.map(col) ++ Seq(qualifies.as("q"),
         explode(concat(array(lit("")), vocab)).as("token")): _*)
       // the exploded element type is nullable, though no element is null
@@ -334,40 +344,56 @@ object ReferenceQueries {
     * `counts`, per key: (keys…, token, occurrences, idf) for every
     * vocabulary token (`token_rows > 0`). raw = log10(n_posts / occ),
     * or -1 when occ is 0; idf = raw when raw > 0, else the key's
-    * smallest raw. A small per-key aggregate gives `n_posts` (the
-    * sentinel group, `token_rows` 0) and that smallest raw: raw falls
-    * as occ grows (division and log10 are monotone), so it is the raw
-    * at the largest occurrence count, or -1 when some token has 0
-    * occurrences — the same value, bit for bit, as a `min` over every
-    * token's raw. A key with no qualifying post gets no rows, as the
-    * reference deploys no worker for it; with no keys the table covers
-    * the whole corpus and a corpus with no qualifying post keeps every
-    * token at -1.
+    * smallest raw. Three per-key figures give `n_posts` (the sentinel
+    * group, `token_rows` 0) and that smallest raw: raw falls as occ
+    * grows (division and log10 are monotone), so it is the raw at the
+    * largest occurrence count, or -1 when some token has 0 occurrences
+    * — the same value, bit for bit, as a `min` over every token's raw.
+    * A key with no qualifying post gets no rows, as the reference
+    * deploys no worker for it, and neither does a null key; with no
+    * keys the table covers the whole corpus and a corpus with no
+    * qualifying post keeps every token at -1.
+    *
+    * Counts planned as one partition (read off the plan,
+    * [[plannedPartitions]]: a small [[idfCounts]]) take the figures
+    * from one window over the keys, in the task that counted them: no
+    * exchange and no broadcast. Counts of several partitions (a large
+    * corpus, [[summedCounts]] of several deltas) take them from a
+    * per-key aggregate broadcast back to the tokens, and never run a
+    * vocabulary-sized window in one task.
     */
   private[graft] def idfOf(counts: DataFrame, keys: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     // tells a token group from the sentinel group by an aggregate, not
     // by the grouping key: a filter on `token` would be pushed below the
     // aggregate into one branch only, and the two branches would no
     // longer share one exchange (the corpus would be tokenized twice)
     val vocab = col("token_rows") > 0
+    def figures(per: Column => Column) = Seq(
+      per(max(when(!vocab, col("occurrences")))).as("n_posts"),
+      per(max(when(vocab, col("occurrences")))).as("max_occ"),
+      per(min(when(vocab, col("occurrences")))).as("min_occ"))
+    val spread = if (plannedPartitions(counts.queryExecution.executedPlan).contains(1)) {
+      val w = Window.partitionBy(keys.map(col): _*)
+      counts.select(col("*") +: figures(_.over(w)): _*).filter(vocab)
+    } else {
+      val f = figures(identity)
+      val perKey = counts.groupBy(keys.map(col): _*).agg(f.head, f.tail: _*)
+      val tokens = counts.filter(vocab)
+      if (keys.isEmpty) tokens.crossJoin(broadcast(perKey))
+      else tokens.join(broadcast(perKey), keys)
+    }
     val maxRaw = when(col("max_occ") > 0,
       log10(col("n_posts") / col("max_occ")))
-    val perKey = counts.groupBy(keys.map(col): _*).agg(
-      max(when(!vocab, col("occurrences"))).cast("double").as("n_posts"),
-      max(when(vocab, col("occurrences"))).as("max_occ"),
-      min(when(vocab, col("occurrences"))).as("min_occ"))
-    val floors = (if (keys.isEmpty) perKey else perKey.filter(col("n_posts") > 0))
-      .select(keys.map(col) ++ Seq(col("n_posts"),
-        when(col("min_occ") === 0, least(maxRaw, lit(-1.0)))
-          .otherwise(maxRaw).as("min_raw")): _*)
-    val tokens = counts.filter(vocab)
-    (if (keys.isEmpty) tokens.crossJoin(broadcast(floors))
-     else tokens.join(broadcast(floors), keys))
+    val minRaw = when(col("min_occ") === 0, least(maxRaw, lit(-1.0)))
+      .otherwise(maxRaw)
+    // a null key has no table: the join drops it, the window keeps it
+    (if (keys.isEmpty) spread
+     else spread.filter(keys.map(col(_).isNotNull).foldLeft(col("n_posts") > 0)(_ && _)))
       .withColumn("raw",
         when(col("occurrences") > 0, log10(col("n_posts") / col("occurrences")))
           .otherwise(lit(-1.0)))
-      .withColumn("idf",
-        when(col("raw") > 0, col("raw")).otherwise(col("min_raw")))
+      .withColumn("idf", when(col("raw") > 0, col("raw")).otherwise(minRaw))
       .select(keys.map(col) ++ Seq(col("token"), col("occurrences"), col("idf")): _*)
   }
 
@@ -381,17 +407,16 @@ object ReferenceQueries {
     * all-zero vec, which a store writes as NULL (F12,
     * [[graft.streaming.DedupStream.storeVectorRows]]). The token count,
     * tf window and vector sum share one `doc_id` exchange, and plan
-    * none when `docs` is small ([[fitsOnePartition]]): that input is
-    * read as one declared partition (`coalesce(1)`), the one partition
-    * AQE would have coalesced the exchange into. The scan, tokenize
-    * and all three then run in one task; an input the estimate
-    * misjudges small loses all its spread, not only the scan's.
+    * none when `docs` is small: that input is read as one declared
+    * partition ([[onePartitionIfSmall]]). The scan, tokenize and all
+    * three then run in one task; an input the estimate misjudges small
+    * loses all its spread, not only the scan's.
     */
   private[graft] def docVectorsOf(docs: DataFrame, tokens: Column,
       wordvecs: DataFrame, joinKeys: Seq[String], dim: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val docKeys = "doc_id" +: joinKeys.filterNot(_ == "token")
-    val counts = (if (fitsOnePartition(docs)) docs.coalesce(1) else parallelized(docs))
+    val counts = onePartitionIfSmall(docs)
       .select(docKeys.map(col) :+ explode(tokens).as("token"): _*)
       .groupBy(("doc_id" +: joinKeys).map(col): _*)
       .agg(count(lit(1)).as("cnt"))

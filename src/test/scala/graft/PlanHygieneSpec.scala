@@ -17,31 +17,6 @@ class PlanHygieneSpec extends AnyFunSuite with SparkSpec {
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.sparkPlan.toString
 
-  /** Every operator of the FINAL executed plan, recursing through the
-    * AQE wrappers. `sparkPlan` can never contain an Exchange —
-    * EnsureRequirements only runs in executedPlan preparation — and
-    * TreeNode.collect stops at the AQE leaves (AdaptiveSparkPlanExec
-    * and QueryStageExec are LeafExecNodes wrapping their real subtree),
-    * so a plain collect over either plan is vacuously Exchange-free
-    * (round-17 ADVICE: the q30/q15 single-partition asserts passed even
-    * against an unpartitioned global window). This walks into the
-    * wrappers but NOT into InMemoryTableScan's stored definition, whose
-    * 1-row scalar aggregates legitimately carry Exchange
-    * SinglePartition — the funnel these tests exist to catch lives on
-    * the query's own execution operators. Caller must have executed the
-    * DataFrame first so the adaptive plan is final.
-    */
-  private def executedOps(df: org.apache.spark.sql.DataFrame): Seq[String] = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => a +: walk(a.executedPlan)
-      case s: QueryStageExec => s +: walk(s.plan)
-      case other => other +: other.children.flatMap(walk)
-    }
-    walk(df.queryExecution.executedPlan).map(_.simpleString(200))
-  }
-
   test("q03 point lookup pushes its IN-list into the parquet scan") {
     // q01's predicate is a synthesized CASE (not pushable by design);
     // q03's isin IS the pushdown case the scan layer must catch.
@@ -119,12 +94,36 @@ class PlanHygieneSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("wordvecsByLang tokenizes the corpus once: one Generate in the executed plan") {
-    // the min_raw broadcast re-reads the (lang, token) aggregate; its
-    // exchange is reused, so the explode still runs once
+    // a small corpus is one partition: the per-language window reads the
+    // (lang, token) aggregate in the task that counted it
     val df = ReferenceQueries.wordvecsByLang(spark, sf)
     df.collect()
     val ops = executedOps(df)
     assert(ops.count(_.startsWith("Generate")) === 1, ops.mkString("\n"))
+    assert(!ops.exists(_.contains("Exchange")), ops.mkString("\n"))
+    assert(ops.count(_.startsWith("Window")) === 1, ops.mkString("\n"))
+  }
+
+  test("wordvecsByLang above the coalescing floor broadcasts its floors and still tokenizes once") {
+    import spark.implicits._
+    // the several-partition form: the floors broadcast re-reads the
+    // (lang, token) aggregate, whose exchange is reused, alone and under
+    // an inner join (which infers a not-null filter on the join keys)
+    val vecs = Seq(("en", "column", Seq(1.0, 0.0)), ("en", "window", Seq(0.0, 1.0)))
+      .toDF("lang", "token", "vec")
+    withConfs("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "16b") {
+      val alone = ReferenceQueries.wordvecsByLang(spark, sf)
+      val joined = alone.drop("vec").join(vecs, Seq("lang", "token"))
+      assert(joined.collect().length === 2)
+      Seq(alone, joined).foreach { df =>
+        df.collect()
+        val ops = executedOps(df)
+        assert(ops.count(_.startsWith("Generate")) === 1, ops.mkString("\n"))
+        assert(!ops.exists(_.startsWith("Window")), ops.mkString("\n"))
+        assert(ops.exists(o => o.startsWith("BroadcastExchange") || o.startsWith("ReusedExchange")),
+          s"no floors broadcast:\n${ops.mkString("\n")}")
+      }
+    }
   }
 
   test("parallelized reads a shuffled frame's partitions off the plan: it starts no job") {
@@ -215,7 +214,8 @@ class PlanHygieneSpec extends AnyFunSuite with SparkSpec {
   test("wordvecsByLang inner-joined on (lang, token) tokenizes the corpus once") {
     import spark.implicits._
     // an inner join infers a not-null filter on the join keys above the
-    // IDF table; it must not split the exchange idfOf's branches share
+    // IDF table; pushed below the floors window, it must leave one
+    // tokenize pass (the case above the floor covers the shared exchange)
     val vecs = Seq(("en", "column", Seq(1.0, 0.0)), ("en", "window", Seq(0.0, 1.0)))
       .toDF("lang", "token", "vec")
     val df = ReferenceQueries.wordvecsByLang(spark, sf).drop("vec")
@@ -299,15 +299,14 @@ class PlanHygieneSpec extends AnyFunSuite with SparkSpec {
   private val docIdRedistribution =
     """Exchange hashpartitioning\(doc_id#\d+L, \d+\), REPARTITION_BY_COL""".r
 
-  test("idfCounts over a small file scan plans only its token exchange and sizes it without a job") {
+  test("idfCounts over a small file scan plans no exchange and sizes it without a job") {
     val (docs, _) = smallDocsAndDim()
     val (small, jobs) = jobsDuring(ReferenceQueries.fitsOnePartition(docs))
     assert(small, "a four-row scan was judged above the coalescing floor")
     assert(jobs.isEmpty, s"sizing the scan started ${jobs.size} jobs")
     val shuffles = shuffleOps(ReferenceQueries.idfCounts(docs, Seq("lang"),
       Tokenize.tokens(col("text")), lit(true)))
-    assert(shuffles.size === 1, shuffles.mkString("\n"))
-    assert(!shuffles.head.contains("doc_id"), s"not keyed on token: ${shuffles.head}")
+    assert(shuffles.isEmpty, shuffles.mkString("\n"))
   }
 
   test("idfCounts redistributes a small scan by doc_id above the floor or with coalescing off") {
@@ -357,12 +356,13 @@ class PlanHygieneSpec extends AnyFunSuite with SparkSpec {
     } finally DedupStream.unpin(docs)
   }
 
-  test("the single-language IDF table tokenizes the corpus once: one Generate, caches included") {
+  /** Like [[executedOps]], but walking into each distinct session
+    * cache's stored plan once, so the work a cached table did counts.
+    */
+  private def opsWithCaches(df: org.apache.spark.sql.DataFrame): Seq[String] = {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    // the posting is a session cache, so the explode sits in a cached
-    // plan: walk into each distinct cache once
     val seen = scala.collection.mutable.Set.empty[SparkPlan]
     def walk(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
@@ -372,10 +372,42 @@ class PlanHygieneSpec extends AnyFunSuite with SparkSpec {
         if (seen.add(cached)) m +: walk(cached) else Seq(m)
       case other => other +: other.children.flatMap(walk)
     }
-    val df = ReferenceQueries.idfTableOf(Tables.documents(spark, sf))
     df.collect()
-    val ops = walk(df.queryExecution.executedPlan).map(_.simpleString(200))
+    walk(df.queryExecution.executedPlan).map(_.simpleString(200))
+  }
+
+  test("the single-language IDF table tokenizes the corpus once: one Generate, caches included") {
+    val ops = opsWithCaches(ReferenceQueries.idfTableOf(Tables.documents(spark, sf)))
     assert(ops.count(_.startsWith("Generate")) === 1, ops.mkString("\n"))
+  }
+
+  test("the IDF tables and their consumers over a small corpus plan no shuffle, caches included") {
+    // one declared partition from the scan up: the token count, the
+    // floors window, the doc-vector sum and the final sort need no
+    // exchange (3, 2, 2, 3 and 6 while the floors were a broadcast over
+    // a token exchange)
+    Seq("q11_idf", "q12_doc_vectors", "q30_doc_vector_map", "q32_multilang_vectors",
+      "x52_incremental_idf").foreach { name =>
+      val ops = opsWithCaches(SparkEntry.queries(name)(spark, sf))
+      assert(!ops.exists(_.startsWith("Exchange")), s"$name:\n${ops.mkString("\n")}")
+    }
+  }
+
+  test("wordvecsByLang joined to a cached vector frame starts a bounded number of jobs") {
+    import spark.implicits._
+    val vecs = Seq(("en", "column", Seq(1.0, 0.0)), ("es", "datos", Seq(0.0, 1.0)))
+      .toDF("lang", "token", "vec").persist()
+    try {
+      vecs.count()
+      def dimension() = ReferenceQueries.wordvecsByLang(spark, sf).drop("vec")
+        .join(vecs, Seq("lang", "token")).count()
+      dimension() // the first load of the table infers its schema
+      val (_, jobs) = jobsDuring(dimension())
+      // 2 measured on 8 cores; 7 while the floors were a broadcast over
+      // a token exchange
+      assert(jobs.size <= 4, s"${jobs.size} jobs: " +
+        jobs.map(_.stageInfos.map(_.name).mkString(" | ")).mkString("; "))
+    } finally vecs.unpersist(blocking = true)
   }
 
   test("q29 lang-dispatched tokenizer is a pure projection (no UDF, no shuffle before sort)") {

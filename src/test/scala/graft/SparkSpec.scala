@@ -65,6 +65,30 @@ trait SparkSpec {
       (r, started.toArray(Array.empty[SparkListenerJobStart]).toSeq)
     } finally sc.removeSparkListener(listener)
   }
+  /** Every operator of the FINAL executed plan, recursing through the
+    * AQE wrappers. `sparkPlan` can never contain an Exchange —
+    * EnsureRequirements only runs in executedPlan preparation — and
+    * TreeNode.collect stops at the AQE leaves (AdaptiveSparkPlanExec
+    * and QueryStageExec are LeafExecNodes wrapping their real subtree),
+    * so a plain collect over either plan is vacuously Exchange-free
+    * (round-17 ADVICE: the q30/q15 single-partition asserts passed even
+    * against an unpartitioned global window). This walks into the
+    * wrappers but NOT into InMemoryTableScan's stored definition, whose
+    * 1-row scalar aggregates legitimately carry Exchange
+    * SinglePartition — the funnel these tests exist to catch lives on
+    * the query's own execution operators. Caller must have executed the
+    * DataFrame first so the adaptive plan is final.
+    */
+  def executedOps(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => a +: walk(a.executedPlan)
+      case s: QueryStageExec => s +: walk(s.plan)
+      case other => other +: other.children.flatMap(walk)
+    }
+    walk(df.queryExecution.executedPlan).map(_.simpleString(200))
+  }
   /** Runs `body` with the session confs `kv` set, restoring each after. */
   def withConfs[T](kv: (String, String)*)(body: => T): T = {
     val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }

@@ -216,6 +216,27 @@ class VersionedStoreSpec extends AnyFunSuite with SparkSpec {
       "nested mtime change not detected")
   }
 
+  test("fileFingerprint digests the same tuples as a recursive listFiles walk") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_fp_walk").toString
+    Seq((1L, "a", "x", 1), (2L, "b", "y", 2), (3L, "c", "y", 3)).toDF("id", "v", "p", "q")
+      .write.partitionBy("p", "q").parquet(s"$dir/t.parquet")
+    // the published digests were taken over this walk
+    val p = new org.apache.hadoop.fs.Path(s"$dir/t.parquet")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val base = fs.makeQualified(p).toString
+    val tuples = scala.collection.mutable.ArrayBuffer.empty[String]
+    val it = fs.listFiles(p, true)
+    while (it.hasNext) {
+      val st = it.next()
+      tuples += s"${st.getPath.toString.stripPrefix(base)}:${st.getLen}:${st.getModificationTime}"
+    }
+    assert(tuples.exists(_.startsWith("/p=y/q=")), s"no nested file: $tuples")
+    val md = java.security.MessageDigest.getInstance("MD5")
+    tuples.sorted.foreach(t => md.update(t.getBytes("UTF-8")))
+    assert(Tables.fileFingerprint(spark, dir, "t") ===
+      md.digest().map("%02x".format(_)).mkString)
+  }
+
   test("a merge publishes as a new version, never rewriting the old one") {
     val root = java.nio.file.Files.createTempDirectory("graft_vstore2").toString
     val base = Seq((1L, 10.0), (2L, 20.0)).toDF("id", "score")

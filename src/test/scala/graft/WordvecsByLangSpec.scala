@@ -12,17 +12,19 @@ import graft.queries.ReferenceQueries
   * over one tokenize pass. It must equal, row for row and bit for bit,
   * the earlier form kept here as the reference: a distinct vocabulary,
   * a `left_semi` on the qualifying posts' `doc_id`s, a group-by and a
-  * left join.
+  * left join. `idfOf`'s one-partition (window) and several-partition
+  * (broadcast) forms must equal each other the same way.
   */
 class WordvecsByLangSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
   /** Jobs of a repeated dimension build over [[fixture]] at local[8]:
-    * 4 measured. Before `n_posts` folded into the token aggregate and
-    * table schemas were memoized, the same build took 7: a parquet
-    * footer-inference job, and the `n_posts` aggregate and broadcast.
+    * 1 measured, the scan, tokenize, count and floors window in one
+    * task. While the floors were a per-key aggregate broadcast over a
+    * token exchange, the build took 4; before `n_posts` folded into the
+    * token aggregate and table schemas were memoized, 7.
     */
-  private val MaxDimensionJobs = 5
+  private val MaxDimensionJobs = 2
 
   private def reference(docs: DataFrame): DataFrame = {
     val tok = docs.select(col("doc_id"), col("lang"),
@@ -179,6 +181,105 @@ class WordvecsByLangSpec extends AnyFunSuite with SparkSpec {
     assert(got.map(_._1).toSeq === Seq("alpha", "bravo", "charlie", "delta",
       "echo", "foxtrot", "golf", "hotel"))
     assert(got.forall(r => r._2 == 0L && r._3 == -1.0))
+  }
+
+  /** [[ReferenceQueries.idfOf]] over the counts of `docs` keyed by
+    * `keys` (`lang`: [[ReferenceQueries.wordvecsByLang]]'s; none:
+    * [[ReferenceQueries.idfBatchState]]'s), in the one-partition form
+    * and, under a 16-byte coalescing floor, in the several-partition
+    * form: each as sorted (key, token, occurrences, idf's raw bits)
+    * rows, after checking which form the executed plan took.
+    */
+  private def idfForms(docs: DataFrame, keys: Seq[String]) = {
+    // a projection of its own, so that no session cache of the same
+    // table (sf0.001's q11 table) stands in for either form
+    val input = docs.select("doc_id", "text", "lang", "n_chars")
+    def rows(window: Boolean) = {
+      val counts =
+        if (keys.isEmpty) ReferenceQueries.idfBatchState(input)
+        else ReferenceQueries.idfCounts(input, keys,
+          Tokenize.tokensByLang(col("text"), col("lang")), col("n_chars") >= 100)
+      val idf = ReferenceQueries.idfOf(counts, keys)
+      val got = idf.select(keys.headOption.fold(lit(""))(col).as("key"),
+        col("token"), col("occurrences"), col("idf"))
+        .as[(String, String, Long, Double)].collect()
+        .map(r => (r._1, r._2, r._3, java.lang.Double.doubleToRawLongBits(r._4)))
+        .sorted.toSeq
+      val ops = executedOps(idf)
+      if (window) {
+        assert(ops.count(_.startsWith("Window")) === 1, ops.mkString("\n"))
+        assert(!ops.exists(_.contains("Exchange")), ops.mkString("\n"))
+      } else {
+        assert(!ops.exists(_.startsWith("Window")), ops.mkString("\n"))
+        assert(ops.exists(_.startsWith("BroadcastExchange")), ops.mkString("\n"))
+      }
+      got
+    }
+    val one = rows(window = true)
+    val several = withConfs(
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "16b")(rows(window = false))
+    assert(one === several, s"keys $keys")
+    one
+  }
+
+  test("both idfOf forms give the same rows, bit for bit") {
+    val bits = java.lang.Double.doubleToRawLongBits _
+    // the session cache other suites leave behind must not stand in
+    ReferenceQueries.q11_idf(spark, sf).collect()
+    Seq(fixture, sf).foreach { dir =>
+      val docs = Tables.documents(spark, dir)
+      val byLang = idfForms(docs, Seq("lang"))
+      val corpus = idfForms(docs, Nil)
+      assert(byLang.nonEmpty && corpus.nonEmpty, dir)
+      if (dir == fixture) {
+        // no qualifying de post, and a null lang: no rows for either
+        assert(byLang.map(_._1).distinct === Seq("en", "es", "fr", "it", "ru"))
+        // a 0-occurrence token takes the floor, at most -1
+        assert(byLang.filter(r => r._1 == "en" && r._2 == "shortonly") ===
+          Seq(("en", "shortonly", 0L, bits(-1.0))))
+        assert(corpus.filter(_._2 == "shortonly") === Seq(("", "shortonly", 0L, bits(-1.0))))
+      }
+    }
+    // no qualifying post in the corpus: every token at -1, and per
+    // language only es, whose one long post qualifies
+    val none = Seq(
+      (1L, "alpha bravo alpha", "en", 17L),
+      (2L, "charlie delta", "en", 13L),
+      (3L, ("alpha echo foxtrot " * 8).trim, "es", 151L),
+      (4L, ("golf hotel " * 12).trim, null, 131L))
+      .toDF("doc_id", "text", "lang", "n_chars")
+    val corpus = idfForms(none, Nil)
+    assert(corpus.size === 8 && corpus.forall(r => r._3 == 0L && r._4 == bits(-1.0)))
+    assert(idfForms(none, Seq("lang")).map(_._1).distinct === Seq("es"))
+  }
+
+  test("a highly compressible input is judged small and runs in one task") {
+    // one text repeated: the parquet estimate is far under the floor,
+    // while a shuffle of the rows would carry at least the text bytes,
+    // over it (the size rule misjudges such input; see
+    // ReferenceQueries.fitsOnePartition)
+    val text = ("lorem ipsum dolor sitam consectetur adipiscing elitus sedum " * 2).trim
+    val dir = java.nio.file.Files.createTempDirectory("graft_compressible").toString
+    spark.range(0, 12000).select(col("id").as("doc_id"), lit(text).as("text"),
+        lit("en").as("lang"), lit(text.length.toLong).as("n_chars"))
+      .coalesce(1).write.parquet(s"$dir/documents.parquet")
+    val docs = Tables.documents(spark, dir)
+    val floor = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize"))
+    val textBytes = docs.agg(sum(octet_length(col("text")))).head().getLong(0)
+    assert(textBytes > floor, s"$textBytes text bytes under the $floor-byte floor")
+    assert(docs.queryExecution.optimizedPlan.stats.sizeInBytes < floor)
+    assert(ReferenceQueries.fitsOnePartition(docs))
+    // the IDF table: one window in one task, equal to the spread form
+    val idf = idfForms(docs, Seq("lang"))
+    assert(idf.map(_._2) === text.split(" ").distinct.filter(_.length >= 4).sorted.toSeq)
+    // the doc vectors: no doc_id exchange, only the dimension broadcast
+    val dim = Seq(("en", "lorem", 1.5, Seq(1.0, 0.0))).toDF("lang", "token", "idf", "vec")
+    val dv = ReferenceQueries.docVectorsByLang(docs, dim, 2)
+    assert(dv.collect().count(_.getAs[Long]("known") == 1L) === 12000)
+    val ops = executedOps(dv)
+    assert(ops.count(_.startsWith("Exchange")) === 0, ops.mkString("\n"))
+    assert(ops.count(_.startsWith("BroadcastExchange")) === 1, ops.mkString("\n"))
   }
 
   test("the dimension build starts a bounded number of jobs and no footer job") {
