@@ -24,10 +24,10 @@ import graft.queries.{ExtensionQueries, ReferenceQueries}
   *     generation per batch is batch-bands x postings — O(batch) band
   *     probes against an indexed artifact, never O(corpus^2) and
   *     never a corpus re-scan.
-  *   - `shpost/batch=N/` + `docn/batch=N/` + `df/batch=N/` — the
-  *     CONTAINMENT candidate channel (r9): hashed distinct shingles
-  *     per accepted doc, each doc's stable shingle count, and the
-  *     batch's document-frequency contribution per shingle hash.
+  *   - `shpost/batch=N/` — the CONTAINMENT candidate channel (r9):
+  *     (h, doc_id), the hashed distinct shingles of every accepted doc.
+  *     Each doc's shingle count and each hash's document frequency are
+  *     row counts over it, taken on read; nothing else stores them.
   *     Banding's collision probability IS the Jaccard, so a tiny
   *     excerpt inside a huge accepted doc (overlap ≈ 1, Jaccard ≈ 0)
   *     structurally never band-collides; the batch's shingles instead
@@ -36,18 +36,23 @@ import graft.queries.{ExtensionQueries, ReferenceQueries}
   *     explode the join — and approximate pair counts plus the stored
   *     doc sizes pass the SAME cross-measure predicate as a recall
   *     pre-filter before the exact verify decides. Doc shingle-set
-  *     sizes are doc-intrinsic, so `docn` never goes stale; df is the
-  *     only drifting quantity and it only gates CANDIDATE generation,
-  *     never the verified measure. At warehouse scale `shpost`/`df`
-  *     are bucketed by hash and the df slices are compacted nightly
-  *     (sources/TableMaintenance) — here slices are summed on read.
+  *     sizes are doc-intrinsic and never go stale; df is the only
+  *     drifting quantity and it only gates CANDIDATE generation, never
+  *     the verified measure. At warehouse scale `shpost` is bucketed by
+  *     hash and compacted nightly ([[compactStore]]).
   *   - `docs/batch=N/` — (doc_id, text, lang) of every accepted doc. Read
   *     ONLY through a left-semi join against the candidate hist-id
   *     frame: exact verification re-shingles the handful of history
   *     docs a candidate pair touches, not the corpus.
   *   - `vectors/batch=N/` — the survivors' doc vectors, in the slice
-  *     layout VectorizeStream writes; [[storeVectors]] reads the
-  *     latest row per doc.
+  *     layout VectorizeStream writes, as `array<float>`: the precision
+  *     of the word vectors they sum, and the reference's float32 blob
+  *     (`worker.py:90`). Readers declare `array<double>`, which parquet
+  *     widens exactly, so old double slices and new float slices read
+  *     alike; [[storeVectors]] reads the latest row per doc.
+  *   - `segown/`, `cleandocs/`, `stats/` and, when their channels are
+  *     on, `dupedges/` and `lexpost/` + `lexdf/` + `lexconsts/` (see
+  *     [[processBatch]]).
   *
   * Every sliced artifact has a declared schema ([[storeSchemas]]), and
   * history is read with it: no footer-inference job per artifact per
@@ -62,7 +67,7 @@ import graft.queries.{ExtensionQueries, ReferenceQueries}
   * partition anyway is declared one partition: the doc-keyed
   * aggregates, windows and joins over it then plan no shuffle, so
   * they run no shuffle-map job. Measured at local[8], the first batch
-  * of `DedupStreamBatchSpec` launches 29 jobs and its history batch 46
+  * of `DedupStreamBatchSpec` launches 26 jobs and its history batch 44
   * (46 and 63-64 over plain checkpoints).
   *
   * Exactly-once: checkpointed file-source offsets make each input
@@ -94,11 +99,6 @@ object DedupStream {
 
   private[streaming] val shpostSchema: StructType = StructType(Seq(
     StructField("h", LongType), StructField("doc_id", LongType)))
-  private[streaming] val docnSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType), StructField("n_sh", LongType)))
-  private[streaming] val dfSchema: StructType = StructType(Seq(
-    StructField("h", LongType), StructField("cnt", LongType),
-    StructField("batch", LongType)))
 
   private[streaming] val segownSchema: StructType = StructType(Seq(
     StructField("h", LongType), StructField("owner", LongType)))
@@ -279,20 +279,11 @@ object DedupStream {
       val histShpost = readOrEmpty(spark, s"$storeRoot/shpost", shpostSchema)
         .select("h", "doc_id")
         .join(broadcast(batchIds), Seq("doc_id"), "left_anti")
-      val histDocn = readOrEmpty(spark, s"$storeRoot/docn", docnSchema)
-        .select("doc_id", "n_sh")
-        .join(broadcast(batchIds), Seq("doc_id"), "left_anti")
-      // df slices carry no doc ids, so replay safety is by PARTITION:
-      // the only slice that can be this batch's own half-written
-      // replay is batch=<this id> — exclude it, sum the rest
-      val histDf = readOrEmpty(spark, s"$storeRoot/df", dfSchema)
-        .filter(col("batch") =!= batchId)
-        .groupBy("h").agg(sum(col("cnt")).as("df"))
       val sh = pin(ExtensionQueries.docShingles(batchDocs, persistShared = false))
       val batchBands = pin(ExtensionQueries.bandsOf(sh))
       try {
         val (drops, dupTagged, cand) = dropsOf(sh, batchBands, histBands,
-          histDocs, histShpost, histDocn, histDf)
+          histDocs, histShpost)
         val dupPairs = dupTagged.select("d1", "d2").distinct()
         try {
           // SOFT mode: near-dups are accepted and RECORDED instead of
@@ -388,26 +379,14 @@ object DedupStream {
                 .write.mode(SaveMode.Overwrite)
                 .parquet(s"$storeRoot/dupedges/batch=$batchId")
             }
-            // the containment channel's three survivor-only slices:
-            // hashed shingle posting, stable per-doc shingle counts,
-            // and this batch's df contribution. Pinned once, three
-            // projections (per-doc shingles are already distinct, so
-            // the df count IS docs-containing). Idempotent like the
-            // band slice: a replay overwrites batch=N with identical
-            // content.
-            val survHash = pin(sh
-              .join(survivors.select("doc_id"), Seq("doc_id"), "left_semi")
-              .select(col("doc_id"), xxhash64(col("shingle")).as("h")))
-            try {
-              survHash.select("h", "doc_id").write.mode(SaveMode.Overwrite)
-                .parquet(s"$storeRoot/shpost/batch=$batchId")
-              survHash.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-                .write.mode(SaveMode.Overwrite)
-                .parquet(s"$storeRoot/docn/batch=$batchId")
-              survHash.groupBy("h").agg(count(lit(1)).as("cnt"))
-                .write.mode(SaveMode.Overwrite)
-                .parquet(s"$storeRoot/df/batch=$batchId")
-            } finally unpin(survHash)
+            // the containment channel's one slice: the survivors'
+            // hashed shingle posting, whose counts [[dropsOf]] takes
+            // on read. Idempotent like the band slice: a replay
+            // overwrites batch=N with identical content.
+            sh.join(survivors.select("doc_id"), Seq("doc_id"), "left_semi")
+              .select(xxhash64(col("shingle")).as("h"), col("doc_id"))
+              .write.mode(SaveMode.Overwrite)
+              .parquet(s"$storeRoot/shpost/batch=$batchId")
             // LEXICAL channel — streaming maintenance of the
             // ml/Bm25Index artifact (the x52 incremental-idf
             // precedent applied to retrieval): each batch publishes
@@ -576,11 +555,13 @@ object DedupStream {
     *      (`dupEdgesFromPosting`) over just this batch's posting;
     *   3. batch-vs-history containment — the batch's hashed shingles
     *      probe the maintained `shpost` artifact, restricted to
-    *      history-rare shingles (df ≤ cap from the summed `df`
-    *      slices), and the approximate pair counts + stored doc sizes
-    *      pass `dupEdgePred` as a recall pre-filter. Hash collisions
-    *      only INFLATE the approximate counts (candidate superset)
-    *      and the exact verify kills them.
+    *      history-rare shingles (df ≤ cap, df counted over `shpost`),
+    *      and the approximate pair counts + history doc sizes (also
+    *      counted over `shpost`) pass `dupEdgePred` as a recall
+    *      pre-filter. `histShpost` must already exclude the batch's
+    *      own ids (the replay rule), so both counts are history's.
+    *      Hash collisions only INFLATE the approximate counts
+    *      (candidate superset) and the exact verify kills them.
     *
     * Verification applies the CROSS-MEASURE dup predicate
     * (`ExtensionQueries.dupEdgePred`: Jaccard >= 0.5 OR containment
@@ -599,8 +580,7 @@ object DedupStream {
     * `cand.unpersist()` is a silent no-op on a checkpoint.
     */
   private[graft] def dropsOf(batchSh: DataFrame, batchBands: DataFrame,
-      histBands: DataFrame, histDocs: DataFrame, histShpost: DataFrame,
-      histDocn: DataFrame, histDf: DataFrame)
+      histBands: DataFrame, histDocs: DataFrame, histShpost: DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
     val bNew = batchBands.select(col("doc_id").as("dn"), col("band"), col("sig"))
     val bHist = histBands.select(col("doc_id").as("da"), col("band"), col("sig"))
@@ -633,14 +613,16 @@ object DedupStream {
     val bHash = batchSh
       .select(col("doc_id").as("b"), xxhash64(col("shingle")).as("h"))
     val bN = bHash.groupBy("b").agg(count(lit(1)).as("n1"))
-    val rare = histDf.filter(col("df") <= DfCap).select("h")
+    // a doc's shingles are distinct, so a hash's row count IS its df
+    val rare = histShpost.groupBy("h").agg(count(lit(1)).as("df"))
+      .filter(col("df") <= DfCap).select("h")
     val probed = bHash.join(rare, Seq("h"), "left_semi")
       .join(histShpost.select(col("h"), col("doc_id").as("hd")), Seq("h"))
       .groupBy("b", "hd").agg(count(lit(1)).as("shared"))
     val vsHistTagged = probed
       .join(bN, Seq("b"))
-      .join(histDocn.select(col("doc_id").as("hd"), col("n_sh").as("n2")),
-        Seq("hd"))
+      .join(histShpost.groupBy(col("doc_id").as("hd"))
+        .agg(count(lit(1)).as("n2")), Seq("hd"))
       .filter(ExtensionQueries.dupEdgePred)
       .select(least(col("b"), col("hd")).as("d1"),
         greatest(col("b"), col("hd")).as("d2"),
@@ -682,30 +664,37 @@ object DedupStream {
     StructField("vec", ArrayType(DoubleType)),
     StructField("batch", LongType)))
 
+  /** The type a stored `vec` is written in: float32, the precision of
+    * the word vectors a doc vector sums and of the reference's stored
+    * blob. [[vectorsSchema]] reads it back widened to double, exactly.
+    */
+  private val StoredVec: DataType = ArrayType(FloatType)
+
   /** A doc-vector frame ([[ReferenceQueries.docVectorsOf]]) as rows of
     * [[vectorsSchema]] before the `batch` column: (doc_id, lang,
-    * known_ratio, vec), with a NULL `vec` for a doc with no known
-    * token, as the reference stores `doc_vectors=None` (F12,
-    * `worker.py:90`). Every vector-store writer projects through it.
+    * known_ratio, vec), with the vector rounded to float32 and NULL for
+    * a doc with no known token, as the reference stores
+    * `doc_vectors=None` (F12, `worker.py:90`). Every vector-store
+    * writer projects through it.
     */
   private[graft] def storeVectorRows(dv: DataFrame): DataFrame =
     dv.select(col("doc_id"), col("lang"), col("known_ratio"),
-      when(col("known") > 0, col("vec")).as("vec"))
+      when(col("known") > 0, col("vec").cast(StoredVec)).as("vec"))
 
   /** Every `batch=N`-sliced store artifact with the columns its slices
-    * are written in: what the history and store reads declare and
-    * [[compactStore]] consolidates. `df`'s and `vectors`' schemas also
-    * declare the `batch` partition column: `df`'s replay filter reads
-    * it, and the vector store's latest row per doc is the one of the
-    * highest batch.
+    * are read as: what the history and store reads declare and
+    * [[compactStore]] consolidates. Each is written in these types,
+    * except `vectors.vec`, written as float32 (`StoredVec`). The
+    * `vectors` schema also declares the `batch` partition column: the
+    * vector store's latest row per doc is the one of the highest batch.
     */
   private[graft] val storeSchemas: Seq[(String, StructType)] = Seq(
     "postings" -> bandSchema, "docs" -> keptDocSchema,
-    "shpost" -> shpostSchema, "docn" -> docnSchema,
-    "segown" -> segownSchema, "cleandocs" -> cleanDocSchema,
-    "dupedges" -> dupedgeSchema, "lexpost" -> lexpostSchema,
-    "lexdf" -> lexdfSchema, "lexconsts" -> lexconstsSchema,
-    "df" -> dfSchema, "stats" -> statsSchema, "vectors" -> vectorsSchema)
+    "shpost" -> shpostSchema, "segown" -> segownSchema,
+    "cleandocs" -> cleanDocSchema, "dupedges" -> dupedgeSchema,
+    "lexpost" -> lexpostSchema, "lexdf" -> lexdfSchema,
+    "lexconsts" -> lexconstsSchema, "stats" -> statsSchema,
+    "vectors" -> vectorsSchema)
 
   /** Live whole-corpus vocabulary stats from the maintained per-batch
     * slices: one merged sketch row per language — token total,
@@ -798,7 +787,7 @@ object DedupStream {
     }
     val owners = readOrEmpty(spark, s"$storeRoot/segown", segownSchema)
       .count()
-    val trackedShingles = readOrEmpty(spark, s"$storeRoot/df", dfSchema)
+    val trackedShingles = readOrEmpty(spark, s"$storeRoot/shpost", shpostSchema)
       .select("h").distinct().count()
     import spark.implicits._
     Seq((accepted, cleanedDocs, emptied, owners, trackedShingles))
@@ -847,9 +836,10 @@ object DedupStream {
 
   /** The maintained vector store as an ANN-ready (vec_id, v) frame —
     * every accepted doc's latest vector ([[graft.sources.Upsert
-    * .latestByKey]] over the slices), keyed by doc id (the store's vec
-    * column is the array<double> VecAgg emits; null/unknown-only
-    * vectors are excluded, they have no meaningful direction).
+    * .latestByKey]] over the slices), keyed by doc id (the store's
+    * float32 vec column read widened to array<double>, the type every
+    * vector consumer takes; null/unknown-only vectors are excluded,
+    * they have no meaningful direction).
     */
   def storeVectors(spark: SparkSession, storeRoot: String): DataFrame =
     graft.sources.Upsert.latestByKey(
@@ -1061,8 +1051,8 @@ object DedupStream {
   /** Maintenance compaction of a QUIESCED store: N per-batch slice
     * directories per artifact become one consolidated `batch=-1`
     * slice each, so history reads stop paying a directory listing +
-    * footer per ever-ingested batch (the df probe alone reads every
-    * slice every micro-batch).
+    * footer per ever-ingested batch (the containment probe alone reads
+    * every `shpost` slice every micro-batch).
     *
     * PRECONDITION — the stream is STOPPED and its checkpoint is
     * COMMITTED past every compacted batch. The per-batch slice layout
@@ -1074,11 +1064,13 @@ object DedupStream {
     * replay-safety is untouched (its rows are not in the consolidated
     * slice). This is the nightly-window job TableMaintenance.compact
     * is for flat tables, specialized to the store's partitioned
-    * replay contract: df rows re-aggregate by hash (their batch
-    * identity existed only for replay), stats slices merge
-    * sketch-wise, vectors fold to the latest row per doc (so the
-    * consolidated `batch=-1` slice sorts below every later batch's),
-    * other doc-keyed artifacts rewrite verbatim.
+    * replay contract: additive lexical rows re-aggregate by key, stats
+    * slices merge sketch-wise, vectors fold to the latest row per doc
+    * (so the consolidated `batch=-1` slice sorts below every later
+    * batch's) and are written as float32 like every new slice, other
+    * doc-keyed artifacts rewrite verbatim. Directories no declared
+    * artifact names (the `df` and `docn` slices older stores wrote)
+    * are left as they are; nothing reads them.
     *
     * Crash-safe per artifact: consolidated slice written to a temp
     * sibling, row-count (or merge-shape) validated, then swapped by
@@ -1094,11 +1086,10 @@ object DedupStream {
       "lexconsts" -> ((df: DataFrame) => df.agg(sum(col("n_docs")).as("n_docs"),
         sum(col("n_dl_docs")).as("n_dl_docs"),
         sum(col("sum_dl")).as("sum_dl"))),
-      "df" -> ((df: DataFrame) => df.groupBy("h").agg(sum(col("cnt")).as("cnt"))),
       "stats" -> ((df: DataFrame) =>
         graft.sources.SketchStore.merge(Seq(df), Seq("lang"))),
-      "vectors" -> ((df: DataFrame) =>
-        graft.sources.Upsert.latestByKey(df, "doc_id")))
+      "vectors" -> ((df: DataFrame) => graft.sources.Upsert
+        .latestByKey(df, "doc_id").withColumn("vec", col("vec").cast(StoredVec))))
     storeSchemas.flatMap { case (name, schema) =>
       val dir = s"$storeRoot/$name"
       val p = new org.apache.hadoop.fs.Path(dir)

@@ -5,7 +5,8 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit, when}
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -25,9 +26,11 @@ import graft.streaming.{DedupStream, VectorizeStream}
   *   - the Spark jobs each micro-batch launches, which is what a small
   *     batch's cost is made of (per-job driver overhead), and that none
   *     of them runs outside a query;
-  *   - every store artifact's declared schema, which the history reads
-  *     and the lexical index and vector store readers use instead of
-  *     inferring one from parquet footers;
+  *   - the store's shape: which artifacts a batch writes, every
+  *     artifact's declared schema (which the history reads and the
+  *     lexical index and vector store readers use instead of inferring
+  *     one from parquet footers), and the float32 vectors, old double
+  *     slices included;
   *   - the storage the batches' pins hold, which `unpin` must release.
   */
 class DedupStreamBatchSpec extends AnyFunSuite with SparkSpec {
@@ -42,11 +45,15 @@ class DedupStreamBatchSpec extends AnyFunSuite with SparkSpec {
     */
   private val MaxPlanChars = 125000
 
-  /** Jobs per micro-batch at local[8] (the suite's session): 29 for
-    * the first batch (empty history) and 46 for the second (with
+  /** Jobs per micro-batch at local[8] (the suite's session): 26 for
+    * the first batch (empty history) and 44 for the second (with
     * history); the bounds add about 10% for run-to-run AQE re-planning.
-    * The history batch launched 48 while it merged the whole vector
-    * store into a rewritten copy instead of writing its own slice.
+    * The batches launched 29 and 46 (bounds 32 and 51) while they
+    * pinned the survivors' hashed shingles to write `docn` and `df`
+    * slices beside `shpost`: counts the history reads now take over
+    * `shpost` itself. The history batch launched 48 while it merged
+    * the whole vector store into a rewritten copy instead of writing
+    * its own slice.
     * Before a small pinned frame declared itself one partition, every
     * doc-keyed aggregate over a pin shuffled it again only for AQE to
     * coalesce the shuffle back into one partition, and the same
@@ -55,8 +62,8 @@ class DedupStreamBatchSpec extends AnyFunSuite with SparkSpec {
     * the survivors anti-join broadcast its drops and the posting
     * redistribution was read off the plan, 58 and 79.
     */
-  private val MaxFirstBatchJobs = 32
-  private val MaxHistoryBatchJobs = 51
+  private val MaxFirstBatchJobs = 29
+  private val MaxHistoryBatchJobs = 48
 
   private def words(prefix: String, from: Int, until: Int): String =
     (from until until).map(i => s"$prefix$i").mkString(" ")
@@ -114,11 +121,20 @@ class DedupStreamBatchSpec extends AnyFunSuite with SparkSpec {
 
     def accepted: Set[Long] = spark.read.parquet(s"$store/docs")
       .select("doc_id").as[Long].collect().toSet
+
+    /** The artifact directories the store holds. */
+    def artifacts: Set[String] = Files.list(Paths.get(store)).toArray
+      .map(_.asInstanceOf[Path]).filter(Files.isDirectory(_))
+      .map(_.getFileName.toString).toSet
   }
+
+  /** What a batch stores with soft dedup and the lexical channel off. */
+  private val HardStore =
+    Set("postings", "docs", "shpost", "segown", "cleandocs", "stats", "vectors")
 
   test("two micro-batches: exact keep/drop ids, and every plan description stays bounded") {
     val in = new Ingest("graft_dstream_batch")
-    import in.{accepted, runBatch, stage, store}
+    import in.{accepted, artifacts, runBatch, stage, store}
 
     // every SQL execution from here to the drain below: the two
     // batches plus the spec's own small staging writes and reads
@@ -139,15 +155,28 @@ class DedupStreamBatchSpec extends AnyFunSuite with SparkSpec {
       stage("a", batch1)
       runBatch()
       assert(accepted === Set(1L, 2L, 3L), "batch 1 keep/drop")
+      assert(artifacts === HardStore, "batch 1 store artifacts")
 
       stage("b", batch2)
       runBatch()
       assert(accepted === Set(1L, 2L, 3L, 13L), "batch 2 keep/drop")
+      assert(artifacts === HardStore, "batch 2 store artifacts")
       val arrived = Set(1L, 2L, 3L, 4L, 11L, 12L, 13L)
       assert(arrived -- accepted === Set(4L, 11L, 12L))
-      // vectorize ran on survivors only
-      assert(spark.read.parquet(s"$store/vectors").select("doc_id")
-        .as[Long].collect().toSet === accepted)
+      // vectorize ran on survivors only, and each stored vector is the
+      // batch core's vector over the doc's stored text rounded to
+      // float32, bit for bit
+      val stored = spark.read.parquet(s"$store/vectors").select("doc_id", "vec")
+        .as[(Long, Option[Seq[Float]])].collect().toMap
+      assert(stored.keySet === accepted)
+      val exact = graft.queries.ReferenceQueries.docVectorsByLang(
+          spark.read.parquet(s"$store/docs"), dimension, Dim)
+        .select(col("doc_id"), when(col("known") > 0, col("vec")))
+        .as[(Long, Option[Seq[Double]])].collect().toMap
+      assert(exact.values.forall(_.isDefined), "fixture: every survivor has a known token")
+      def bits(v: Seq[Double]) = v.map(java.lang.Double.doubleToRawLongBits)
+      assert(stored.map { case (id, v) => id -> v.map(f => bits(f.map(_.toDouble))) } ===
+        exact.map { case (id, v) => id -> v.map(d => bits(d.map(_.toFloat.toDouble))) })
 
       org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
       info(s"${executions.get()} SQL executions, longest plan description " +
@@ -266,24 +295,62 @@ class DedupStreamBatchSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("the vector store reads the latest row per doc, before and after compaction") {
+    // an old store's double slice under a new float slice
     val store = Files.createTempDirectory("graft_dstream_latest").resolve("store").toString
     def slice(batch: Long, rows: (Long, Seq[Double])*): Unit =
       rows.map { case (id, v) => (id, "en", 1.0, v) }
         .toDF("doc_id", "lang", "known_ratio", "vec")
         .write.parquet(s"$store/vectors/batch=$batch")
+    def floatSlice(batch: Long, rows: (Long, Seq[Float])*): Unit =
+      rows.map { case (id, v) => (id, "en", 0.5, v) }
+        .toDF("doc_id", "lang", "known_ratio", "vec")
+        .write.parquet(s"$store/vectors/batch=$batch")
     def latest: Map[Long, Seq[Double]] = DedupStream.storeVectors(spark, store)
       .as[(Long, Seq[Double])].collect().toMap
-    slice(0L, 1L -> Seq(1.0, 0.0), 2L -> Seq(0.0, 1.0))
-    slice(1L, 1L -> Seq(3.0, 3.0))
-    assert(latest === Map(1L -> Seq(3.0, 3.0), 2L -> Seq(0.0, 1.0)))
+    def readStore: Map[Long, (Double, Seq[Double])] =
+      VectorizeStream.readStore(spark, s"$store/vectors")
+        .select("doc_id", "known_ratio", "vec")
+        .as[(Long, Double, Seq[Double])].collect()
+        .map { case (id, kr, v) => id -> (kr, v) }.toMap
+    val third = 1.0 / 3
+    slice(0L, 1L -> Seq(1.0, 0.0), 2L -> Seq(0.1, third))
+    floatSlice(1L, 1L -> Seq(0.1f, 3.0f))
+    // the float slice widens exactly, the double slice reads unrounded
+    val before = Map(1L -> Seq(0.1f.toDouble, 3.0), 2L -> Seq(0.1, third))
+    assert(latest === before)
+    assert(readStore === Map(1L -> (0.5, before(1L)), 2L -> (1.0, before(2L))))
     DedupStream.compactStore(spark, store)
     assert(Files.list(Paths.get(store, "vectors")).toArray.map(_.toString)
       .filter(_.contains("batch=")).map(p => Paths.get(p).getFileName.toString)
       .toSeq === Seq("batch=-1"))
-    assert(latest === Map(1L -> Seq(3.0, 3.0), 2L -> Seq(0.0, 1.0)))
+    // the consolidated slice is float32 like every new slice, so the old
+    // double row now reads as its float32 rounding
+    assert(spark.read.parquet(s"$store/vectors").schema("vec").dataType ===
+      ArrayType(FloatType))
+    val compacted = before.updated(2L, Seq(0.1f.toDouble, third.toFloat.toDouble))
+    assert(latest === compacted)
+    assert(readStore === Map(1L -> (0.5, compacted(1L)), 2L -> (1.0, compacted(2L))))
     // a batch after compaction still wins over the consolidated slice
     slice(2L, 2L -> Seq(5.0, 5.0))
-    assert(latest === Map(1L -> Seq(3.0, 3.0), 2L -> Seq(5.0, 5.0)))
+    assert(latest === compacted.updated(2L, Seq(5.0, 5.0)))
+  }
+
+  test("a store that still holds the df and docn slices of older stores dedups as without them") {
+    val in = new Ingest("graft_dstream_oldstore")
+    in.stage("a", batch1)
+    in.runBatch()
+    // counts that would change the verdict if anything read them: each
+    // shingle a stop-shingle, so the containment probe would find no
+    // rare shingle and doc 12, the excerpt, would pass
+    val shpost = spark.read.parquet(s"${in.store}/shpost")
+    shpost.select(col("h"), lit(1000000L).as("cnt")).distinct()
+      .write.parquet(s"${in.store}/df/batch=0")
+    shpost.select(col("doc_id"), lit(1L).as("n_sh")).distinct()
+      .write.parquet(s"${in.store}/docn/batch=0")
+    in.stage("b", batch2)
+    in.runBatch()
+    assert(in.accepted === Set(1L, 2L, 3L, 13L))
+    assert(in.artifacts === HardStore ++ Set("df", "docn"))
   }
 
   test("every store artifact reads the same rows with its declared schema as inferred") {
@@ -300,26 +367,27 @@ class DedupStreamBatchSpec extends AnyFunSuite with SparkSpec {
     def check(when: String): Unit = {
       // every artifact a batch writes is declared: none escapes the
       // declared reads and compaction
-      val written = Files.list(Paths.get(in.store)).toArray.map(_.asInstanceOf[Path])
-        .filter(Files.isDirectory(_)).map(_.getFileName.toString).toSet
-      assert(written -- DedupStream.storeSchemas.map(_._1) === Set.empty[String],
-        s"$when: store artifacts missing from storeSchemas")
+      assert(in.artifacts === DedupStream.storeSchemas.map(_._1).toSet,
+        s"$when: store artifacts differ from storeSchemas")
       DedupStream.storeSchemas.foreach { case (name, schema) =>
         val dir = s"${in.store}/$name"
         val inferred = spark.read.parquet(dir)
         val declared = DedupStream.readOrEmpty(spark, dir, schema)
         val data = schema.fields.filterNot(_.name == "batch").toSeq
         val dataCols = data.map(f => col(f.name))
+        // every column is written as declared, except the vectors, which
+        // are written as float32 and read widened to double
+        val written = data.map(f => f.name ->
+          (if (name == "vectors" && f.name == "vec") ArrayType(FloatType) else f.dataType))
         assert(inferred.schema.fields.filterNot(_.name == "batch")
-          .map(f => f.name -> f.dataType).toSeq ===
-          data.map(f => f.name -> f.dataType),
+          .map(f => f.name -> f.dataType).toSeq === written,
           s"$when: $name slices are written as ${inferred.schema.simpleString}, " +
             s"declared ${schema.simpleString}")
         val empty = DedupStream.readOrEmpty(spark, s"${in.work}/absent_$name", schema)
         assert(empty.columns.toSeq === declared.columns.toSeq,
           s"$when: $name reads different columns absent and present")
         val d = declared.select(dataCols: _*)
-        val i = inferred.select(dataCols: _*)
+        val i = inferred.select(data.map(f => col(f.name).cast(f.dataType)): _*)
         assert(d.count() > 0, s"$when: $name is empty")
         assert(d.exceptAll(i).isEmpty && i.exceptAll(d).isEmpty,
           s"$when: $name rows differ between the declared and inferred reads")

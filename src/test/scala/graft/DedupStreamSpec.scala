@@ -387,14 +387,10 @@ class DedupStreamSpec extends AnyFunSuite with SparkSpec {
       "postings" -> Seq("doc_id", "band", "sig"),
       "docs" -> Seq("doc_id", "text"),
       "shpost" -> Seq("h", "doc_id"),
-      "docn" -> Seq("doc_id", "n_sh"),
       "segown" -> Seq("h", "owner"),
       "cleandocs" -> Seq("doc_id", "n_dropped", "cleaned_text"),
       "vectors" -> Seq("doc_id", "lang", "known_ratio", "vec"))
     val before = arts.map { case (n, cs) => n -> artifact(n, cs) }.toMap
-    val dfBefore = spark.read.parquet(s"$store/df")
-      .groupBy("h").agg(sum(col("cnt")).as("c")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
     val statsBefore = DedupStream.corpusStats(spark, store)
       .select(col("lang"), col("n_rows")).collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet
@@ -402,7 +398,7 @@ class DedupStreamSpec extends AnyFunSuite with SparkSpec {
     // stream is stopped (AvailableNow terminated), checkpoint
     // committed — the compaction precondition
     val files = DedupStream.compactStore(spark, store)
-    assert(files.keySet === (arts.map(_._1).toSet ++ Set("df", "stats")))
+    assert(files.keySet === (arts.map(_._1).toSet + "stats"))
     arts.foreach { case (n, cs) =>
       assert(artifact(n, cs) === before(n), s"$n changed under compaction")
       val slices = Files.list(Paths.get(s"$store/$n")).toArray.map(_.toString)
@@ -410,9 +406,6 @@ class DedupStreamSpec extends AnyFunSuite with SparkSpec {
       assert(slices.length === 1 && slices.head.endsWith("batch=-1"),
         s"$n not consolidated: ${slices.toSeq}")
     }
-    assert(spark.read.parquet(s"$store/df")
-      .groupBy("h").agg(sum(col("cnt")).as("c")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet === dfBefore)
     assert(DedupStream.corpusStats(spark, store)
       .select(col("lang"), col("n_rows")).collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet === statsBefore)
@@ -436,7 +429,7 @@ class DedupStreamSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("per-batch plan touches history only through the artifacts (no corpus rescan)") {
-    import org.apache.spark.sql.functions.{count => cnt, lit, sum => fsum, xxhash64}
+    import org.apache.spark.sql.functions.xxhash64
     val work = Files.createTempDirectory("graft_dstream_plan")
     val root = work.resolve("store").toString
     // toy artifacts standing in for accepted history: doc 10's REAL
@@ -454,10 +447,6 @@ class DedupStreamSpec extends AnyFunSuite with SparkSpec {
     val histHash = histSh
       .select(col("doc_id"), xxhash64(col("shingle")).as("h"))
     histHash.select("h", "doc_id").write.parquet(s"$root/shpost/batch=0")
-    histHash.groupBy("doc_id").agg(cnt(lit(1)).as("n_sh"))
-      .write.parquet(s"$root/docn/batch=0")
-    histHash.groupBy("h").agg(cnt(lit(1)).as("cnt"))
-      .write.parquet(s"$root/df/batch=0")
 
     // batch doc 11 is a verbatim dup of history doc 10 (every band
     // collides — the Jaccard channel); doc 12 is a 10-token excerpt
@@ -473,13 +462,10 @@ class DedupStreamSpec extends AnyFunSuite with SparkSpec {
       .select("doc_id", "band", "sig")
     val histDocs = spark.read.parquet(s"$root/docs").select("doc_id", "text")
     val histShpost = spark.read.parquet(s"$root/shpost").select("h", "doc_id")
-    val histDocn = spark.read.parquet(s"$root/docn").select("doc_id", "n_sh")
-    val histDf = spark.read.parquet(s"$root/df")
-      .groupBy("h").agg(fsum(col("cnt")).as("df"))
     // candidate generation itself must never read text: the postings
     // probe's scan carries no text column by construction
     val (drops, _, cand) = DedupStream.dropsOf(sh, bands, histBands, histDocs,
-      histShpost, histDocn, histDf)
+      histShpost)
     try {
       assert(!cand.columns.contains("text"))
       val physical = drops.queryExecution.executedPlan.toString
@@ -495,7 +481,7 @@ class DedupStreamSpec extends AnyFunSuite with SparkSpec {
       assert(physical.contains("LeftSemi"),
         s"docs read is not semi-join-pruned:\n$physical")
       // and NOTHING in the per-batch plan rescans the corpus source:
-      // every file relation is one of the five maintained artifacts
+      // every file relation is one of the three maintained artifacts
       val rels = drops.queryExecution.analyzed.collect {
         case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
           r.relation match {
@@ -506,7 +492,7 @@ class DedupStreamSpec extends AnyFunSuite with SparkSpec {
       }
       assert(rels.nonEmpty, "expected the docs artifact in the verify plan")
       assert(rels.forall(p => p.contains("/docs") || p.contains("/postings") ||
-        p.contains("/shpost") || p.contains("/docn") || p.contains("/df")),
+        p.contains("/shpost")),
         s"unexpected non-artifact scan in the per-batch plan: $rels")
       // the verdict itself: history doc 10 is canonical; the verbatim
       // dup drops via the Jaccard channel AND the banding-invisible
@@ -581,7 +567,7 @@ class DedupStreamSpec extends AnyFunSuite with SparkSpec {
       assert(t.getLong(3) ===
         spark.read.parquet(s"$store/segown").count())
       assert(t.getLong(4) ===
-        spark.read.parquet(s"$store/df").select("h").distinct().count())
+        spark.read.parquet(s"$store/shpost").select("h").distinct().count())
     } finally { acceptedLang.unpersist(); () }
   }
 

@@ -13,6 +13,10 @@ object SparkSpec {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
+      // AQE builds each re-planned query's full plan string for its
+      // update event; uncapped, Pipeline.run's strings exhaust a 4 GiB
+      // heap (DedupStreamBatchSpec bounds plan strings far below this)
+      .config("spark.sql.maxPlanStringLength", "1000000")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
       .config("spark.ui.enabled", "false")

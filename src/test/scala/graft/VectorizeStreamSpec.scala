@@ -35,14 +35,17 @@ class VectorizeStreamSpec extends AnyFunSuite with SparkSpec {
 
     // values match the oracle-checked batch core (q32 is its
     // hash-verified projection): per-doc lang, known_ratio and l2 norm
-    // rounded with the same floor-formula the queries use
+    // rounded with the same floor-formula the queries use; the stored
+    // float32 vectors widen exactly to the double arrays VecMath takes
     def r6(c: org.apache.spark.sql.Column) = floor(c * 1e6 + lit(0.5)) / 1e6
-    def keyed(df: org.apache.spark.sql.DataFrame) = df.select(col("doc_id"),
-      col("lang"), r6(col("known_ratio")).as("kr"),
-      r6(sqrt(graft.functions.VecMath.dot(col("vec"), col("vec")))).as("nrm"))
-      .collect()
-      .map(r => r.getLong(0) -> (r.getString(1), r.getDouble(2), Option(r.get(3))))
-      .toMap
+    def keyed(df: org.apache.spark.sql.DataFrame) = {
+      val v = col("vec").cast("array<double>")
+      df.select(col("doc_id"), col("lang"), r6(col("known_ratio")).as("kr"),
+        r6(sqrt(graft.functions.VecMath.dot(v, v))).as("nrm"))
+        .collect()
+        .map(r => r.getLong(0) -> (r.getString(1), r.getDouble(2), Option(r.get(3))))
+        .toMap
+    }
     val s = keyed(streamed)
     val b = keyed(graft.streaming.DedupStream.storeVectorRows(batch))
     assert(s === b)
@@ -181,7 +184,9 @@ class VectorizeStreamSpec extends AnyFunSuite with SparkSpec {
     val rows = VectorizeStream.readStore(spark, store)
       .select("doc_id", "known_ratio", "vec")
       .as[(Long, Double, Option[Seq[Double]])].collect().sortBy(_._1).toSeq
-    assert(rows === Seq((1L, 2.0 / 3, Some(Seq(1.0 / 3, 4.0 / 3))), (2L, 0.0, None)))
+    // the vector is stored as float32, the known ratio as computed
+    assert(rows === Seq((1L, 2.0 / 3, Some(Seq((1.0 / 3).toFloat.toDouble,
+      (4.0 / 3).toFloat.toDouble))), (2L, 0.0, None)))
     assert(graft.streaming.DedupStream.storeVectors(spark, work.toString)
       .select("vec_id").as[Long].collect().toSeq === Seq(1L))
   }
