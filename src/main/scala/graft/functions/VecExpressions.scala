@@ -1,13 +1,16 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types._
 
 /** Native Catalyst dot product over two `array<double>` columns.
+  * A float array (a stored `vectors` slice read as written, or a
+  * snapshot's `vectors` table) is cast to `array<double>` at analysis,
+  * which widens each element exactly; a double array plans no cast.
   *
   * The HOF formulation `aggregate(zip_with(a,b,*), 0, +)` allocates an
   * intermediate array and evaluates a lambda per element; this
@@ -17,7 +20,9 @@ import org.apache.spark.sql.types._
   * order, matching the HOF and SQL-oracle semantics.
   */
 case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ImplicitCastInputTypes {
+  override def inputTypes: Seq[ArrayType] =
+    Seq(ArrayType(DoubleType), ArrayType(DoubleType))
   override def dataType: DataType = DoubleType
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]

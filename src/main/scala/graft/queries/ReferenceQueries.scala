@@ -123,11 +123,13 @@ object ReferenceQueries {
     * instead ([[onePartitionIfSmall]]): [[idfCounts]], whose aggregate
     * keys by token, and [[docVectorsOf]].
     *
-    * An input whose physical plan already reports `SinglePartition` is
-    * returned unchanged: that is a frame declared small enough to sit
-    * in one partition (a `DedupStream` batch frame under its pin's
-    * size rule), and re-spreading it by `doc_id` would only add a
-    * shuffle that AQE coalesces straight back into one partition.
+    * An input whose physical plan already reports `SinglePartition`
+    * (read inside the adaptive wrapper, which reports no partitioning
+    * before it runs) is returned unchanged: that is a frame declared
+    * small enough to sit in one partition (a `DedupStream` batch frame
+    * under its pin's size rule, or a `coalesce(1)` of a small history
+    * read), and re-spreading it by `doc_id` would only add a shuffle
+    * that AQE coalesces straight back into one partition.
     */
   private[graft] def parallelized(docs: DataFrame): DataFrame = {
     // a streaming frame has no physical plan of its own — and no
@@ -137,7 +139,10 @@ object ReferenceQueries {
     // docTokens -> here).
     if (docs.isStreaming) return docs
     val target = docs.sparkSession.sparkContext.defaultParallelism
-    val planned = docs.queryExecution.executedPlan
+    val planned = docs.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
     if (planned.outputPartitioning == SinglePartition ||
         plannedPartitions(planned).exists(_ >= target / 2)) docs
     else docs.repartition(col("doc_id"))

@@ -128,3 +128,138 @@ object CastShim {
   def invalidFloat(s: UTF8String): Throwable =
     QueryExecutionErrors.invalidInputInCastToNumberError(FloatType, s, null)
 }
+
+/** Plans an equi-join over one-partition frames as a hash join inside
+  * that one task: no exchange and no broadcast.
+  *
+  * A one-partition frame is a `LogicalRDD` that reports
+  * `SinglePartition` (a small `DedupStream` pin), a `coalesce(1)`, a
+  * projection, filter, aggregate, window or generator over one, or a
+  * join this rule plans. The rule plans a join
+  *   - whose two sides are one-partition frames, or
+  *   - that sits right under a `coalesce(1)`, when the side it hashes
+  *     is a one-partition frame small enough to broadcast. The other
+  *     side already runs in the coalesced task, and so does every join
+  *     below it that the optimizer pushed under the `coalesce(1)` (it
+  *     pushes semi and anti joins through one): the coalesce is
+  *     planned again over each side, so such a join below is planned
+  *     here too.
+  *
+  * Spark's own planner broadcasts one side of such a join, a job of
+  * its own that moves rows that are, or could be, in the same single
+  * task. When it shuffles instead, it keeps two `SinglePartition`
+  * sides exchange-free only while each side's size estimate is at
+  * most `spark.sql.maxSinglePartitionBytes`, and an inner join's
+  * estimate is the product of its inputs', so a join over a join
+  * shuffles both sides again.
+  *
+  * The join is Spark's `ShuffledHashJoinExec` with no distribution
+  * requirement (its `isSkewJoin` form: the children's partitioning is
+  * arranged here, not by an exchange, so plans print it as
+  * `ShuffledHashJoin(skew=true)`). Each side is coalesced to one
+  * partition, which starts no job, so a side misjudged as one
+  * partition still meets every row of the other in the one task; the
+  * output is coalesced to one partition too, so the operators above
+  * see `SinglePartition`. A join with no equi-key, a full outer or
+  * existence join, a streaming join and any other join keep Spark's
+  * planning.
+  */
+object OnePartitionJoin extends org.apache.spark.sql.execution.SparkStrategy {
+  import org.apache.spark.sql.SparkSession
+  import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight, BuildSide}
+  import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
+  import org.apache.spark.sql.catalyst.plans.{Inner, JoinType, LeftAnti, LeftOuter, LeftSemi, RightOuter}
+  import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, BROADCAST, Filter, Generate, HintInfo, Join, LogicalPlan, Project, Repartition, Window}
+  import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+  import org.apache.spark.sql.execution.{CoalesceExec, FilterExec, LogicalRDD, ProjectExec, SparkPlan}
+  import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
+  import org.apache.spark.sql.internal.SQLConf
+
+  /** Adds the rule to `spark`'s planner strategies, once. */
+  def install(spark: SparkSession): Unit = spark.experimental.synchronized {
+    if (!spark.experimental.extraStrategies.contains(this))
+      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ this
+  }
+
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case j: Join => buildSide(j).map(inPlace(j, _, coalesced = false)).toSeq
+    case Repartition(1, false, child) if joinUnderCoalesce(child) => child match {
+      case j: Join =>
+        Seq(inPlace(j, buildSide(j).orElse(coalescedBuildSide(j)).get, coalesced = true))
+      // the optimizer prunes columns and pushes filters below a
+      // coalesce: plan the coalesce below them, where the join is
+      case Project(projectList, c) =>
+        Seq(ProjectExec(projectList, planLater(Repartition(1, shuffle = false, c))))
+      case Filter(condition, c) =>
+        Seq(FilterExec(condition, planLater(Repartition(1, shuffle = false, c))))
+    }
+    case _ => Nil
+  }
+
+  /** Whether `p`, right under a `coalesce(1)`, is a join planned here,
+    * or a deterministic projection or filter over one (a
+    * nondeterministic one may read the partition it runs in).
+    */
+  private def joinUnderCoalesce(p: LogicalPlan): Boolean = p match {
+    case j: Join => buildSide(j).orElse(coalescedBuildSide(j)).isDefined
+    case Project(projectList, c) => projectList.forall(_.deterministic) && joinUnderCoalesce(c)
+    case Filter(condition, c) => condition.deterministic && joinUnderCoalesce(c)
+    case _ => false
+  }
+
+  /** `j` as a hash join in one task, over each side coalesced to one
+    * partition; under a `coalesce(1)`, each side is planned as that
+    * side's `coalesce(1)`, so a join below it is planned here too.
+    */
+  private def inPlace(j: Join, side: BuildSide, coalesced: Boolean): SparkPlan = {
+    val ExtractEquiJoinKeys(joinType, leftKeys, rightKeys, condition, _, left, right, _) = j
+    def child(p: LogicalPlan): SparkPlan =
+      if (coalesced) planLater(Repartition(1, shuffle = false, p)) else one(planLater(p))
+    one(ShuffledHashJoinExec(leftKeys, rightKeys, joinType, side, condition,
+      child(left), child(right), isSkewJoin = true))
+  }
+
+  /** The sides a hash join of `joinType` can build, the preferred first. */
+  private def sides(joinType: JoinType, left: LogicalPlan, right: LogicalPlan): Seq[BuildSide] =
+    joinType match {
+      case Inner =>
+        if (right.stats.sizeInBytes <= left.stats.sizeInBytes) Seq(BuildRight, BuildLeft)
+        else Seq(BuildLeft, BuildRight)
+      case LeftOuter | LeftSemi | LeftAnti => Seq(BuildRight)
+      case RightOuter => Seq(BuildLeft)
+      case _ => Nil
+    }
+
+  /** The side to hash when both sides of `j` are one-partition frames. */
+  private def buildSide(j: Join): Option[BuildSide] = j match {
+    case ExtractEquiJoinKeys(joinType, _, _, _, _, left, right, _) if !j.isStreaming =>
+      sides(joinType, left, right).headOption
+        .filter(_ => onePartition(left) && onePartition(right))
+    case _ => None
+  }
+
+  /** Under a `coalesce(1)`: the side to hash when it is a one-partition
+    * frame that Spark could broadcast, by size or by hint.
+    */
+  private def coalescedBuildSide(j: Join): Option[BuildSide] = j match {
+    case ExtractEquiJoinKeys(joinType, _, _, _, _, left, right, hint) if !j.isStreaming =>
+      def hinted(h: Option[HintInfo]) = h.exists(_.strategy.contains(BROADCAST))
+      sides(joinType, left, right).find { side =>
+        val (built, h) = if (side == BuildRight) (right, hint.rightHint) else (left, hint.leftHint)
+        onePartition(built) && (hinted(h) ||
+          built.stats.sizeInBytes <= SQLConf.get.autoBroadcastJoinThreshold)
+      }
+    case _ => None
+  }
+
+  private def one(p: SparkPlan): SparkPlan = CoalesceExec(1, p)
+
+  private def onePartition(p: LogicalPlan): Boolean = p match {
+    case r: LogicalRDD => r.outputPartitioning == SinglePartition
+    case Repartition(1, false, _) => true
+    case j: Join => buildSide(j).isDefined
+    case _: Project | _: Filter | _: Aggregate | _: Window | _: Generate =>
+      onePartition(p.children.head)
+    case _ => false
+  }
+}

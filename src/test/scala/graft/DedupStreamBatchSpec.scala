@@ -45,10 +45,13 @@ class DedupStreamBatchSpec extends AnyFunSuite with SparkSpec {
     */
   private val MaxPlanChars = 125000
 
-  /** Jobs per micro-batch at local[8] (the suite's session): 26 for
-    * the first batch (empty history) and 44 for the second (with
+  /** Jobs per micro-batch at local[8] (the suite's session): 14 for
+    * the first batch (empty history) and 14 for the second (with
     * history); the bounds add about 10% for run-to-run AQE re-planning.
-    * The batches launched 29 and 46 (bounds 32 and 51) while they
+    * The batches launched 26 and 44 (bounds 29 and 48) while every
+    * join between two pins, or between a pin and a small history read,
+    * broadcast one side in a job of its own (`OnePartitionJoin` now
+    * joins them in the one task they share); 29 and 46 while they
     * pinned the survivors' hashed shingles to write `docn` and `df`
     * slices beside `shpost`: counts the history reads now take over
     * `shpost` itself. The history batch launched 48 while it merged
@@ -62,8 +65,8 @@ class DedupStreamBatchSpec extends AnyFunSuite with SparkSpec {
     * the survivors anti-join broadcast its drops and the posting
     * redistribution was read off the plan, 58 and 79.
     */
-  private val MaxFirstBatchJobs = 29
-  private val MaxHistoryBatchJobs = 48
+  private val MaxFirstBatchJobs = 16
+  private val MaxHistoryBatchJobs = 16
 
   private def words(prefix: String, from: Int, until: Int): String =
     (from until until).map(i => s"$prefix$i").mkString(" ")

@@ -356,6 +356,18 @@ class PlanHygieneSpec extends AnyFunSuite with SparkSpec {
     } finally DedupStream.unpin(docs)
   }
 
+  test("parallelized returns a coalesce(1) over an adaptive plan untouched") {
+    // the adaptive wrapper reports no partitioning until it runs; the
+    // plan it wraps ends in the one partition the frame declares
+    val docs = spark.range(0, 400).toDF("doc_id")
+      .withColumn("text", concat(lit("w"), (col("doc_id") % 7).cast("string")))
+      .groupBy("doc_id").agg(max(col("text")).as("text"))
+      .coalesce(1)
+    val (out, jobs) = jobsDuring(ReferenceQueries.parallelized(docs))
+    assert(out eq docs, "parallelized re-spread a frame declared one partition")
+    assert(jobs.isEmpty, s"parallelized started ${jobs.size} jobs")
+  }
+
   /** Like [[executedOps]], but walking into each distinct session
     * cache's stored plan once, so the work a cached table did counts.
     */

@@ -44,4 +44,24 @@ class VecMathSpec extends AnyFunSuite with SparkSpec {
     assert(one(VecMath.dot(typedlit(Seq(1.0, 2.0, 3.0)),
       typedlit(Seq(10.0, 10.0)))) === 30.0)
   }
+
+  test("dot takes float arrays, bit for bit the dot of their double widening; doubles plan no cast") {
+    val rnd = new scala.util.Random(7)
+    val rows = Seq.fill(50)((Seq.fill(9)(rnd.nextFloat() * 4 - 2), Seq.fill(9)(rnd.nextFloat() - 0.5f)))
+    val df = rows.map { case (a, b) => (a, b, a.map(_.toDouble), b.map(_.toDouble)) }
+      .toDF("fa", "fb", "da", "db")
+    val got = df.select(VecMath.dot(col("fa"), col("fb")), VecMath.dot(col("da"), col("db")),
+        VecMath.dot(col("fa"), col("db")))
+      .as[(Double, Double, Double)].collect().toSeq
+    val expected = rows.map { case (a, b) =>
+      a.zip(b).foldLeft(0.0) { case (s, (x, y)) => s + x.toDouble * y.toDouble } }
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    assert(got.map(r => bits(r._1)) === expected.map(bits))
+    assert(got.map(r => bits(r._2)) === expected.map(bits))
+    assert(got.map(r => bits(r._3)) === expected.map(bits))
+    val doubles = df.select(VecMath.dot(col("da"), col("db")))
+    assert(doubles.queryExecution.analyzed.expressions.forall(_.collect {
+      case c: org.apache.spark.sql.catalyst.expressions.Cast => c }.isEmpty),
+      doubles.queryExecution.analyzed.toString)
+  }
 }

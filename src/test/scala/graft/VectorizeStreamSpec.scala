@@ -35,11 +35,12 @@ class VectorizeStreamSpec extends AnyFunSuite with SparkSpec {
 
     // values match the oracle-checked batch core (q32 is its
     // hash-verified projection): per-doc lang, known_ratio and l2 norm
-    // rounded with the same floor-formula the queries use; the stored
-    // float32 vectors widen exactly to the double arrays VecMath takes
+    // rounded with the same floor-formula the queries use; VecMath.dot
+    // takes the stored vectors as read (widened to double) and
+    // storeVectorRows' float32 output alike
     def r6(c: org.apache.spark.sql.Column) = floor(c * 1e6 + lit(0.5)) / 1e6
     def keyed(df: org.apache.spark.sql.DataFrame) = {
-      val v = col("vec").cast("array<double>")
+      val v = col("vec")
       df.select(col("doc_id"), col("lang"), r6(col("known_ratio")).as("kr"),
         r6(sqrt(graft.functions.VecMath.dot(v, v))).as("nrm"))
         .collect()
