@@ -1,21 +1,41 @@
 package graft
 
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Every declared query must run at sf0.001; core queries must be
   * non-empty (the candidate-pair dedup queries may legitimately be
   * empty at tiny scale, so they only assert execution).
+  *
+  * Each query's [[PlanCensus]] is recorded as it is built, and the
+  * census of all of them must equal the committed `plans/census.txt`:
+  * a change that moves any declared query's plan shows up here, and
+  * updates that file (`target/census.txt` is the computed copy).
   */
-class QueriesSmokeSpec extends AnyFunSuite with SparkSpec {
+class QueriesSmokeSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll {
 
   private val mayBeEmpty = Set("x02_dedup_minhash", "x04_ngram_jaccard",
     "x14_embedding_dup", "x46_ml_lsh_dedup", "x60_incremental_dedup")
+
+  private val census = scala.collection.concurrent.TrieMap.empty[String, PlanCensus]
+
+  /** The queries start from no session cache, so the census reads the
+    * same alone and after other suites: a cache another suite built
+    * first changes the size estimates, and with them the plans, of the
+    * queries that read it.
+    */
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    Caches.clearAll()
+    spark.catalog.clearCache()
+  }
 
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"$name runs on sf0.001" +
       (if (mayBeEmpty(name)) "" else " with rows > 0")) {
       val df = fn(spark, sf)
       assert(df.schema.nonEmpty)
+      census(name) = PlanCensus.of(df)
       val n = df.count()
       if (!mayBeEmpty(name)) assert(n > 0, s"$name returned no rows")
     }
@@ -42,5 +62,21 @@ class QueriesSmokeSpec extends AnyFunSuite with SparkSpec {
     val undocumented = rowsOnly.filterNot(coverage.contains)
     assert(undocumented.isEmpty,
       s"rows-only queries missing a COVERAGE.md entry: $undocumented")
+  }
+
+  test("the plan census of every declared query equals plans/census.txt") {
+    val missing = SparkEntry.queries.keySet -- census.keySet
+    assert(missing.isEmpty, s"no census for queries that did not run: ${missing.toSeq.sorted}")
+    import java.nio.file.{Files, Paths}
+    val lines = PlanCensus.header +: census.toSeq.sortBy(_._1).map { case (q, c) => c.line(q) }
+    val computed = Paths.get("target/census.txt")
+    Files.createDirectories(computed.getParent)
+    Files.writeString(computed, lines.map(_ + "\n").mkString)
+    val committed = Paths.get("plans/census.txt")
+    val expected =
+      if (Files.exists(committed)) Files.readString(committed).split("\n").toSeq else Nil
+    val changed = lines.diff(expected) ++ expected.diff(lines).map("was: " + _)
+    assert(changed.isEmpty,
+      s"plans moved (copy $computed to $committed if intended):\n${changed.mkString("\n")}")
   }
 }
