@@ -16,8 +16,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * the cost. `TokenCount` is a single pass over the UTF8String's bytes
   * counting maximal `[A-Za-z0-9]` runs — no regex, no allocation, and
   * `doGenCode` keeps it inside whole-stage codegen. Measured (sf0.1,
-  * Scratch `tokencount`): 0.21 s vs 0.32 s warm and 0.37 s vs 4.6 s
-  * cold against the array form (the cold gap is regex/JIT machinery
+  * local[32], a summed count over the documents, cold then warm in one
+  * JVM): 0.21 s vs 0.32 s warm and 0.37 s vs 4.6 s cold against the
+  * array form (the cold gap is regex/JIT machinery
   * the byte loop never touches).
   *
   * The raw byte scan alone matches `size(tokens(text))` for ASCII and

@@ -11,11 +11,8 @@ import graft.functions.{BinaryToFloats, DotProduct, FloatsToBinary, FreqMergeAgg
 
 /** Config-time Catalyst integration: `--conf
   * spark.sql.extensions=graft.plans.GraftExtensions` gives every session
-  * the engine's native expressions as SQL functions, the codec
-  * round-trip elimination rule and the one-partition join strategy
-  * (`graftshim.OnePartitionJoin`, which `DedupStream` otherwise
-  * installs in the sessions it runs in) — no per-session register()
-  * call needed.
+  * the engine's native expressions as SQL functions plus the codec
+  * round-trip elimination rule — no per-session register() call needed.
   * (`GraftFunctions.register` remains the runtime-registration path for
   * sessions that already exist.)
   */
@@ -88,7 +85,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           graft.functions.ThetaExpressions.setEstimateBuilder(op))))
     }
     ext.injectOptimizerRule(_ => CodecRoundTripElimination)
-    ext.injectPlannerStrategy(_ => org.apache.spark.sql.graftshim.OnePartitionJoin)
   }
 }
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.{Tokenize, VecMath}
+import graft.plans.Partitioning.parallelized
 
 /** LLM-training-data pipeline operators beyond the reference surface
   * (BASELINE.json north-star): deduplication (exact / MinHash-LSH /
@@ -52,7 +53,7 @@ object ExtensionQueries {
     */
   private[graft] def docShingles(docs: DataFrame, n: Int = 3,
       persistShared: Boolean = true): DataFrame = {
-    val sh = ReferenceQueries.parallelized(docs)
+    val sh = parallelized(docs)
       .select(col("doc_id"), Tokenize.tokens(col("text")).as("toks"))
       .select(col("doc_id"),
         explode(array_distinct(Tokenize.shingles(col("toks"), n))).as("shingle"))
@@ -474,7 +475,7 @@ object ExtensionQueries {
     * cleandocs slices) segments exactly like the batch pass.
     */
   private[graft] def segmentsOf(docsIn: DataFrame, w: Int = SegW): DataFrame = {
-    val t = ReferenceQueries.parallelized(docsIn)
+    val t = parallelized(docsIn)
       .select(col("doc_id"), Tokenize.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) > 0)
     val nseg = ((size(col("toks")) + lit(w - 1)) / lit(w)).cast("int")
@@ -585,7 +586,7 @@ object ExtensionQueries {
   private def dupSpanFrames(
       spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
     val docs = Tables.documents(spark, sfDir)
-    val t = ReferenceQueries.parallelized(docs)
+    val t = parallelized(docs)
       .select(col("doc_id"), Tokenize.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= SpanW)
     val grams = t.select(col("doc_id"),
@@ -7072,10 +7073,13 @@ st AS (SELECT doc_id, count(*) AS n_tokens, avg(length(token)) AS avg_tok_len,
     * sliver. Driver-side actions: the eval count (sizes the filter)
     * and the merged filter bytes — both bounded metadata, never rows.
     *
-    * Choose by deployment, not local benchmarks: `Scratch bloom`
-    * measured single-JVM broadcast beating this shape at every
-    * locally feasible eval size (in-heap hash build, zero shipping vs
-    * a full shuffle of the eval side in the exact verify). The win
+    * Choose by deployment, not local benchmarks: an A/B at sf0.1 on
+    * local[32], with the eval grams inflated up to 11.7M by suffixed
+    * variants that never match, measured single-JVM broadcast beating
+    * this shape at every locally feasible eval size (2.35M grams:
+    * 0.9-2.0 s vs 2.3-6.2 s; 11.7M: 1.1-1.9 s vs 21-70 s; in-heap
+    * hash build, zero shipping vs a full shuffle of the eval side in
+    * the exact verify). The win
     * here is the per-executor memory ceiling and O(executors ×
     * relation) shipping that local mode cannot exhibit.
     */

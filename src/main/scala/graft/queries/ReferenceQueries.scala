@@ -1,18 +1,12 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.DynamicPruning
-import org.apache.spark.sql.catalyst.optimizer.BuildLeft
-import org.apache.spark.sql.catalyst.plans.physical.{SinglePartition, UnknownPartitioning}
-import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec, RDDScanExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.agg.VecAgg
 import graft.functions.{Tokenize, VecCodec, VecMath}
+import graft.plans.Partitioning.{onePartitionIfSmall, parallelized, plannedPartitions}
 
 /** The reference's operator surface (SURVEY.md §2) re-expressed as
   * idiomatic Spark queries, each with a DuckDB oracle.
@@ -87,148 +81,6 @@ object ReferenceQueries {
   }
 
   val SqlTokByLang: String = sqlTokByLangOf("text", "lang")
-
-  /** Small-input parallelism guard for the tokenize-heavy posting
-    * builders: a small-SF documents file is a single parquet ROW GROUP,
-    * so the scan — and the tokenization riding on it, the most
-    * expensive scalar step — lands on one task no matter how file
-    * splits are tuned (a row group is the minimum read unit). An input
-    * with fewer partitions than half the cores is redistributed; a
-    * warehouse-scale scan has thousands of splits, so the condition is
-    * false and NO shuffle is added. (Measured at sf0.1 on 4 cores, a
-    * (doc_id, token) count: 0.40-0.49 s hash-redistributed, 0.47-0.56 s
-    * round-robin over 4 partitions, 0.50-0.59 s on the one scan task;
-    * the regex tokenizer this guard was written for took 4.9 s on one
-    * task.)
-    *
-    * The count is read off the physical plan ([[plannedPartitions]]),
-    * never by running it: `.rdd.getNumPartitions` on an adaptive plan
-    * executes the plan's shuffle stages just to count, and the real
-    * query then runs them again.
-    *
-    * The redistribution hashes by `doc_id` with no fixed count, so AQE
-    * may coalesce it. Every caller tokenizes per document and keys
-    * what follows by `doc_id`; a `doc_id` distribution satisfies their
-    * doc-keyed aggregates and windows, and persisted postings carry it
-    * to their doc-keyed consumers. A fixed count would also keep one
-    * output file per partition downstream.
-    *
-    * That holds under AQE's coalescing floor too, where the
-    * redistribution is read back as one partition: the `doc_id`
-    * distribution it leaves is what the cached posting and its
-    * `docTokenCounts` rollup hand their consumers. Without it, eight
-    * of the rollup's nine consumers planned one to six more exchanges
-    * on every call at sf0.1. Two callers judge a small input first
-    * ([[fitsOnePartition]]) and read it as one declared partition
-    * instead ([[onePartitionIfSmall]]): [[idfCounts]], whose aggregate
-    * keys by token, and [[docVectorsOf]].
-    *
-    * An input whose physical plan already reports `SinglePartition`
-    * (read inside the adaptive wrapper, which reports no partitioning
-    * before it runs) is returned unchanged: that is a frame declared
-    * small enough to sit in one partition (a `DedupStream` batch frame
-    * under its pin's size rule, or a `coalesce(1)` of a small history
-    * read), and re-spreading it by `doc_id` would only add a shuffle
-    * that AQE coalesces straight back into one partition.
-    */
-  private[graft] def parallelized(docs: DataFrame): DataFrame = {
-    // a streaming frame has no physical plan of its own — and no
-    // single-row-group parquet problem either: micro-batch sources
-    // split by their own planning. Pass it through untouched (round-17
-    // ADVICE: QualityModel's streaming-gate form now routes through
-    // docTokens -> here).
-    if (docs.isStreaming) return docs
-    val target = docs.sparkSession.sparkContext.defaultParallelism
-    val planned = docs.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    if (planned.outputPartitioning == SinglePartition ||
-        plannedPartitions(planned).exists(_ >= target / 2)) docs
-    else docs.repartition(col("doc_id"))
-  }
-
-  /** Whether AQE would read a shuffle of the batch frame `docs` as one
-    * partition, judged from the optimizer's size estimate alone (no
-    * job runs): [[coalescesToOne]] of `sizeInBytes`. For a file scan
-    * the estimate is the files' bytes scaled to the projected columns.
-    * On 4 cores a `doc_id` redistribution of the documents wrote
-    * 90,172, 88,081 and 868,630 shuffle bytes at sf0.001, sf0.01 and
-    * sf0.1, each read back as ONE partition under the 1 MB default
-    * floor, while Spark's estimates for the (doc_id, text, lang) scans
-    * are 43,676, 43,366 and 396,378 bytes (65,515, 65,049 and 594,568
-    * for all five columns): compressed parquet reads about 2× smaller
-    * than the rows a shuffle writes, and text that compresses better
-    * reads smaller still. An input misjudged small is thus some
-    * multiple of the floor that AQE would have split into that many
-    * partitions, and its caller runs in ONE task what could have run
-    * on that many ([[onePartitionIfSmall]]): [[idfCounts]] its
-    * tokenize and (keys…, token) count, and [[idfOf]] over them its
-    * per-key window; [[docVectorsOf]] its tokenize, token count, tf
-    * window and vector sum.
-    * A plan Spark cannot size (an RDD leaf without statistics) reports
-    * `Long.MaxValue` and is judged large; a streaming frame is never
-    * judged small.
-    */
-  private[graft] def fitsOnePartition(docs: DataFrame): Boolean = !docs.isStreaming && {
-    val est = docs.queryExecution.optimizedPlan.stats.sizeInBytes
-    est.isValidLong && coalescesToOne(docs.sparkSession, est.toLong)
-  }
-
-  /** `docs` read as one declared partition (`coalesce(1)`) when it is
-    * small ([[fitsOnePartition]]), the one partition AQE would have
-    * coalesced a shuffle of it into; else [[parallelized]]. Operators
-    * above a small input then plan no exchange at all.
-    */
-  private def onePartitionIfSmall(docs: DataFrame): DataFrame =
-    if (fitsOnePartition(docs)) docs.coalesce(1) else parallelized(docs)
-
-  /** Whether AQE would read a shuffle that writes `bytes` as one
-    * partition: coalescing is on and it never splits below the minimum
-    * partition size. The size rule of [[fitsOnePartition]] and
-    * [[graft.streaming.DedupStream.pin]].
-    */
-  private[graft] def coalescesToOne(spark: SparkSession, bytes: Long): Boolean = {
-    val conf = spark.conf
-    conf.get("spark.sql.adaptive.enabled").toBoolean &&
-      conf.get("spark.sql.adaptive.coalescePartitions.enabled").toBoolean &&
-      bytes <= org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize"))
-  }
-
-  /** The number of partitions `p` will produce, read off the plan
-    * without executing it; None when the plan does not say (and
-    * [[parallelized]] then redistributes, [[idfOf]] takes its
-    * several-partition form). Leaves
-    * report the partitions of their input RDD, which is built (file
-    * splits listed, a checkpoint's blocks named) but never run. A
-    * shuffle reports its planned count: if AQE later coalesces it, the
-    * data is too small to be worth spreading, and a coalescable
-    * redistribution would be coalesced the same way. An adaptive plan
-    * that has already run reports its final, coalesced reads.
-    */
-  private def plannedPartitions(p: SparkPlan): Option[Int] = p match {
-    case a: AdaptiveSparkPlanExec => plannedPartitions(a.executedPlan)
-    case s: QueryStageExec => plannedPartitions(s.plan)
-    case m: InMemoryTableScanExec => plannedPartitions(m.relation.cachedPlan)
-    case s: FileSourceScanExec =>
-      // a dynamic-pruning filter is only known once its subquery runs
-      if (s.partitionFilters.exists(_.exists(_.isInstanceOf[DynamicPruning]))) None
-      else Some(s.inputRDD.getNumPartitions)
-    case r: RDDScanExec => Some(r.rdd.getNumPartitions)
-    case l: LocalTableScanExec => Some(l.inputRDD.getNumPartitions)
-    case _ => p.outputPartitioning match {
-      case _: UnknownPartitioning => p match {
-        case j: BroadcastHashJoinExec =>
-          plannedPartitions(if (j.buildSide == BuildLeft) j.right else j.left)
-        case _ => p.children match {
-          case Seq(child) => plannedPartitions(child)
-          case _ => None
-        }
-      }
-      case known => Some(known.numPartitions)
-    }
-  }
 
   /** The (doc_id, token) posting table — the shared working set of every
     * text query (tf, idf, vocab scan, simhash, lang-id, token stats…).
@@ -327,15 +179,15 @@ object ReferenceQueries {
     * aggregate into one of [[idfOf]]'s two branches only. Counts are
     * sums of per-post rows, so the counts of two disjoint corpora
     * summed by (keys…, token) are the counts of their union
-    * ([[summedCounts]]). A small `docs` is read as one declared
-    * partition ([[onePartitionIfSmall]]): the aggregate then plans no
+    * ([[summedCounts]]). A small `docs` is read as one partition
+    * ([[graft.plans.Partitioning]]): the aggregate then plans no
     * exchange, and [[idfOf]] over it none either.
     */
   private[graft] def idfCounts(docs: DataFrame, keys: Seq[String],
       tokens: Column, qualifies: Column): DataFrame = {
     val vocab = filter(coalesce(tokens, array().cast("array<string>")),
       t => length(t) >= 4)
-    onePartitionIfSmall(docs)
+    parallelized(onePartitionIfSmall(docs))
       .select(keys.map(col) ++ Seq(qualifies.as("q"),
         explode(concat(array(lit("")), vocab)).as("token")): _*)
       // the exploded element type is nullable, though no element is null
@@ -360,7 +212,7 @@ object ReferenceQueries {
     * qualifying post keeps every token at -1.
     *
     * Counts planned as one partition (read off the plan,
-    * [[plannedPartitions]]: a small [[idfCounts]]) take the figures
+    * [[graft.plans.Partitioning]]: a small [[idfCounts]]) take the figures
     * from one window over the keys, in the task that counted them: no
     * exchange and no broadcast. Counts of several partitions (a large
     * corpus, [[summedCounts]] of several deltas) take them from a
@@ -412,8 +264,8 @@ object ReferenceQueries {
     * all-zero vec, which a store writes as NULL (F12,
     * [[graft.streaming.DedupStream.storeVectorRows]]). The token count,
     * tf window and vector sum share one `doc_id` exchange, and plan
-    * none when `docs` is small: that input is read as one declared
-    * partition ([[onePartitionIfSmall]]). The scan, tokenize and all
+    * none when `docs` is small: that input is read as one partition
+    * ([[graft.plans.Partitioning]]). The scan, tokenize and all
     * three then run in one task; an input the estimate misjudges small
     * loses all its spread, not only the scan's.
     */
@@ -421,7 +273,7 @@ object ReferenceQueries {
       wordvecs: DataFrame, joinKeys: Seq[String], dim: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val docKeys = "doc_id" +: joinKeys.filterNot(_ == "token")
-    val counts = onePartitionIfSmall(docs)
+    val counts = parallelized(onePartitionIfSmall(docs))
       .select(docKeys.map(col) :+ explode(tokens).as("token"): _*)
       .groupBy(("doc_id" +: joinKeys).map(col): _*)
       .agg(count(lit(1)).as("cnt"))

@@ -6,8 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
-import org.apache.spark.sql.graftshim.OnePartitionJoin
-
+import graft.plans.Partitioning.{onePartitionIfSmall, pin, unpin}
 import graft.queries.{ExtensionQueries, ReferenceQueries}
 
 /** The always-on ingest the reference's worker actually is
@@ -65,17 +64,14 @@ import graft.queries.{ExtensionQueries, ReferenceQueries}
   *
   * A batch's frames are small, and its cost is the number of jobs it
   * launches, not the rows it moves. Every frame the batch reads more
-  * than once is [[pin]]ned, and a pin AQE would coalesce into one
-  * partition anyway is declared one partition: the doc-keyed
-  * aggregates and windows over it then plan no shuffle, so they run
-  * no shuffle-map job. A small history artifact is read as one
-  * partition too ([[onePartitionIfSmall]]), and a join between such
-  * frames runs in their one task ([[OnePartitionJoin]], which every
-  * batch installs in its sessions), where Spark would broadcast one
-  * side in a job of its own. Measured at local[8], the first batch of
-  * `DedupStreamBatchSpec` launches 14 jobs and its history batch 14
-  * (26 and 44 with a broadcast per join, 46 and 63-64 over plain
-  * checkpoints).
+  * than once is pinned, and the small history artifacts and unions
+  * are read through `onePartitionIfSmall`: both read a small frame as
+  * one partition, so the keyed operators over it and the joins
+  * between such frames run in their one task, with no shuffle-map job
+  * and no broadcast job ([[graft.plans.Partitioning]]). Measured at
+  * local[8], the first batch of `DedupStreamBatchSpec` launches 14
+  * jobs and its history batch 14 (26 and 44 with a broadcast per
+  * join, 46 and 63-64 over plain checkpoints).
   *
   * Exactly-once: checkpointed file-source offsets make each input
   * file process once per checkpoint lineage, and every per-batch write
@@ -252,9 +248,6 @@ object DedupStream {
       lexIndex: Boolean = false,
       evalGuard: Boolean = false,
       ruleBatteries: Boolean = false): Unit = {
-    // the history reads plan in `spark`, the batch's frames in its session
-    OnePartitionJoin.install(spark)
-    OnePartitionJoin.install(batch.sparkSession)
     // rule batteries FIRST (see start()): doc-intrinsic gate + rewrite
     // before any pairwise or history work spends time on the doc. The
     // Gopher verdict reads the RAW text (the Pipeline's step-1b
@@ -272,8 +265,8 @@ object DedupStream {
           .select("doc_id", "text", "lang")
       }
     // lineage-cut rule: every batch frame that more than one query
-    // reads is [[pin]]ned and released in the finally that closes
-    // its scope — never persisted (see pin for why)
+    // reads is pinned and released in the finally that closes its
+    // scope — never persisted (see Partitioning.pin for why)
     val batchDocs = pin(gated)
     try {
       val batchIds = batchDocs.select("doc_id")
@@ -333,8 +326,8 @@ object DedupStream {
           // dup losers: the published corpus is what later batches
           // dedup against, and a contaminated doc must not become
           // anyone's canonical. The gate branch follows the batch's
-          // lineage-cut rule (see [[pin]]): a batch frame that more
-          // than one query reads is pinned, never persisted. The dedup
+          // lineage-cut rule (see Partitioning.pin): a batch frame that
+          // more than one query reads is pinned, never persisted. The dedup
           // anti-join feeds both the 8-gram projection and the final
           // anti-join's left side, and contaminationWithBloom scans
           // sh8 twice (totals + bloom hits) — unpinned, the expensive
@@ -494,51 +487,6 @@ object DedupStream {
     } finally unpin(batchDocs)
   }
 
-  /** Lineage cut for a frame that lives only inside one micro-batch:
-    * an eager local checkpoint, so every downstream query plans
-    * against a `LogicalRDD` leaf. `persist()` would keep the full
-    * plan under an `InMemoryRelation`, and a cached plan prints its
-    * cached plans (AQE's final and initial plan each) — with the
-    * batch's frames built on one another, every query description
-    * repeated all the earlier ones, and Spark rebuilt that string at
-    * each execution start and AQE re-plan. Executor-local storage is
-    * enough here: a lost block fails the batch loudly, the stream
-    * replays it from its checkpointed offsets, and every slice write
-    * is an idempotent `batch=N` overwrite — the exactly-once argument
-    * of the object doc, so `Caches.iterCheckpoint`'s reliable mode is
-    * not needed.
-    *
-    * Size rule. In Spark 4.1 a checkpoint of an adaptive plan keeps no
-    * output partitioning (`CheckpointShim`), so every doc-keyed
-    * aggregate, window or join over a pinned frame would shuffle it
-    * again — and a batch's frames are small enough that AQE coalesces
-    * each such shuffle back into one partition. The pin's eager job
-    * also measures the bytes a shuffle of the frame would write. When
-    * the checkpoint sits in one partition and AQE would coalesce a
-    * shuffle of it into one partition anyway
-    * ([[ReferenceQueries.coalescesToOne]] of the measured bytes, the
-    * rule `fitsOnePartition` applies to an estimate), the frame is
-    * returned as ONE declared partition, and the planner adds no
-    * exchange for aggregates and windows over it, or for joins
-    * between two such frames. A larger frame, or one of several
-    * partitions (whose narrow work then stays spread over its tasks),
-    * keeps a plain checkpoint and its shuffles. The rows are the same
-    * either way.
-    *
-    * Release with [[unpin]] (`unpersist` is a silent no-op on a
-    * checkpoint); a pin that fails mid-batch leaves the earlier pins
-    * to the ContextCleaner, since the batch fails and replays anyway.
-    */
-  private[graft] def pin(df: DataFrame): DataFrame =
-    org.apache.spark.sql.graftshim.CheckpointShim.localCheckpoint(df)(
-      ReferenceQueries.coalescesToOne(df.sparkSession, _))
-
-  /** Release a [[pin]]ned frame's blocks; the frame is unusable after. */
-  private[graft] def unpin(df: DataFrame): Unit = {
-    org.apache.spark.sql.graftshim.CheckpointShim.releaseCheckpoint(df)
-    ()
-  }
-
   /** The per-batch dedup core — split out so the spec can pin both
     * its answer (equality with a batch replay of the x02 core under
     * the cross-measure verify) and its PLAN (history enters as the
@@ -552,7 +500,7 @@ object DedupStream {
     * (band, sig) so the probe co-locates without a shuffle — here it
     * is batch-appended, and while the band union and the verify's
     * shingle union are small they are read as one partition, so their
-    * joins with the batch's pins run in place ([[OnePartitionJoin]]).
+    * joins with the batch's pins run in place ([[graft.plans.Partitioning]]).
     *
     * History text enters ONLY through a left-semi join against the
     * candidate hist-id frame: the candidate set is O(batch ×
@@ -591,8 +539,8 @@ object DedupStream {
     * hard mode materializes the drops, soft mode the pairs. The
     * tagged candidate frame is scanned three times (historical-id
     * semi-join, pair verification, drop/pair attribution), so it is
-    * [[pin]]ned here behind a lineage cut and MUST be released by the
-    * caller through [[unpin]] once the drops and pairs are consumed —
+    * pinned here behind a lineage cut and MUST be released by the
+    * caller through `unpin` once the drops and pairs are consumed —
     * `cand.unpersist()` is a silent no-op on a checkpoint.
     */
   private[graft] def dropsOf(batchSh: DataFrame, batchBands: DataFrame,
@@ -1142,16 +1090,6 @@ object DedupStream {
       }
     }.toMap
   }
-
-  /** `df` as one declared partition (`coalesce(1)`) when it is small
-    * enough that AQE would read a shuffle of it as one
-    * ([[ReferenceQueries.fitsOnePartition]]): its joins with the
-    * batch's pins then run in their one task ([[OnePartitionJoin]]).
-    * A larger frame keeps its partitions. The history reads, the band
-    * union and the verify's shingle union go through it.
-    */
-  private def onePartitionIfSmall(df: DataFrame): DataFrame =
-    if (ReferenceQueries.fitsOnePartition(df)) df.coalesce(1) else df
 
   /** A store artifact as exactly `schema`'s columns: read with the
     * declared schema when present, so no footer-inference job runs,

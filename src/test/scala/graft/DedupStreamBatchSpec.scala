@@ -10,6 +10,7 @@ import org.apache.spark.sql.types.{ArrayType, FloatType}
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.plans.Partitioning
 import graft.streaming.{DedupStream, VectorizeStream}
 
 /** The always-on ingest end to end inside the default suite: two tiny
@@ -234,24 +235,24 @@ class DedupStreamBatchSpec extends AnyFunSuite with SparkSpec {
     import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
     val before = persistedRdds
     val rows = (0L until 100L).map(i => (i, s"w$i"))
-    val p = DedupStream.pin(rows.toDF("doc_id", "text").coalesce(1))
+    val p = Partitioning.pin(rows.toDF("doc_id", "text").coalesce(1))
     assert(p.queryExecution.executedPlan.outputPartitioning === SinglePartition)
     assert(p.as[(Long, String)].collect().sorted.toSeq === rows)
     // a pin of several partitions keeps them: its narrow work stays spread
-    val wide = DedupStream.pin(rows.toDF("doc_id", "text").repartition(4))
+    val wide = Partitioning.pin(rows.toDF("doc_id", "text").repartition(4))
     try {
       assert(wide.queryExecution.executedPlan.outputPartitioning !== SinglePartition)
       assert(wide.rdd.getNumPartitions === 4)
-    } finally DedupStream.unpin(wide)
+    } finally Partitioning.unpin(wide)
     val held = persistedRdds -- before
     assert(held.nonEmpty, "the pin persisted nothing")
     // an empty frame can plan no partition at all: it keeps the plain
     // checkpoint, which any join still plans against correctly
-    val empty = DedupStream.pin(rows.take(0).toDF("doc_id", "text"))
+    val empty = Partitioning.pin(rows.take(0).toDF("doc_id", "text"))
     try withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       assert(p.join(empty, Seq("doc_id")).count() === 0)
-    } finally DedupStream.unpin(empty)
-    DedupStream.unpin(p)
+    } finally Partitioning.unpin(empty)
+    Partitioning.unpin(p)
     assert(persistedRdds.intersect(held).isEmpty,
       s"unpin left the pin's RDDs ${held.mkString(", ")} persisted")
   }

@@ -507,7 +507,7 @@ class DedupStreamSpec extends AnyFunSuite with SparkSpec {
           "exercises the containment channel")
     } finally {
       // cand is a checkpoint: unpersist() would be a silent no-op
-      DedupStream.unpin(cand); bands.unpersist(); sh.unpersist()
+      graft.plans.Partitioning.unpin(cand); bands.unpersist(); sh.unpersist()
     }
   }
 

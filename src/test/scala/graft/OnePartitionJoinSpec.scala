@@ -1,12 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSessionExtensions}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftshim.{OnePartitionJoin, PlannerAccess}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.GraftExtensions
-import graft.streaming.DedupStream
+import graft.plans.Partitioning
+import graft.queries.ReferenceQueries
 
 /** `OnePartitionJoin`: an equi-join of two one-partition frames runs
   * as a hash join inside that one task, with no exchange and no
@@ -27,8 +27,8 @@ class OnePartitionJoinSpec extends AnyFunSuite with SparkSpec {
   private def right: DataFrame = rightRows.toDF("k", "r")
 
   private def pinned[T](df: DataFrame)(body: DataFrame => T): T = {
-    val p = DedupStream.pin(df.coalesce(1))
-    try body(p) finally DedupStream.unpin(p)
+    val p = Partitioning.pin(df.coalesce(1))
+    try body(p) finally Partitioning.unpin(p)
   }
 
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
@@ -82,12 +82,12 @@ class OnePartitionJoinSpec extends AnyFunSuite with SparkSpec {
 
   test("a several-partition side keeps the default plan; a side misjudged as one partition still joins right") {
     pinned(left) { l =>
-      val wide = DedupStream.pin(right.repartition(4))
+      val wide = Partitioning.pin(right.repartition(4))
       try {
         val df = l.join(wide, Seq("k"))
         assert(inPlace(df).isEmpty, executedOps(df).mkString("\n"))
         assert(rows(df) === rows(left.join(right, Seq("k"))))
-      } finally DedupStream.unpin(wide)
+      } finally Partitioning.unpin(wide)
       // four partitions declared as one: each child is coalesced to
       // one partition, so every left row still meets every right row
       val misjudged = PlannerAccess.declaredOnePartition(right.repartition(4, col("r")))
@@ -134,12 +134,28 @@ class OnePartitionJoinSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("installing the rule twice lists it once, and GraftExtensions registers it") {
+  test("installing the rule twice lists it once") {
     OnePartitionJoin.install(spark)
     OnePartitionJoin.install(spark)
     assert(spark.experimental.extraStrategies.count(_ == OnePartitionJoin) === 1)
-    val ext = new SparkSessionExtensions
-    new GraftExtensions().apply(ext)
-    assert(PlannerAccess.plannerStrategies(ext, spark).contains(OnePartitionJoin))
+  }
+
+  test("a fresh session plans q32 and a join of two pins in place, as the shared session does") {
+    val fresh = spark.newSession()
+    assert(!fresh.experimental.extraStrategies.contains(OnePartitionJoin))
+    def exchanges(df: DataFrame) = {
+      val c = PlanCensus.of(df)
+      (c.shuffles, c.broadcasts)
+    }
+    val q32 = ReferenceQueries.q32_multilang_vectors(fresh, sf)
+    assert(exchanges(q32) === (0 -> 0), q32.queryExecution.executedPlan.treeString)
+    val (l, r) = (Partitioning.pin(fresh.createDataFrame(leftRows).toDF("k", "l").coalesce(1)),
+      Partitioning.pin(fresh.createDataFrame(rightRows).toDF("k", "r").coalesce(1)))
+    try {
+      assert(l.sparkSession eq fresh)
+      val two = l.join(r, Seq("k"))
+      assert(exchanges(two) === (0 -> 0), two.queryExecution.executedPlan.treeString)
+      assert(rows(two) === rows(left.join(right, Seq("k"))))
+    } finally { Partitioning.unpin(l); Partitioning.unpin(r) }
   }
 }

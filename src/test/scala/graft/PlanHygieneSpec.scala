@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.Tokenize
+import graft.plans.Partitioning
 import graft.queries.{AnalyticsQueries, ReferenceQueries}
 
 /** Physical-plan assertions for the properties the 100 TB posture
@@ -132,7 +133,7 @@ class PlanHygieneSpec extends AnyFunSuite with SparkSpec {
     val docs = spark.range(0, 400).toDF("doc_id")
       .withColumn("text", concat(lit("w"), (col("doc_id") % 7).cast("string")))
       .groupBy("doc_id").agg(max(col("text")).as("text"))
-    val (out, jobs) = jobsDuring(ReferenceQueries.parallelized(docs))
+    val (out, jobs) = jobsDuring(Partitioning.parallelized(docs))
     assert(jobs.isEmpty, "parallelized executed its input")
     // the shuffle plans spark.sql.shuffle.partitions (8) partitions,
     // at least half the cores: no redistribution
@@ -149,7 +150,7 @@ class PlanHygieneSpec extends AnyFunSuite with SparkSpec {
       .toDF("doc_id", "text", "lang").write.parquet(in)
     val docs = spark.readStream
       .schema("doc_id LONG, text STRING, lang STRING").parquet(in)
-    assert(ReferenceQueries.parallelized(docs) eq docs)
+    assert(Partitioning.parallelized(docs) eq docs)
     val q = ReferenceQueries.docTokens(docs, persist = false).writeStream
       .format("memory").queryName("graft_doc_tokens_stream")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -264,10 +265,10 @@ class PlanHygieneSpec extends AnyFunSuite with SparkSpec {
         shuffles(j)
       }
       (shuffles(agg), joined)
-    } finally { graft.streaming.DedupStream.unpin(a); graft.streaming.DedupStream.unpin(b) }
+    } finally { Partitioning.unpin(a); Partitioning.unpin(b) }
   }
 
-  private val batchPin = graft.streaming.DedupStream.pin _
+  private val batchPin = Partitioning.pin _
   private val plainCheckpoint =
     (df: org.apache.spark.sql.DataFrame) => df.localCheckpoint(eager = true)
 
@@ -301,7 +302,7 @@ class PlanHygieneSpec extends AnyFunSuite with SparkSpec {
 
   test("idfCounts over a small file scan plans no exchange and sizes it without a job") {
     val (docs, _) = smallDocsAndDim()
-    val (small, jobs) = jobsDuring(ReferenceQueries.fitsOnePartition(docs))
+    val (small, jobs) = jobsDuring(Partitioning.fitsOnePartition(docs))
     assert(small, "a four-row scan was judged above the coalescing floor")
     assert(jobs.isEmpty, s"sizing the scan started ${jobs.size} jobs")
     val shuffles = shuffleOps(ReferenceQueries.idfCounts(docs, Seq("lang"),
@@ -314,7 +315,7 @@ class PlanHygieneSpec extends AnyFunSuite with SparkSpec {
     Seq("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "16b",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false").foreach { kv =>
       withConfs(kv) {
-        val (small, jobs) = jobsDuring(ReferenceQueries.fitsOnePartition(docs))
+        val (small, jobs) = jobsDuring(Partitioning.fitsOnePartition(docs))
         assert(!small && jobs.isEmpty, s"with $kv")
         val shuffles = shuffleOps(ReferenceQueries.idfCounts(docs, Seq("lang"),
           Tokenize.tokens(col("text")), lit(true)))
@@ -340,20 +341,19 @@ class PlanHygieneSpec extends AnyFunSuite with SparkSpec {
     // a frame that already reports one partition is still returned as is
     val one = docs.coalesce(1)
     assert(one.queryExecution.executedPlan.outputPartitioning === SinglePartition)
-    assert(ReferenceQueries.parallelized(one) eq one)
+    assert(Partitioning.parallelized(one) eq one)
   }
 
   test("parallelized returns a one-partition pin untouched and starts no job") {
     import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
-    import graft.streaming.DedupStream
     val docs = batchPin(spark.range(0, 50).toDF("doc_id")
       .withColumn("text", lit("alpha beta")).repartition(col("doc_id")))
     try {
       assert(docs.queryExecution.executedPlan.outputPartitioning === SinglePartition)
-      val (out, jobs) = jobsDuring(ReferenceQueries.parallelized(docs))
+      val (out, jobs) = jobsDuring(Partitioning.parallelized(docs))
       assert(out eq docs, "parallelized re-spread a one-partition frame")
       assert(jobs.isEmpty, s"parallelized started ${jobs.size} jobs")
-    } finally DedupStream.unpin(docs)
+    } finally Partitioning.unpin(docs)
   }
 
   test("parallelized returns a coalesce(1) over an adaptive plan untouched") {
@@ -363,7 +363,7 @@ class PlanHygieneSpec extends AnyFunSuite with SparkSpec {
       .withColumn("text", concat(lit("w"), (col("doc_id") % 7).cast("string")))
       .groupBy("doc_id").agg(max(col("text")).as("text"))
       .coalesce(1)
-    val (out, jobs) = jobsDuring(ReferenceQueries.parallelized(docs))
+    val (out, jobs) = jobsDuring(Partitioning.parallelized(docs))
     assert(out eq docs, "parallelized re-spread a frame declared one partition")
     assert(jobs.isEmpty, s"parallelized started ${jobs.size} jobs")
   }

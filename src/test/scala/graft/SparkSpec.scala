@@ -22,9 +22,6 @@ object SparkSpec {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    // planned from the start, so no suite's plans depend on whether a
-    // DedupStream batch (which installs it) ran before it
-    org.apache.spark.sql.graftshim.OnePartitionJoin.install(s)
     s
   }
 }

@@ -6,14 +6,39 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The ingest loops cut a batch frame's lineage through
-  * `DedupStream.pin` alone, so every batch frame gets the pin's size
-  * rule (a frame AQE would coalesce into one partition anyway is
-  * declared one partition, and its keyed aggregates stop shuffling). A
-  * `localCheckpoint(` anywhere under `streaming/` outside the body of a
-  * `def pin` is flagged.
+/** The one-partition policy has one owner, `graft.plans.Partitioning`.
+  * The ingest loops cut a batch frame's lineage through its `pin`
+  * alone, so every batch frame gets the pin's size rule (a frame AQE
+  * would coalesce into one partition anyway is declared one partition,
+  * and its keyed aggregates stop shuffling). A `localCheckpoint(`
+  * anywhere under `streaming/` or in the module outside the body of a
+  * `def pin` is flagged, and so is a definition of a size rule or an
+  * install of the join rule anywhere else under `src/main`.
   */
 class StreamingPinSpec extends AnyFunSuite {
+
+  private val owner = "graft/plans/Partitioning.scala"
+  private val policy =
+    """\bOnePartitionJoin\.install\(|\bdef (coalescesToOne|fitsOnePartition|onePartitionIfSmall|plannedPartitions)\b""".r
+
+  private def scalaSources(root: String): Map[String, String] = {
+    val dir = Paths.get(root)
+    assert(Files.isDirectory(dir), s"no sources at ${dir.toAbsolutePath}")
+    val files = Files.walk(dir)
+    try files.iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => p.toString -> Files.readString(p)).toMap
+    finally files.close()
+  }
+
+  /** `file:line` of every policy definition or join-rule install
+    * outside the module.
+    */
+  def policyOutsideOwner(sources: Map[String, String]): Seq[String] =
+    sources.toSeq.sortBy(_._1).filterNot(_._1.endsWith(owner)).flatMap { case (path, s) =>
+      s.split("\n", -1).toSeq.zipWithIndex.collect {
+        case (l, i) if policy.findFirstIn(l).isDefined => s"$path:${i + 1}"
+      }
+    }
 
   private val checkpointCall = """\blocalCheckpoint\(""".r
   private val pinDef = """^(\s*)(?:private(?:\[\w+\])?\s+)?def pin\b""".r
@@ -61,22 +86,38 @@ class StreamingPinSpec extends AnyFunSuite {
     assert(offenders(src) === Seq("a.scala:6", "b.scala:2", "b.scala:7"))
   }
 
-  test("streaming code checkpoints batch frames only through DedupStream.pin") {
-    val root = Paths.get("src/main/scala/graft/streaming")
-    assert(Files.isDirectory(root), s"no streaming sources at ${root.toAbsolutePath}")
-    val files = Files.walk(root)
-    val sources =
-      try files.iterator().asScala.filter(_.toString.endsWith(".scala"))
-        .map(p => p.toString -> Files.readString(p)).toMap
-      finally files.close()
-    val dedup = sources.collectFirst {
-      case (p, s) if p.endsWith("DedupStream.scala") => s
-    }.getOrElse(fail("no DedupStream.scala"))
-    assert(dedup.split("\n").exists(pinDef.findPrefixOf(_).isDefined),
-      "DedupStream.pin moved: update the scan")
-    assert(checkpointCall.findFirstIn(dedup).isDefined,
+  test("streaming code checkpoints batch frames only through Partitioning.pin") {
+    val sources = scalaSources("src/main/scala/graft/streaming") ++
+      scalaSources("src/main/scala/graft/plans").filter(_._1.endsWith(owner))
+    val module = sources.collectFirst { case (p, s) if p.endsWith(owner) => s }
+      .getOrElse(fail(s"no $owner"))
+    assert(module.split("\n").exists(pinDef.findPrefixOf(_).isDefined),
+      "Partitioning.pin moved: update the scan")
+    assert(checkpointCall.findFirstIn(module).isDefined,
       "the scan found no checkpoint to check")
     val hits = offenders(sources)
-    assert(hits.isEmpty, s"localCheckpoint outside DedupStream.pin: ${hits.mkString(", ")}")
+    assert(hits.isEmpty, s"localCheckpoint outside Partitioning.pin: ${hits.mkString(", ")}")
+  }
+
+  test("main sources define the one-partition policy and install its join rule only in Partitioning") {
+    val src = Map(
+      s"src/main/scala/$owner" -> """object Partitioning {
+                                    |  def fitsOnePartition(df: DataFrame) = true
+                                    |  def pin(df: DataFrame) = { OnePartitionJoin.install(df.sparkSession); df }
+                                    |}""".stripMargin,
+      "a.scala" -> """object A {
+                     |  private def onePartitionIfSmall(df: DataFrame) = df.coalesce(1)
+                     |  OnePartitionJoin.install(spark)
+                     |  val x = Partitioning.onePartitionIfSmall(df)
+                     |  private[graft] def coalescesToOne(s: SparkSession, b: Long) = true
+                     |  def plannedPartitionsOf(p: SparkPlan) = None
+                     |}""".stripMargin)
+    assert(policyOutsideOwner(src) === Seq("a.scala:2", "a.scala:3", "a.scala:5"))
+    val sources = scalaSources("src/main/scala")
+    val module = sources.collectFirst { case (p, s) if p.endsWith(owner) => s }
+      .getOrElse(fail(s"no $owner"))
+    assert(policy.findAllIn(module).size >= 5, "the scan found no policy to check")
+    val hits = policyOutsideOwner(sources)
+    assert(hits.isEmpty, s"one-partition policy outside $owner: ${hits.mkString(", ")}")
   }
 }

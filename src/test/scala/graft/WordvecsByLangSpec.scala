@@ -257,7 +257,7 @@ class WordvecsByLangSpec extends AnyFunSuite with SparkSpec {
     // one text repeated: the parquet estimate is far under the floor,
     // while a shuffle of the rows would carry at least the text bytes,
     // over it (the size rule misjudges such input; see
-    // ReferenceQueries.fitsOnePartition)
+    // Partitioning.fitsOnePartition)
     val text = ("lorem ipsum dolor sitam consectetur adipiscing elitus sedum " * 2).trim
     val dir = java.nio.file.Files.createTempDirectory("graft_compressible").toString
     spark.range(0, 12000).select(col("id").as("doc_id"), lit(text).as("text"),
@@ -269,7 +269,7 @@ class WordvecsByLangSpec extends AnyFunSuite with SparkSpec {
     val textBytes = docs.agg(sum(octet_length(col("text")))).head().getLong(0)
     assert(textBytes > floor, s"$textBytes text bytes under the $floor-byte floor")
     assert(docs.queryExecution.optimizedPlan.stats.sizeInBytes < floor)
-    assert(ReferenceQueries.fitsOnePartition(docs))
+    assert(graft.plans.Partitioning.fitsOnePartition(docs))
     // the IDF table: one window in one task, equal to the spread form
     val idf = idfForms(docs, Seq("lang"))
     assert(idf.map(_._2) === text.split(" ").distinct.filter(_.length >= 4).sorted.toSeq)

@@ -1,16 +1,12 @@
 package org.apache.spark.sql.graftshim
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
 import org.apache.spark.sql.classic
-import org.apache.spark.sql.execution.{LogicalRDD, SparkStrategy}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Test access to planner internals Spark keeps package-private. */
 object PlannerAccess {
-  /** The planner strategies `ext` injects into `spark`. */
-  def plannerStrategies(ext: SparkSessionExtensions, spark: SparkSession): Seq[SparkStrategy] =
-    ext.buildPlannerStrategies(spark.asInstanceOf[classic.SparkSession])
-
   /** `df`'s rows as a `LogicalRDD` that reports `SinglePartition`
     * whatever its partition count: a frame misjudged as one partition.
     */
